@@ -56,6 +56,12 @@ package object operators {
     *    lost block recomputes from the original scan like any other Spark
     *    failure.
     *
+    *  - The cached plan runs in the CALLER's session: persist does not fork
+    *    a cloned session, because GraftSession sets
+    *    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`. A
+    *    clone would bring its own executor class loader and recompile the
+    *    plan's generated code on every invocation.
+    *
     * The connected-components loop (Dedup.scala) keeps EAGER localCheckpoint
     * deliberately: there lineage TRUNCATION is the point (each iteration's
     * plan would otherwise nest all previous ones), and its fixpoint check
@@ -82,11 +88,17 @@ package object operators {
     * never evict the previous invocation's handle and repeated runs would
     * accumulate persisted blocks for the life of the session. A stable
     * query-scoped key keeps the invariant: at most one live working set per
-    * intermediate, every invocation recomputes. */
+    * intermediate, every invocation recomputes.
+    *
+    * Evict, persist and register happen in one atomic `compute` on the key,
+    * so two concurrent invocations of one query (statement-server clients)
+    * cannot both persist while one handle is overwritten and its blocks
+    * stranded: whichever runs second unpersists the first's handle. */
   def materialized(df: DataFrame, key: String): DataFrame = {
-    Option(liveHandles.remove(key)).foreach(_.unpersist(blocking = false))
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveHandles.put(key, df)
+    liveHandles.compute(key, (_, displaced) => {
+      if (displaced != null) displaced.unpersist(blocking = false)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    })
     df
   }
 
@@ -110,7 +122,14 @@ package object operators {
     * cache build + registry churn cost MORE than the duplicated tail
     * (match_recognize: cpu-flat, wall −10%; q1/q7/windows: wall −10..−25%)
     * — a same-JVM interleaved tool A/B had claimed the opposite and was
-    * JIT-order-biased; trust the bench-methodology numbers. */
+    * JIT-order-biased; trust the bench-methodology numbers.
+    *
+    * Side effect at CONSTRUCTION time, not execution time: building the
+    * frame persists it and evicts the previous frame built under `key`.
+    * Constructing a query twice before running the first therefore drops
+    * the first's cache (it recomputes, still correct), and a frame that is
+    * built but never run keeps its persisted entry registered until the
+    * next construction under the same key. */
   def sortedResult(df: DataFrame, key: String)(cols: org.apache.spark.sql.Column*): DataFrame =
     materialized(df, key).orderBy(cols: _*)
 

@@ -535,7 +535,11 @@ private[graft] object SqlFrontend {
 
   def renderExpr(e: Expr): String = e match {
     case Lit(sql) => sql
-    case TypedLit(tpe, v) => s"$tpe '$v'"
+    // tpe is the keyword plus, for INTERVAL, its unit ("INTERVAL DAY TO
+    // SECOND"); the value goes between them: INTERVAL '30' DAY
+    case TypedLit(tpe, v) =>
+      val (kw, unit) = tpe.span(_ != ' ')
+      s"$kw '$v'$unit"
     // LISTAGG → Spark's native listagg with WITHIN GROUP ordering (Spark
     // 4.1 ListAgg implements SupportsOrderingWithinGroup); ON OVERFLOW is
     // parsed but moot — Spark strings have no 1MB varchar ceiling

@@ -370,6 +370,18 @@ class DialectSpec extends SparkSpec {
       .collect()(0).getInt(0) == 4)
   }
 
+  test("interval literals render value before unit") {
+    // the unit rides in the typed literal's type; rendering it ahead of the
+    // value ("INTERVAL DAY '30'") is not SQL and failed to parse
+    val d = TrinoDialect.sql(spark, sfDir,
+      "SELECT DATE '2024-01-31' - INTERVAL '30' DAY AS d").collect()(0).get(0)
+    assert(d.toString == "2024-01-01", d)
+    val ts = TrinoDialect.sql(spark, sfDir,
+      "SELECT CAST(TIMESTAMP '2024-01-02 00:00:00' - INTERVAL '1 02:03:04' DAY TO SECOND" +
+        " AS VARCHAR) AS t").collect()(0).getString(0)
+    assert(ts == "2023-12-31 21:56:56", ts)
+  }
+
   test("FOR VERSION / TIMESTAMP AS OF time travel on front-door tables") {
     TrinoDialect.sql(spark, sfDir,
       "CREATE TABLE tt_spec AS SELECT n_nationkey AS k FROM nation WHERE n_regionkey = 0")

@@ -76,6 +76,31 @@ class TextKernelFusionSpec extends SparkSpec {
     second.unpersist(blocking = false)
   }
 
+  test("concurrent keyed materialized leaves exactly one cache entry for the key") {
+    // two statement-server clients running one query at once: evict, persist
+    // and register must be one step, or a displaced handle's blocks strand
+    val key = "fusion-spec.concurrent"
+    val frames = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until 2).map { t =>
+      new Thread(() =>
+        try (0 until 20).foreach { i =>
+          frames.add(operators.materialized(
+            Seq((t * 100 + i, "x")).toDF("id", "s").filter($"id" >= 0), key))
+        } catch { case e: Throwable => errors.add(e) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors)
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val live = frames.toArray(Array.empty[org.apache.spark.sql.DataFrame]).filter(df =>
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined)
+    assert(frames.size == 40)
+    assert(live.length == 1, s"${live.length} cache entries left for one key")
+    live.foreach(_.unpersist(blocking = false))
+  }
+
   test("q_text_contamination repeated invocations do not accumulate cache entries") {
     val a = operators.TextPipeline.q_text_contamination(spark, sfDir)
     a.collect()
