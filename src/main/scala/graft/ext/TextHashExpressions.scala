@@ -197,10 +197,11 @@ case class MinHashSignature(child: Expression, k: Int)
   * the distinct word-n-gram hashes AND the k-wide minhash signature in ONE
   * compiled pass over the token array.
   *
-  * Bit-identical to the legacy two-expression spelling
-  * `(WordNGramHashes(toks, n), MinHashSignature(shingles3(toks), k))` for
-  * null-free token arrays — which is every reachable input: `tokens()` is
-  * `split(lower(text), ' ')` and split never emits null elements. The legacy
+  * `sig` is bit-identical to `MinHashSignature(shingles3(toks), k)` for
+  * every input: windows join like concat_ws, skipping null tokens and their
+  * separators. `shs` hashes the same window strings, so it equals
+  * `WordNGramHashes(toks, n)` (which joins a null as an empty token) on
+  * null-free arrays — every array `tokens()` (`split`) produces. The legacy
   * spelling paid, per row: an interpreted `transform` + `concat_ws` +
   * `array_distinct` HOF chain materializing every shingle as a UTF8String
   * (shingles3 — HOF lambdas are CodegenFallback, evaluated node-by-node),
@@ -242,23 +243,23 @@ case class MinHashShinglesAndSig(child: Expression, n: Int, k: Int)
     var buf = new Array[Byte](256)
     val base = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 
-    // join toks[start, start+len) with ' ' into buf; null → empty, separators
-    // always written — joinTokens semantics (null-free inputs make this moot)
+    // join toks[start, start+len) with ' ' into buf, skipping null tokens
+    // AND their separators — concat_ws / array_join semantics, as shingles3
+    // spells the window
     def fill(start: Int, len: Int): Int = {
       var pos = 0
+      var wrote = false
       var j = 0
       while (j < len) {
-        if (j > 0) {
-          if (pos + 1 > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-          buf(pos) = ' '.toByte; pos += 1
-        }
         val t = toks.getUTF8String(start + j)
         if (t != null) {
           val tb = t.numBytes
-          if (pos + tb > buf.length)
-            buf = java.util.Arrays.copyOf(buf, math.max(pos + tb, buf.length * 2))
+          if (pos + tb + 1 > buf.length)
+            buf = java.util.Arrays.copyOf(buf, math.max(pos + tb + 1, buf.length * 2))
+          if (wrote) { buf(pos) = ' '.toByte; pos += 1 }
           t.writeToMemory(buf, base + pos)
           pos += tb
+          wrote = true
         }
         j += 1
       }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.types._
 
-import graft.sqlx.{SqlLexer, SqlParseException, TrinoDialect}
+import graft.sqlx.{SqlFrontend, SqlLexer, SqlParseException}
 
 /** Procedural SQL routine language — the reference's SQL/PSM control
   * statements inside `CREATE FUNCTION` bodies (reference grammar:
@@ -491,8 +491,8 @@ object RoutineLang {
       comp(body.toList ::: rest, env2, types, retDdl, cont)
     case RKernelCall(fn, id, varDdls, onHr, callerLabel, iterT, leaveT, carryT) :: rest =>
       // bind the helper's result struct ONCE via a one-element transform
-      // lambda (SQL has no LET; `transform(array(x), s -> body)[0]` is the
-      // standard spelling). Inside the lambda every variable re-binds to
+      // lambda (SQL has no LET; `element_at(transform(array(x), s -> body), 1)`
+      // is the standard spelling). Inside the lambda every variable re-binds to
       // the post-loop frame; a function-level RETURN taken inside the
       // inner loop (s.hr) propagates as this kernel's own return struct; a
       // cross-label ITERATE/LEAVE (s.tl) either resolves against the
@@ -520,8 +520,8 @@ object RoutineLang {
             s"IF($lam.tl = '$self', ${tmpl(leaveT)}, ${tmpl(carryT)}))"
         case None => tmpl(carryT)
       }
-      Some(s"transform(array($fn(named_struct($callArgs))), $lam -> " +
-        s"IF($lam.hr, $hrSql, IF($lam.tl IS NULL, $restSql, $labelSql)))[0]")
+      Some(s"element_at(transform(array($fn(named_struct($callArgs))), $lam -> " +
+        s"IF($lam.hr, $hrSql, IF($lam.tl IS NULL, $restSql, $labelSql))), 1)")
     case (_: RIterate | _: RLeave | _: RLoop | _: RWhile | _: RRepeat |
           RCompound(Some(_), _, _)) :: _ =>
       throw new IllegalStateException("loop construct on the compiled path")
@@ -548,7 +548,7 @@ object RoutineLang {
 
   private def compileExpr(spark: SparkSession, vars: Seq[VarSlot],
       text: String, castTo: Option[String]): BoundExpr = {
-    val rewritten = TrinoDialect.rewrite(text)
+    val rewritten = SqlFrontend.lowerExprText(text)
     val wrapped = castTo.fold(rewritten)(t => s"CAST(($rewritten) AS $t)")
     val attrs: IndexedSeq[AttributeReference] = vars.map(v =>
       AttributeReference(v.name, v.tpe, nullable = true)()).toIndexedSeq
@@ -1172,7 +1172,7 @@ object RoutineLang {
           val sparkParams = params.map { case (n, t) => s"$n ${sparkTypeDdl(t)}" }
             .mkString(", ")
           spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name($sparkParams) " +
-            s"RETURNS ${sparkTypeDdl(retType)} RETURN ${TrinoDialect.rewrite(sql)}")
+            s"RETURNS ${sparkTypeDdl(retType)} RETURN ${SqlFrontend.lowerExprText(sql)}")
           tiers(name.toLowerCase) = "expression"
           return
         case None => // fall through to the interpreter on text blow-up

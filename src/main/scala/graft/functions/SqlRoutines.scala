@@ -181,7 +181,7 @@ object SqlRoutines {
       }
       require(tail.toUpperCase.startsWith("RETURN"),
         s"CREATE FUNCTION $name: expected RETURN <expr>, got '${tail.take(40)}'")
-      val body = graft.sqlx.TrinoDialect.rewrite(tail.substring("RETURN".length).trim)
+      val body = graft.sqlx.SqlFrontend.lowerExprText(tail.substring("RETURN".length).trim)
       val sparkParams = params.split(",").filter(_.trim.nonEmpty).map { p =>
         val parts = p.trim.split("\\s+", 2)
         require(parts.length == 2, s"CREATE FUNCTION $name: parameter '$p' needs <name> <type>")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and the built-in sequence TVF operator/table/SequenceFunction.java:58).
   *
   * A TVF takes (session, fixture dir, literal args) and returns a DataFrame;
-  * users register their own beside the built-ins. The Trino-dialect layer
-  * (graft.sqlx.TrinoDialect) resolves `FROM TABLE(name(args...))` text against
+  * users register their own beside the built-ins. The SQL front door
+  * (graft.sqlx.SqlFrontend) resolves `FROM TABLE(name(args...))` against
   * this registry, so registered functions are reachable from SQL text as well
   * as from the Scala API.
   */

@@ -64,9 +64,9 @@ object TextFunctions {
     column(MinHashSignature(expression(shingleCol), k))
 
   /** struct(shs, sig): distinct word-3-gram hashes + k-wide minhash signature
-    * in one compiled pass — bit-identical to
-    * (shingleHashes3(toks), minhashSignature(shingles3(toks), k)) for
-    * null-free token arrays (split() output), without the interpreted
+    * in one compiled pass — `sig` is bit-identical to
+    * minhashSignature(shingles3(toks), k) for every token array, `shs` to
+    * shingleHashes3(toks) for null-free ones (split() output), without the interpreted
     * shingles3 HOF chain or the duplicate string hashing
     * (ext.MinHashShinglesAndSig scaladoc has the equality argument). */
   def minhashShinglesSig(toks: Column, k: Int): Column =

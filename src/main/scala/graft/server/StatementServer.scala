@@ -740,6 +740,7 @@ object StatementServer {
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
           val errName = e match {
             case _: graft.sqlx.AccessDeniedException => "PERMISSION_DENIED"
+            case _: graft.sqlx.SqlParseException => "SYNTAX_ERROR"
             case _ => "GENERIC_INTERNAL_ERROR"
           }
           val wasCancelled = ref.get() == Cancelled ||

@@ -1,6 +1,6 @@
 package graft.sqlx
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, expr, row_number}
 
@@ -399,9 +399,6 @@ private[graft] object MatchRecognizeSql {
   }
 
   // -------------------------------------------------------------- lowering
-
-  def lower(spark: SparkSession, dir: String, mr: Mr): DataFrame =
-    lowerDf(graft.sources.Tables.load(spark, dir, mr.table), mr)
 
   /** Generalized lowering over ANY input relation (the parser front door
     * plans MATCH_RECOGNIZE inside subqueries by materializing the input

@@ -1,6 +1,6 @@
 package graft.sqlx
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, expr, row_number}
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -44,7 +44,11 @@ import graft.plans.RowPattern
   * O(rows × match length) NFA work per partition — the same bound as the
   * reference's per-row matcher loop.
   *
-  * Select items (r15): plain columns, declared measures `m OVER w [AS a]`,
+  * Entry: SqlParser keeps each pattern spec's raw body and parses the
+  * select list; SqlFrontend's planning pass hands both to [[plan]] and
+  * evaluates the result over the planned FROM relation with [[lowerDf]].
+  *
+  * Select items (r15): plain expressions, declared measures `m OVER w [AS a]`,
   * and WINDOW FUNCTION calls over a pattern window `fn(args) OVER w` —
   * per the reference, a window function over a pattern window evaluates
   * over the frame limited to the matched row sequence (empty frame → NULL
@@ -69,8 +73,10 @@ import graft.plans.RowPattern
   */
 private[graft] object MatchWindowSql {
 
-  /** Select item: a plain column, or a measure/window-function reference
-    * `name OVER w` (measure = internal measure name, window = w). */
+  /** Select item: Spark SQL `text` with its output `alias`; a measure
+    * reference `name OVER w` has `measure` = the measure name, and a
+    * window-function call `fn(args) OVER w` arrives with `text` = the call
+    * without its OVER, `measure` = None and `window` = w. */
   final case class Item(text: String, alias: String, measure: Option[String],
       window: Option[String])
 
@@ -81,50 +87,16 @@ private[graft] object MatchWindowSql {
       defines: Seq[(String, String)], subsets: Map[String, Seq[String]],
       frameK: Option[Int], seek: Boolean, skip: RowPattern.SkipMode)
 
-  /** Whole statement: items over one or more pattern windows plus any
+  /** Whole query block: items over one or more pattern windows plus any
     * number of PLAIN named windows (the reference treats pattern windows as
     * ordinary window specifications coexisting with plain ones —
     * pattern-recognition-in-window.md; SqlBase.g4 windowSpecification).
     * Pattern windows evaluate through the sequential matcher (one
     * exchange+sort each); plain windows lower through Spark's normal window
     * path by inlining their spec at the call site. `plainWindows` maps
-    * lowercase window name → raw spec block text. */
-  final case class Mw(table: String, items: Seq[Item], windows: Seq[Wspec],
+    * lowercase window name → rendered spec text. */
+  final case class Mw(items: Seq[Item], windows: Seq[Wspec],
       plainWindows: Map[String, String])
-
-  private val Outer =
-    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+WINDOW\s+(.*?)\s*""".r
-
-  /** `w1 AS ( … ), w2 AS ( … )` → (name, block) pairs. Paren depth is
-    * counted OUTSIDE single-quoted literals, so a quoted paren (e.g.
-    * `DEFINE D AS regexp_like(x, '(')`) neither mis-splits nor rejects the
-    * clause. */
-  private def splitWindows(text: String): Seq[(String, String)] = {
-    val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    var rest = text.trim
-    val Head = "(?is)^(\\w+)\\s+AS\\s*\\(".r
-    while (rest.nonEmpty) {
-      val m = Head.findFirstMatchIn(rest).getOrElse(
-        fail(s"expected '<name> AS (…)' in WINDOW clause, got '${rest.take(40)}'"))
-      var depth = 1
-      var i = m.end
-      var q = false
-      while (depth > 0) {
-        if (i >= rest.length) fail("unbalanced parens in WINDOW clause")
-        val c = rest.charAt(i)
-        if (q) { if (c == '\'') q = false }
-        else if (c == '\'') q = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        i += 1
-      }
-      out += ((m.group(1), rest.substring(m.end, i - 1)))
-      rest = rest.substring(i).trim
-      if (rest.startsWith(",")) rest = rest.substring(1).trim
-      else if (rest.nonEmpty) fail(s"trailing text after WINDOW entry: '${rest.take(40)}'")
-    }
-    out.toSeq
-  }
 
   private val windowKeywords = Seq(
     "PARTITION BY", "ORDER BY", "MEASURES", "ROWS BETWEEN", "AFTER MATCH",
@@ -133,136 +105,103 @@ private[graft] object MatchWindowSql {
   private def fail(what: String): Nothing =
     throw new IllegalArgumentException(s"row-pattern window: $what")
 
-  def parse(text: String): Option[Mw] = text match {
-    case Outer(itemsText, table, windowsText) =>
-      val entries = splitWindows(windowsText)
-      val withClauses = entries.map { case (n, block) =>
-        (n, block, MatchRecognizeSql.clauses(block, windowKeywords))
-      }
-      // pattern-bearing specs lower through the sequential matcher; PLAIN
-      // named windows coexist (reference semantics) and lower through
-      // Spark's window path. A statement whose windows are ALL plain is
-      // outside this production (Spark SQL handles it natively).
-      val (patterned, plainEntries) =
-        withClauses.partition(_._3.exists(_._1 == "PATTERN"))
-      if (patterned.isEmpty) return None
-      val declared = patterned.map(_._1.toLowerCase).toSet
-      val plainBlocks = plainEntries.map(e => e._1.toLowerCase -> e._2).toMap
+  /** Resolve a query block's select items against its pattern windows
+    * (`patterned`: name → raw spec body, as SqlParser captured it) and
+    * plain named windows, and parse each pattern window's clauses. */
+  def plan(items: Seq[Item], patterned: Seq[(String, String)],
+      plainWindows: Map[String, String]): Mw = {
+    val declared = patterned.map(_._1.toLowerCase).toSet
 
-      // select items: plain column | <measure> OVER w | <fn>(args) OVER w
-      // (a window function over a pattern window evaluates over the frame
-      // limited to the matched rows — reference pattern-recognition-in-
-      // window.md "upon a window function call over the window"; lowered
-      // here as a SYNTHESIZED measure on that window. Over a PLAIN window
-      // it stays a regular Spark window function call.)
-      val synth = scala.collection.mutable.Map[String, Seq[(String, String)]]()
-        .withDefaultValue(Seq.empty)
-      var synthId = 0
-      val parsedItems = MatchRecognizeSql.splitTop(itemsText).map { it =>
-        val fnOver =
-          "(?is)^(\\w+)\\s*\\((.*)\\)\\s+OVER\\s+(\\w+)(?:\\s+AS\\s+(\\w+))?$".r
-        val overRe = "(?is)^(\\w+)\\s+OVER\\s+(\\w+)(?:\\s+AS\\s+(\\w+))?$".r
-        fnOver.findFirstMatchIn(it) match {
-          case Some(m) =>
-            val wRef = m.group(3).toLowerCase
-            if (plainBlocks.contains(wRef))
-              Item(s"${m.group(1)}(${m.group(2)})",
-                Option(m.group(4)).getOrElse(m.group(1)), None, Some(wRef))
-            else if (declared.contains(wRef)) {
-              val name = s"__wf$synthId"; synthId += 1
-              synth(wRef) = synth(wRef) :+ ((s"${m.group(1)}(${m.group(2)})", name))
-              Item(name, Option(m.group(4)).getOrElse(m.group(1)), Some(name),
-                Some(wRef))
-            } else fail(s"unknown window '${m.group(3)}' (declared: " +
-              s"${(declared ++ plainBlocks.keySet).mkString(", ")})")
-          case None => overRe.findFirstMatchIn(it) match {
-            case Some(m) =>
-              val wRef = m.group(2).toLowerCase
-              if (!declared.contains(wRef))
-                fail(s"unknown pattern window '${m.group(2)}' for measure " +
-                  s"'${m.group(1)}' (pattern windows: ${declared.mkString(", ")})")
-              Item(m.group(1), Option(m.group(3)).getOrElse(m.group(1)),
-                Some(m.group(1)), Some(wRef))
-            case None =>
-              val plain = "(?is)^(\\w+)(?:\\s+AS\\s+(\\w+))?$".r.findFirstMatchIn(it)
-                .getOrElse(fail(s"select item '$it' (plain column, <measure> OVER w, or fn(args) OVER w)"))
-              Item(plain.group(1), Option(plain.group(2)).getOrElse(plain.group(1)),
-                None, None)
+    // a window function over a pattern window evaluates over the frame
+    // limited to the matched rows (reference pattern-recognition-in-
+    // window.md "upon a window function call over the window"); lowered
+    // here as a SYNTHESIZED measure on that window. Over a PLAIN window it
+    // stays a regular Spark window function call.
+    val synth = scala.collection.mutable.Map[String, Seq[(String, String)]]()
+      .withDefaultValue(Seq.empty)
+    var synthId = 0
+    val resolved = items.map(it => it.copy(window = it.window.map(_.toLowerCase))).map {
+      case Item(call, alias, None, Some(w)) if declared(w) =>
+        val name = s"__wf$synthId"; synthId += 1
+        synth(w) = synth(w) :+ ((call, name))
+        Item(name, alias, Some(name), Some(w))
+      case Item(_, _, None, Some(w)) if !plainWindows.contains(w) =>
+        fail(s"unknown window '$w' (declared: " +
+          s"${(declared ++ plainWindows.keySet).mkString(", ")})")
+      case Item(_, _, Some(m), Some(w)) if !declared(w) =>
+        fail(s"unknown pattern window '$w' for measure '$m' " +
+          s"(pattern windows: ${declared.mkString(", ")})")
+      case it => it
+    }
+    // unaliased window-function items default their alias to the bare
+    // function name — two such calls (sum(a) OVER w, sum(b) OVER w) would
+    // collide into ambiguous output columns, so collisions fail loudly
+    // asking for AS aliases rather than producing duplicate names
+    val dup = resolved.groupBy(_.alias.toLowerCase).collectFirst {
+      case (a, is) if is.size > 1 => a
+    }
+    dup.foreach(a => fail(s"duplicate output column '$a' — " +
+      "alias each window-function select item with AS <name>"))
+
+    val windows = patterned.map { case (wName, block) =>
+      val cs = MatchRecognizeSql.clauses(block, windowKeywords)
+      def one(kw: String): Option[String] = cs.collectFirst { case (`kw`, c) => c }
+      val seek = cs.exists(_._1 == "SEEK")
+      // frame extent (SqlBase.g4:879 boundedFrame): the reference requires
+      // the frame start at CURRENT ROW; the end bounds the match search
+      val frameK: Option[Int] = one("ROWS BETWEEN") match {
+        case None => None // default: CURRENT ROW AND UNBOUNDED FOLLOWING
+        case Some(f) =>
+          val t = f.trim
+          if ("(?is)^CURRENT\\s+ROW\\s+AND\\s+UNBOUNDED\\s+FOLLOWING$".r
+              .findFirstIn(t).isDefined) None
+          else if ("(?is)^CURRENT\\s+ROW\\s+AND\\s+CURRENT\\s+ROW$".r
+              .findFirstIn(t).isDefined) Some(0)
+          else "(?is)^CURRENT\\s+ROW\\s+AND\\s+(\\d+)\\s+FOLLOWING$".r
+            .findFirstMatchIn(t) match {
+            case Some(m) => Some(m.group(1).toInt)
+            case None => fail(
+              "frame must be ROWS BETWEEN CURRENT ROW AND " +
+                s"{CURRENT ROW | <n> FOLLOWING | UNBOUNDED FOLLOWING}, got '$t'")
           }
-        }
       }
-      // unaliased window-function items default their alias to the bare
-      // function name — two such calls (sum(a) OVER w, sum(b) OVER w) would
-      // collide into ambiguous output columns, so collisions fail loudly
-      // asking for AS aliases rather than producing duplicate names
-      val dup = parsedItems.groupBy(_.alias.toLowerCase).collectFirst {
-        case (a, is) if is.size > 1 => a
+      val partition = MatchRecognizeSql.identList(
+        one("PARTITION BY").getOrElse(fail("PARTITION BY <cols>")), "PARTITION BY")
+      val order = MatchRecognizeSql.identList(
+        one("ORDER BY").getOrElse(fail("ORDER BY <cols>")), "ORDER BY")
+      val patternRaw = one("PATTERN").getOrElse(fail("PATTERN (...)")).trim
+      require(patternRaw.startsWith("(") && patternRaw.endsWith(")"),
+        s"PATTERN must be parenthesized, got '$patternRaw'")
+      val subsets = one("SUBSET").map(MatchRecognizeSql.splitTop(_).map { d =>
+        val m = "(?is)^\\s*(\\w+)\\s*=\\s*\\(([^)]*)\\)\\s*$".r.findFirstMatchIn(d)
+          .getOrElse(fail(s"SUBSET entry '$d'"))
+        m.group(1) -> m.group(2).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+      }.toMap).getOrElse(Map.empty)
+      val defines = MatchRecognizeSql.splitTop(
+          one("DEFINE").getOrElse(fail("DEFINE ..."))).map { d =>
+        val m = "(?is)^\\s*(\\w+)\\s+AS\\s+(.*)$".r.findFirstMatchIn(d)
+          .getOrElse(fail(s"DEFINE entry '$d'"))
+        (m.group(1), m.group(2).trim)
       }
-      dup.foreach(a => fail(s"duplicate output column '$a' — " +
-        "alias each window-function select item with AS <name>"))
-
-      val windows = patterned.map { case (wName, _, cs) =>
-        def one(kw: String): Option[String] = cs.collectFirst { case (`kw`, c) => c }
-        val seek = cs.exists(_._1 == "SEEK")
-        // frame extent (SqlBase.g4:879 boundedFrame): the reference requires
-        // the frame start at CURRENT ROW; the end bounds the match search
-        val frameK: Option[Int] = one("ROWS BETWEEN") match {
-          case None => None // default: CURRENT ROW AND UNBOUNDED FOLLOWING
-          case Some(f) =>
-            val t = f.trim
-            if ("(?is)^CURRENT\\s+ROW\\s+AND\\s+UNBOUNDED\\s+FOLLOWING$".r
-                .findFirstIn(t).isDefined) None
-            else if ("(?is)^CURRENT\\s+ROW\\s+AND\\s+CURRENT\\s+ROW$".r
-                .findFirstIn(t).isDefined) Some(0)
-            else "(?is)^CURRENT\\s+ROW\\s+AND\\s+(\\d+)\\s+FOLLOWING$".r
-              .findFirstMatchIn(t) match {
-              case Some(m) => Some(m.group(1).toInt)
-              case None => fail(
-                "frame must be ROWS BETWEEN CURRENT ROW AND " +
-                  s"{CURRENT ROW | <n> FOLLOWING | UNBOUNDED FOLLOWING}, got '$t'")
-            }
-        }
-        val partition = MatchRecognizeSql.identList(
-          one("PARTITION BY").getOrElse(fail("PARTITION BY <cols>")), "PARTITION BY")
-        val order = MatchRecognizeSql.identList(
-          one("ORDER BY").getOrElse(fail("ORDER BY <cols>")), "ORDER BY")
-        val patternRaw = one("PATTERN").getOrElse(fail("PATTERN (...)")).trim
-        require(patternRaw.startsWith("(") && patternRaw.endsWith(")"),
-          s"PATTERN must be parenthesized, got '$patternRaw'")
-        val subsets = one("SUBSET").map(MatchRecognizeSql.splitTop(_).map { d =>
-          val m = "(?is)^\\s*(\\w+)\\s*=\\s*\\(([^)]*)\\)\\s*$".r.findFirstMatchIn(d)
-            .getOrElse(fail(s"SUBSET entry '$d'"))
-          m.group(1) -> m.group(2).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        }.toMap).getOrElse(Map.empty)
-        val defines = MatchRecognizeSql.splitTop(
-            one("DEFINE").getOrElse(fail("DEFINE ..."))).map { d =>
-          val m = "(?is)^\\s*(\\w+)\\s+AS\\s+(.*)$".r.findFirstMatchIn(d)
-            .getOrElse(fail(s"DEFINE entry '$d'"))
-          (m.group(1), m.group(2).trim)
-        }
-        val measures = one("MEASURES").map(MatchRecognizeSql.splitTop(_).map { mm =>
-          val m = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s*$".r.findFirstMatchIn(mm)
-            .getOrElse(fail(s"MEASURES entry '$mm' (expected <expr> AS <alias>)"))
-          (m.group(1).trim, m.group(2))
-        }).getOrElse(Seq.empty) ++ synth(wName.toLowerCase)
-        val skip = MatchRecognizeSql.parseSkip(one("AFTER MATCH"), subsets)
-        Wspec(wName, partition, order, measures,
-          patternRaw.substring(1, patternRaw.length - 1), defines, subsets,
-          frameK, seek, skip)
-      }
-      // every measure referenced by the select list must be declared in
-      // its window
-      parsedItems.filter(_.measure.isDefined).foreach { it =>
-        val w = windows.find(_.name.equalsIgnoreCase(it.window.get)).get
-        if (!w.measures.exists(_._2.equalsIgnoreCase(it.measure.get)))
-          fail(s"measure '${it.measure.get}' is not declared in MEASURES of window '${w.name}'")
-      }
-      Some(Mw(table, parsedItems, windows, plainBlocks))
-    case _ => None
+      val measures = one("MEASURES").map(MatchRecognizeSql.splitTop(_).map { mm =>
+        val m = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s*$".r.findFirstMatchIn(mm)
+          .getOrElse(fail(s"MEASURES entry '$mm' (expected <expr> AS <alias>)"))
+        (m.group(1).trim, m.group(2))
+      }).getOrElse(Seq.empty) ++ synth(wName.toLowerCase)
+      val skip = MatchRecognizeSql.parseSkip(one("AFTER MATCH"), subsets)
+      Wspec(wName, partition, order, measures,
+        patternRaw.substring(1, patternRaw.length - 1), defines, subsets,
+        frameK, seek, skip)
+    }
+    // every measure referenced by the select list must be declared in
+    // its window
+    resolved.filter(_.measure.isDefined).foreach { it =>
+      val w = windows.find(_.name.equalsIgnoreCase(it.window.get)).get
+      if (!w.measures.exists(_._2.equalsIgnoreCase(it.measure.get)))
+        fail(s"measure '${it.measure.get}' is not declared in MEASURES of window '${w.name}'")
+    }
+    Mw(resolved, windows, plainWindows)
   }
-
-  def lower(spark: SparkSession, dir: String, mw: Mw): DataFrame =
-    lowerDf(graft.sources.Tables.load(spark, dir, mw.table), mw)
 
   def lowerDf(full: DataFrame, mw: Mw): DataFrame = {
     // column pruning across ALL windows + plain items
@@ -271,8 +210,7 @@ private[graft] object MatchWindowSql {
       val lower = fieldNames.map(f => f.toLowerCase -> f).toMap
       "\\w+".r.findAllIn(text).toSeq.flatMap(w => lower.get(w.toLowerCase)).distinct
     }
-    val keep = (mw.items.filter(i => i.measure.isEmpty && i.window.isEmpty).map(_.text) ++
-      mw.items.filter(i => i.measure.isEmpty && i.window.isDefined).flatMap(i => refs(i.text)) ++
+    val keep = (mw.items.filter(_.measure.isEmpty).flatMap(i => refs(i.text)) ++
       mw.plainWindows.values.flatMap(refs) ++
       mw.windows.flatMap(w => w.partitionBy ++ w.orderBy ++
         w.defines.flatMap(d => refs(d._2)) ++

@@ -209,7 +209,8 @@ private[graft] object RowSecurity {
       // UNNEST reads no base table, but its argument expressions may carry
       // subqueries that do
       UnnestRel(es.map(secureExpr(_, ctx, ctes)), alias, cols, ord)
-    case other => other // TVF: no base-table row policy
+    case TvfRel(n, args, a, per) => // TABLE(t) arguments read base tables
+      TvfRel(n, args.map { case (k, e) => (k, secureExpr(e, ctx, ctes)) }, a, per)
   }
 
   /** Expression subqueries (IN/EXISTS/scalar) read tables too. */
@@ -218,6 +219,7 @@ private[graft] object RowSecurity {
       InSubq(secureExpr(x, ctx, ctes), secureQuery(sub, ctx, ctes), n)
     case ExistsExpr(sub) => ExistsExpr(secureQuery(sub, ctx, ctes))
     case ScalarSubq(sub) => ScalarSubq(secureQuery(sub, ctx, ctes))
+    case TableArg(rel) => TableArg(secureRel(rel, ctx, ctes))
     case Fn(nm, args, d, over) =>
       Fn(nm, args.map(secureExpr(_, ctx, ctes)), d, over)
     case Bin(op, l, r) =>

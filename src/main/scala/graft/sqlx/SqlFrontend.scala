@@ -20,11 +20,15 @@ import SqlAst._
   *  - MATCH_RECOGNIZE is a relation node: its input relation is planned
   *    first (recursively — MR over a derived table or another MR works),
   *    lowered through the NFA machinery, and spliced back as a temp view;
+  *    a query block with row-pattern WINDOW specs is lowered the same way
+  *    over its FROM relation (MatchWindowSql), and exclude_columns'
+  *    TABLE/DESCRIPTOR arguments are checked against the live schema;
   *  - quoted identifiers render as backticks, so `"from"` works as a column
   *    name even where the regex layer would have tripped on the keyword.
   *
   * Rendering parenthesizes every binary expression, making operator
-  * precedence a parse-time-only concern.
+  * precedence a parse-time-only concern. SQL routine bodies lower through
+  * the same passes ([[lowerExprText]]).
   */
 private[graft] object SqlFrontend {
 
@@ -42,6 +46,12 @@ private[graft] object SqlFrontend {
   }
 
   // ------------------------------------------------------------ expr passes
+
+  /** One dialect expression (a routine body or a fragment of one) lowered
+    * to Spark SQL text: parse, rewrite, render. Trailing input is a
+    * SqlParseException. */
+  private[graft] def lowerExprText(text: String): String =
+    renderExpr(rewriteExpr(new SqlParser(text).parseStandaloneExpr()))
 
   private val fnRenames = Map(
     "row" -> "struct", // ROW(...) constructor; CAST names the fields
@@ -113,8 +123,8 @@ private[graft] object SqlFrontend {
 
   /** One-level structural map over a window spec's child expressions. */
   private def mapWindow(w: WindowSpec, f: Expr => Expr): WindowSpec =
-    WindowSpec(w.partitionBy.map(f),
-      w.orderBy.map(s => SortItem(f(s.e), s.dir, s.nulls)), w.frameRaw, w.ref)
+    w.copy(partitionBy = w.partitionBy.map(f),
+      orderBy = w.orderBy.map(s => SortItem(f(s.e), s.dir, s.nulls)))
 
   /** One-level structural map over expression children. */
   private def mapChildren(e: Expr, f: Expr => Expr): Expr = e match {
@@ -147,7 +157,7 @@ private[graft] object SqlFrontend {
 
   // ----------------------------------------------------------- query passes
 
-  private[sqlx] def rewriteQuery(q: Query): Query = q match {
+  private[graft] def rewriteQuery(q: Query): Query = q match {
     case s: Select =>
       s.copy(
         items = s.items.map(i => SelectItem(rewriteExpr(i.e), i.alias)),
@@ -174,7 +184,8 @@ private[graft] object SqlFrontend {
     case MatchRel(input, block, a) => MatchRel(rewriteRel(input), block, a)
     case SampleRel(input, m, pct) => SampleRel(rewriteRel(input), m, rewriteExpr(pct))
     case tt: TimeTravelRel => tt
-    case TvfRel(n, args, a, per) => TvfRel(n, args.map(rewriteExpr), a, per)
+    case TvfRel(n, args, a, per) =>
+      TvfRel(n, args.map { case (k, e) => (k, rewriteExpr(e)) }, a, per)
     case UnnestRel(es, alias, cols, ord) => UnnestRel(es.map(rewriteExpr), alias, cols, ord)
     case t: TableRef => t
   }
@@ -182,6 +193,8 @@ private[graft] object SqlFrontend {
   // -------------------------------------------------- MR/TVF planning pass
 
   private[sqlx] def planQuery(spark: SparkSession, dir: String, q: Query): Query = q match {
+    case s: Select if s.windows.exists(_._2.rowPattern.isDefined) =>
+      planPatternWindows(spark, dir, s)
     case s: Select => s.copy(
       items = s.items.map(i => SelectItem(planExpr(spark, dir, i.e), i.alias)),
       from = s.from.map(planRel(spark, dir, _)),
@@ -200,7 +213,7 @@ private[graft] object SqlFrontend {
         // (StatementAnalyzer.setCorrespondingAnalysis) done as a rewrite.
         def columnsOf(q: Query): Seq[String] =
           try spark.sql(renderQuery(q)).schema.fieldNames.toSeq
-          catch { // IllegalArgument: a dialect fallback could never succeed
+          catch {
             case e: Exception => throw new IllegalArgumentException(
               "CORRESPONDING could not resolve its inputs' columns in this " +
                 s"position (${e.getMessage})")
@@ -224,6 +237,90 @@ private[graft] object SqlFrontend {
       OrderedQ(planQuery(spark, dir, inner), ob, lim, ties, off)
   }
 
+  /** Row-pattern windows (SqlBase.g4:876-880), lowered like MatchRel: the
+    * FROM relation is planned first and WHERE filters it, MatchWindowSql
+    * evaluates every pattern window over it, and the block becomes a read
+    * of that result, to which ORDER BY / LIMIT / OFFSET apply. */
+  private def planPatternWindows(spark: SparkSession, dir: String, s: Select): Query = {
+    def fail(what: String): Nothing =
+      throw new IllegalArgumentException(s"row-pattern window: $what")
+    if (s.groupBy.isDefined || s.having.isDefined)
+      fail("GROUP BY / HAVING in the same query block is unsupported")
+    val from = s.from.getOrElse(fail("the query block needs a FROM relation"))
+    val (patterned, plain) = s.windows.partition(_._2.rowPattern.isDefined)
+    val items = s.items.map { case SelectItem(e, alias) =>
+      def as(default: => String): String = renderAlias(alias.getOrElse(default))
+      planExpr(spark, dir, e) match {
+        case MeasureRef(m, w) => MatchWindowSql.Item(m, as(m), Some(m), Some(w))
+        case Fn(name, args, d, Some(WindowSpec(Nil, Nil, None, Some(w), None))) =>
+          MatchWindowSql.Item(renderExpr(Fn(name, args, d, None)), as(name), None, Some(w))
+        case other => MatchWindowSql.Item(renderExpr(other), as(other match {
+          case id: Id => id.parts.last._1
+          case _ => fail(s"alias the select item ${renderExpr(other)} with AS <name>")
+        }), None, None)
+      }
+    }
+    val mw = MatchWindowSql.plan(items,
+      patterned.map { case (n, w) => (n, w.rowPattern.get) },
+      plain.map { case (n, w) =>
+        n.toLowerCase -> renderWindow(mapWindow(w, planExpr(spark, dir, _)))
+      }.toMap)
+    val input = relationDf(spark, dir, planRel(spark, dir, from))
+    val filtered = s.where.fold(input)(w => input.where(renderExpr(planExpr(spark, dir, w))))
+    val view = s"__mw_view_${viewCounter.incrementAndGet()}"
+    MatchWindowSql.lowerDf(filtered, mw).createOrReplaceTempView(view)
+    Select(s.distinct, Seq(SelectItem(Star(None), None)),
+      Some(TableRef(Id(Seq((view, false))), None)), None, None, None,
+      s.orderBy, s.limit, s.fetchTies, s.offset)
+  }
+
+  /** A planned relation as a DataFrame: a bare table reads through
+    * Tables.load (or the registered view of that name), anything else
+    * through its rendered SQL. */
+  private def relationDf(spark: SparkSession, dir: String, planned: Rel): DataFrame =
+    planned match {
+      case TableRef(id, None) =>
+        try graft.sources.Tables.load(spark, dir, id.plain)
+        catch { case _: Exception => spark.table(renderId(id)) }
+      case rel => spark.sql("SELECT * FROM " + renderRel(rel))
+    }
+
+  /** exclude_columns (reference built-in table function,
+    * docs/functions/table.md:33-60; ExcludeColumnsFunction): the input
+    * table minus the descriptor's columns, checked against its live
+    * schema. Arguments by name (`input =>`, `columns =>`) or position. */
+  private def excludeColumns(spark: SparkSession, dir: String,
+      args: Seq[(Option[String], Expr)]): DataFrame = {
+    def arg(name: String, pos: Int): Expr =
+      args.collectFirst { case (Some(n), e) if n.equalsIgnoreCase(name) => e }
+        .orElse(args.lift(pos).collect { case (None, e) => e })
+        .getOrElse(throw new IllegalArgumentException(
+          s"exclude_columns: missing argument '$name'"))
+    val (tbl, df) = arg("input", 0) match {
+      case TableArg(rel) =>
+        val name = rel match {
+          case TableRef(id, _) => id.plain
+          case SubqueryRel(_, Some(a), _) => a // row-policy wrapped table
+          case _ => "input"
+        }
+        (name, relationDf(spark, dir, planRel(spark, dir, rel)))
+      case other => throw new IllegalArgumentException(
+        s"exclude_columns: input must be TABLE(<table>), got ${renderExpr(other)}")
+    }
+    val cols = arg("columns", 1) match {
+      case DescriptorArg(cs) => cs
+      case other => throw new IllegalArgumentException(
+        s"exclude_columns: columns must be DESCRIPTOR(<col>, …), got ${renderExpr(other)}")
+    }
+    require(cols.nonEmpty,
+      "exclude_columns: the columns descriptor must name at least one column")
+    cols.foreach(c => require(df.columns.exists(_.equalsIgnoreCase(c)),
+      s"exclude_columns: column '$c' is not in table '$tbl'"))
+    require(cols.length < df.columns.length,
+      "exclude_columns: cannot exclude every column of the input")
+    df.drop(cols: _*)
+  }
+
   private def planExpr(spark: SparkSession, dir: String, e: Expr): Expr =
     mapChildren(e, planExpr(spark, dir, _)) match {
       case InSubq(x, q, n) => InSubq(x, planQuery(spark, dir, q), n)
@@ -238,13 +335,7 @@ private[graft] object SqlFrontend {
         on.map(planExpr(spark, dir, _)))
     case SubqueryRel(q, a, c) => SubqueryRel(planQuery(spark, dir, q), a, c)
     case MatchRel(input, blockRaw, alias) =>
-      val planned = planRel(spark, dir, input)
-      val inputDf = planned match {
-        case TableRef(id, None) =>
-          try graft.sources.Tables.load(spark, dir, id.plain)
-          catch { case _: Exception => spark.table(renderId(id)) }
-        case rel => spark.sql("SELECT * FROM " + renderRel(rel))
-      }
+      val inputDf = relationDf(spark, dir, planRel(spark, dir, input))
       val mr = MatchRecognizeSql
         .parse(s"SELECT * FROM __mr_input MATCH_RECOGNIZE ($blockRaw)")
         .getOrElse(throw new SqlParseException(s"malformed MATCH_RECOGNIZE block: $blockRaw"))
@@ -252,8 +343,16 @@ private[graft] object SqlFrontend {
       val view = s"__mr_view_${viewCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       TableRef(Id(Seq((view, false))), alias)
+    case TvfRel(name, args, alias, None) if name.equalsIgnoreCase("exclude_columns") =>
+      val view = s"__tvf_${name}_${viewCounter.incrementAndGet()}"
+      excludeColumns(spark, dir, args).createOrReplaceTempView(view)
+      TableRef(Id(Seq((view, false))), alias)
     case TvfRel(name, args, alias, period) =>
-      val argTexts = args.map(renderExpr)
+      val argTexts = args.map {
+        case (None, e) => renderExpr(e)
+        case (Some(n), _) => throw new IllegalArgumentException(
+          s"table function '$name' takes positional arguments, got '$n =>'")
+      }
       val view = s"__tvf_${name}_${viewCounter.incrementAndGet()}"
       val df = period match {
         case None => graft.functions.TableFunctions.invoke(spark, dir, name, argTexts)
@@ -579,7 +678,7 @@ private[graft] object SqlFrontend {
       val argStr = args2.map(renderExpr).mkString(", ")
       val base = s"$name(${if (distinct) "DISTINCT " else ""}$argStr)"
       base + over.map {
-        case WindowSpec(_, _, _, Some(ref)) => s" OVER $ref" // named window
+        case WindowSpec(_, _, _, Some(ref), _) => s" OVER $ref" // named window
         case w => " OVER (" + renderWindow(w) + ")"
       }.getOrElse("")
     case FilterOver(agg, c, w) =>
@@ -626,6 +725,11 @@ private[graft] object SqlFrontend {
     // out-of-bounds under ANSI like the reference.
     case Subscript(x, ix) => s"element_at(${renderExpr(x)}, ${renderExpr(ix)})"
     case FieldRef(x, n) => s"(${renderExpr(x)}).$n"
+    case MeasureRef(m, w) => throw new IllegalArgumentException(
+      s"$m OVER $w: '$w' is not a row-pattern window (MEASURES … PATTERN … " +
+        "DEFINE) of this query block")
+    case _: TableArg | _: DescriptorArg => throw new IllegalArgumentException(
+      "TABLE(…) and DESCRIPTOR(…) arguments are accepted by exclude_columns only")
   }
 
   private def renderWindow(w: WindowSpec): String = {

@@ -11,12 +11,15 @@ package graft.sqlx
   * inside a derived table, quoted identifiers shadowing keywords).
   *
   * Scope: the query language (SELECT/WITH/set-ops/VALUES, joins incl. CROSS
-  * JOIN UNNEST and TABLE(tvf), expressions incl. lambdas, CASE, CAST, TRY,
-  * windows, subqueries, AT TIME ZONE, FETCH FIRST … {ONLY|WITH TIES}).
-  * Statement heads with their own executors (PREPARE/EXECUTE/DEALLOCATE,
-  * CREATE FUNCTION) stay in TrinoDialect; MATCH_RECOGNIZE blocks are
-  * captured as balanced raw spans and handed to MatchRecognizeSql's clause
-  * parser — one owner for that sub-grammar.
+  * JOIN UNNEST and TABLE(tvf) with named TABLE/DESCRIPTOR arguments,
+  * expressions incl. lambdas, CASE, CAST, TRY, windows, subqueries, AT TIME
+  * ZONE, FETCH FIRST … {ONLY|WITH TIES}) plus the statement family below.
+  * This is the only SQL front door: a text outside it is a
+  * SqlParseException, never a second parse. MATCH_RECOGNIZE blocks and
+  * row-pattern WINDOW specifications are captured as balanced raw spans and
+  * handed to MatchRecognizeSql's / MatchWindowSql's clause parsers — one
+  * owner for that sub-grammar. CREATE FUNCTION and WITH FUNCTION heads are
+  * split off by SqlRoutines / TrinoDialect before a statement reaches here.
   */
 object SqlAst {
   sealed trait Expr
@@ -73,7 +76,17 @@ object SqlAst {
   /** Window specification; `ref` = a named window from the WINDOW clause
     * (SqlBase.g4 #windowDefinition / windowReference). */
   final case class WindowSpec(partitionBy: Seq[Expr], orderBy: Seq[SortItem],
-      frameRaw: Option[String], ref: Option[String] = None)
+      frameRaw: Option[String], ref: Option[String] = None,
+      rowPattern: Option[String] = None)
+  /** `name OVER w`: a measure of row-pattern window `w` (SqlBase.g4
+    * primaryExpression #measure). `rowPattern` above holds the raw body of
+    * a WINDOW specification with MEASURES … PATTERN … DEFINE
+    * (SqlBase.g4:876-880); both are lowered by SqlFrontend's planning pass. */
+  final case class MeasureRef(name: String, window: String) extends Expr
+  /** Table-function arguments (SqlBase.g4 tableArgument /
+    * descriptorArgument): `TABLE(t)` and `DESCRIPTOR(a, b)`. */
+  final case class TableArg(rel: Rel) extends Expr
+  final case class DescriptorArg(cols: Seq[String]) extends Expr
   final case class SortItem(e: Expr, dir: Option[String], nulls: Option[String])
 
   sealed trait Rel
@@ -83,10 +96,12 @@ object SqlAst {
   final case class JoinRel(kind: String, l: Rel, r: Rel, on: Option[Expr]) extends Rel
   final case class UnnestRel(exprs: Seq[Expr], alias: String, cols: Seq[String],
       ordinality: Boolean) extends Rel
-  /** `period` carries a trailing FOR VERSION|TIMESTAMP AS OF (SqlBase.g4
-    * queryPeriod composes with table functions for the lake TVFs). */
-  final case class TvfRel(name: String, args: Seq[Expr], alias: Option[String],
-      period: Option[(String, Expr)] = None) extends Rel
+  /** `args` are positional or `name => value` (SqlBase.g4
+    * tableFunctionArgument); `period` carries a trailing FOR
+    * VERSION|TIMESTAMP AS OF (SqlBase.g4 queryPeriod composes with table
+    * functions for the lake TVFs). */
+  final case class TvfRel(name: String, args: Seq[(Option[String], Expr)],
+      alias: Option[String], period: Option[(String, Expr)] = None) extends Rel
   /** MATCH_RECOGNIZE over any input; `blockRaw` is the balanced-paren body. */
   final case class MatchRel(input: Rel, blockRaw: String, alias: Option[String]) extends Rel
   /** TABLESAMPLE BERNOULLI/SYSTEM (percentage) over a relation. */
@@ -316,9 +331,8 @@ object SqlAst {
   final case class GrantRoleStmt(revoke: Boolean, role: String,
       grantee: String) extends Statement
   /** PREPARE name FROM statement (SqlBase.g4 :145) — the inner statement is
-    * kept as raw text (bound and re-parsed at EXECUTE time, so even
-    * fallback-only statements can be prepared, matching the text-based
-    * `?`-parameter model). */
+    * kept as raw text (bound and re-parsed at EXECUTE time, matching the
+    * text-based `?`-parameter model). */
   final case class PrepareStmt(name: String, stmtText: String) extends Statement
   /** EXECUTE name [USING e, …] | EXECUTE IMMEDIATE 'sql' [USING e, …]
     * (SqlBase.g4 :147-149). */
@@ -402,7 +416,7 @@ object SqlLexer {
         multiOps.find(op => s.startsWith(op, i)) match {
           case Some(op) => out += Token(TOp, op, i); i += op.length
           case None =>
-            if ("+-*/%<>=,().[]?;:@".indexOf(c) >= 0) { out += Token(TOp, c.toString, i); i += 1 }
+            if ("+-*/%<>=,().[]?;:@|{}^$".indexOf(c) >= 0) { out += Token(TOp, c.toString, i); i += 1 }
             else err(s"unexpected character '$c'")
         }
       }
@@ -1084,8 +1098,7 @@ final class SqlParser(src: String) {
     * like the reference ("CORRESPONDING with columns is unsupported"). */
   private def acceptCorresponding(): Boolean = {
     val corr = accept("CORRESPONDING")
-    if (corr && peek.is("BY")) // IllegalArgument: understood, unsupported —
-      // must NOT fall back to Spark's parser (which has no CORRESPONDING)
+    if (corr && peek.is("BY")) // understood but unsupported: not a syntax error
       throw new IllegalArgumentException(
         "CORRESPONDING with columns is unsupported")
     corr
@@ -1114,12 +1127,13 @@ final class SqlParser(src: String) {
         q
       } else { p = save; err("expected subquery") }
     } else if (accept("VALUES")) {
+      // a row is `(e, …)` or a bare expression: VALUES 0, 1, 2 is three
+      // single-column rows (SqlBase.g4 inlineTable: VALUES expression, …)
       val rows = scala.collection.mutable.ArrayBuffer[Seq[Expr]]()
       var more = true
       while (more) {
-        expectOp("(")
-        rows += exprList()
-        expectOp(")")
+        if (acceptOp("(")) { rows += exprList(); expectOp(")") }
+        else rows += Seq(parseExpr())
         more = acceptOp(",")
       }
       ValuesQ(rows.toSeq)
@@ -1138,16 +1152,18 @@ final class SqlParser(src: String) {
     val where = if (accept("WHERE")) Some(parseExpr()) else None
     val groupBy = if (acceptSeq("GROUP", "BY")) Some(parseGroupBy()) else None
     val having = if (accept("HAVING")) Some(parseExpr()) else None
-    // WINDOW name AS (spec), … (SqlBase.g4 #windowDefinition); the
-    // row-pattern flavor (MEASURES/PATTERN/DEFINE inside the spec) is owned
-    // by MatchWindowSql's clause parser upstream of this grammar
+    // WINDOW name AS (spec), … (SqlBase.g4 #windowDefinition); a
+    // row-pattern spec (MEASURES/PATTERN/DEFINE, SqlBase.g4:876-880) is
+    // kept as its raw body for MatchWindowSql's clause parser
     val windows = scala.collection.mutable.ArrayBuffer[(String, WindowSpec)]()
     if (accept("WINDOW")) {
       var moreW = true
       while (moreW) {
         val n = ident("window name")
         expectKw("AS")
-        windows += ((n, parseWindowSpec()))
+        windows += ((n,
+          if (rowPatternAhead) WindowSpec(Nil, Nil, None, rowPattern = Some(rawBalancedParens()))
+          else parseWindowSpec()))
         moreW = acceptOp(",")
       }
     }
@@ -1320,7 +1336,11 @@ final class SqlParser(src: String) {
         p += 2
         val name = ident("table function name")
         expectOp("(")
-        val args = if (peek.isOp(")")) Seq.empty else exprList()
+        val args = scala.collection.mutable.ArrayBuffer[(Option[String], Expr)]()
+        if (!peek.isOp(")")) {
+          var more = true
+          while (more) { args += parseTvfArg(); more = acceptOp(",") }
+        }
         expectOp(")"); expectOp(")")
         // queryPeriod on a table function (lake TVF time travel)
         val period =
@@ -1330,7 +1350,7 @@ final class SqlParser(src: String) {
             expectKw("AS"); expectKw("OF")
             Some((kind, parsePrimary()))
           } else None
-        TvfRel(name, args, relAlias(), period)
+        TvfRel(name, args.toSeq, relAlias(), period)
       } else {
         val parts = scala.collection.mutable.ArrayBuffer[(String, Boolean)]()
         parts += identPart()
@@ -1362,6 +1382,33 @@ final class SqlParser(src: String) {
     } else base
   }
 
+  /** tableFunctionArgument (SqlBase.g4): `[name =>] TABLE(t) |
+    * DESCRIPTOR(a, …) | expression`. */
+  private def parseTvfArg(): (Option[String], Expr) = {
+    val name =
+      if ((peek.kind == TIdent || peek.kind == TQIdent) && peek2.isOp("=>")) {
+        val n = ident("argument name"); p += 1; Some(n)
+      } else None
+    val value =
+      if (peek.is("TABLE") && peek2.isOp("(")) {
+        p += 2
+        val parts = scala.collection.mutable.ArrayBuffer(identPart())
+        while (acceptOp(".")) parts += identPart()
+        expectOp(")")
+        TableArg(TableRef(Id(parts.toSeq), None))
+      } else if (peek.is("DESCRIPTOR") && peek2.isOp("(")) {
+        p += 2
+        val cols = scala.collection.mutable.ArrayBuffer[String]()
+        if (!peek.isOp(")")) {
+          var more = true
+          while (more) { cols += ident("descriptor field"); more = acceptOp(",") }
+        }
+        expectOp(")")
+        DescriptorArg(cols.toSeq)
+      } else parseExpr()
+    (name, value)
+  }
+
   private def identPart(): (String, Boolean) = peek.kind match {
     case TIdent => (next().text, false)
     case TQIdent => (next().text, true)
@@ -1373,6 +1420,21 @@ final class SqlParser(src: String) {
     else if ((peek.kind == TIdent && !reserved(peek.text.toUpperCase)) || peek.kind == TQIdent)
       Some(aliasIdent())
     else None
+  }
+
+  /** Whether the parenthesized window specification at the next '(' has a
+    * top-level `PATTERN (` clause — the row-pattern flavor. */
+  private def rowPatternAhead: Boolean = {
+    var depth = 0
+    var i = p
+    while (tokens(i).kind != TEof) {
+      val t = tokens(i)
+      if (t.isOp("(")) depth += 1
+      else if (t.isOp(")")) { depth -= 1; if (depth == 0) return false }
+      else if (depth == 1 && t.is("PATTERN") && tokens(i + 1).isOp("(")) return true
+      i += 1
+    }
+    false
   }
 
   /** Raw source span of a balanced-paren block starting at the next '('. */
@@ -1406,6 +1468,14 @@ final class SqlParser(src: String) {
   }
 
   def parseExpr(): Expr = parseOr()
+
+  /** A text that is exactly one expression (routine bodies). */
+  def parseStandaloneExpr(): Expr = {
+    val e = parseExpr()
+    acceptOp(";")
+    if (peek.kind != TEof) err("trailing input after expression")
+    e
+  }
 
   private def parseOr(): Expr = {
     var l = parseAnd()
@@ -1636,7 +1706,11 @@ final class SqlParser(src: String) {
       else { p += 1; parts += identPart() }
     }
     if (star) Star(Some(parts.map(_._1).mkString(".")))
-    else Id(parts.toSeq)
+    else if (parts.length == 1 && peek.is("OVER") &&
+        (peek2.kind == TIdent || peek2.kind == TQIdent)) {
+      p += 1 // `measure OVER w` (SqlBase.g4 #measure)
+      MeasureRef(first._1, ident("window name"))
+    } else Id(parts.toSeq)
   }
 
   private def parseCallAfterName(name: String): Expr = {
@@ -1805,9 +1879,21 @@ final class SqlParser(src: String) {
     val sb = new StringBuilder
     var expectMore = true
     while (expectMore) {
-      if (peek.kind == TIdent) { sb.append(next().text) }
-      else err("expected type name")
-      if (peek.isOp("(")) {
+      val word = if (peek.kind == TIdent) next().text else err("expected type name")
+      sb.append(word)
+      if (peek.isOp("<") && Set("ARRAY", "MAP", "STRUCT")(word.toUpperCase)) {
+        // Spark spellings (array<bigint>, struct<v0:bigint,…>) that routine
+        // lowering generates: the balanced <…> span passes through verbatim
+        val start = peek.pos
+        var depth = 0
+        do {
+          if (peek.isOp("<")) depth += 1
+          else if (peek.isOp(">")) depth -= 1
+          else if (peek.kind == TEof) err("unbalanced '<' in type")
+          p += 1
+        } while (depth > 0)
+        sb.append(src.substring(start, tokens(p - 1).pos + 1))
+      } else if (peek.isOp("(")) {
         sb.append('(')
         p += 1
         var depth = 1

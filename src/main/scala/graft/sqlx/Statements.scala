@@ -414,6 +414,7 @@ private[graft] object Statements {
           els.toSeq.flatMap(fromExpr(_, c))
       case Subscript(a, ix) => fromExpr(a, c) ++ fromExpr(ix, c)
       case AtTimeZone(a, tz) => fromExpr(a, c) ++ fromExpr(tz, c)
+      case TableArg(rel) => fromRel(rel, c)
       case _ => Set.empty
     }
     def fromRel(r: Rel, c: Set[String]): Set[String] = r match {
@@ -426,7 +427,7 @@ private[graft] object Statements {
       case MatchRel(input, _, _) => fromRel(input, c)
       case UnnestRel(exprs, _, _, _) => exprs.flatMap(fromExpr(_, c)).toSet
       case TvfRel(_, args, _, period) =>
-        args.flatMap(fromExpr(_, c)).toSet ++
+        args.flatMap(a => fromExpr(a._2, c)).toSet ++
           period.toSeq.flatMap(p => fromExpr(p._2, c))
       case SampleRel(input, _, _) => fromRel(input, c)
       case TimeTravelRel(name, _, _, _) => Set(name.plain.toLowerCase)
@@ -1784,8 +1785,8 @@ private[graft] object Statements {
     // PREPARE family (reference SqlBase.g4 :145-153; PrepareTask /
     // DeallocateTask / DescribeInputTask / DescribeOutputTask). The
     // statement body is stored as raw text and bound textually at EXECUTE
-    // (literal-aware `?` splice); registry is shared with the legacy
-    // regex fallback so both doors interoperate.
+    // (literal-aware `?` splice), then runs through the front door like
+    // any other statement.
     case PrepareStmt(name, stmtText) =>
       TrinoDialect.storePrepared(name, stmtText)
       spark.emptyDataFrame
@@ -1940,7 +1941,7 @@ private[graft] object Statements {
           s"query '$qid' is not running on this server")
         oneRow(spark, "rows", 0L)
 
-      case other => throw new SqlParseException(
+      case other => throw new IllegalArgumentException(
         s"procedure '${name.mkString(".")}' is not registered")
     }
   }

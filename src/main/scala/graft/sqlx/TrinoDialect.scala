@@ -2,45 +2,19 @@ package graft.sqlx
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Trino-dialect pre-rewrite layer (SURVEY.md §3 "sqlx/"): accepts SQL text in
-  * the reference's dialect and lowers it onto Spark.
+/** Trino-dialect entry point (SURVEY.md §3 "sqlx/"): accepts SQL text in
+  * the reference's dialect and runs it on Spark.
   *
-  * The reference parses this surface in its own grammar
-  * (reference: core/trino-grammar/src/main/antlr4/io/trino/grammar/sql/SqlBase.g4 —
-  * TRY at the primaryExpression rule, patternRecognition at :446). Here the
-  * dialect gap is closed by a *pre-rewriter*, not a second parser: Catalyst
-  * remains the only SQL engine, and this layer only renames/reshapes the
-  * Trino-isms Spark's parser rejects or interprets differently:
-  *
-  *  - TRY(expr) lowers RECURSIVELY onto Spark's try_* family: arithmetic
-  *    (+ - * / % → try_add/try_subtract/try_multiply/try_divide/try_mod,
-  *    applied at every nesting level), CAST → TRY_CAST, element_at →
-  *    try_element_at, and a function table (to_number/to_timestamp/
-  *    to_binary/url_decode/parse_json → their try_ twins; json_value/
-  *    json_query → the engine's null-on-error json_path_* expressions).
-  *    Unmappable bodies are rejected with a clear error — a generic
-  *    catch-per-row does not exist in Spark.
-  *  - format('fmt', …)       → format_string('fmt', …)
-  *  - approx_distinct/arbitrary/strpos/codepoint/json_extract_scalar →
-  *    approx_count_distinct/any_value/instr/ascii/get_json_object
-  *  - json_value/json_query  → json_path_value/json_path_query (SQL/JSON 2016
-  *    path engine, graft.ext.JsonPath; RETURNING clause not parsed)
-  *  - FETCH FIRST n ROWS ONLY → LIMIT n
-  *  - element_at keeps Trino semantics natively (Spark 4 ANSI: array OOB
-  *    throws, missing map key is NULL — same as the reference).
-  *  - SELECT * FROM t MATCH_RECOGNIZE (…) → graft.sqlx.MatchRecognizeSql:
-  *    multi-column PARTITION BY/ORDER BY, arbitrary DEFINE expressions with
-  *    PREV/NEXT (lowered to Catalyst lag/lead boolean columns), arbitrary
-  *    MEASURES with RUNNING/FINAL, CLASSIFIER(), MATCH_NUMBER() (lowered to
-  *    Catalyst window expressions over the annotated match output), both
-  *    per-match output modes.
-  *
-  * ALL rewrites are literal-aware: string literals ('…' with '' escapes) and
-  * double-quoted identifiers are masked before any pattern matching, so
-  * `SELECT 'call format(x)'` passes through untouched and parens/slashes
-  * inside literals never confuse the TRY classifier. Rewrites are textual and
-  * documented as a subset — the point is the dialect *surface*, with Catalyst
-  * doing all real SQL work after the rewrite.
+  * The reference parses its dialect with one grammar
+  * (core/trino-grammar/src/main/antlr4/io/trino/grammar/sql/SqlBase.g4);
+  * so does this engine. Every statement goes through SqlParser → Statements
+  * (DML/DDL/SHOW/PREPARE heads) or SqlFrontend (queries: rewrite passes,
+  * planning of MATCH_RECOGNIZE / row-pattern windows / table functions, and
+  * rendering to Spark SQL for Catalyst). A text the grammar rejects is a
+  * SqlParseException — there is no second, textual parse. What lives here:
+  * the CREATE FUNCTION / WITH FUNCTION routing, the session's PREPARE
+  * registry, and the literal-aware `?` binding and DESCRIBE INPUT/OUTPUT
+  * that the PREPARE family needs.
   */
 object TrinoDialect {
 
@@ -49,35 +23,8 @@ object TrinoDialect {
   // USING). Session-scope in the reference; JVM-scope here (one engine
   // session per JVM in this harness).
   private val prepared = scala.collection.mutable.Map[String, String]()
-  private val PrepareRe = "(?is)^\\s*PREPARE\\s+(\\w+)\\s+FROM\\s+(.*)$".r
-  private val ExecuteRe = "(?is)^\\s*EXECUTE\\s+(\\w+)(?:\\s+USING\\s+(.*))?\\s*$".r
-  private val DeallocRe = "(?is)^\\s*DEALLOCATE\\s+PREPARE\\s+(\\w+)\\s*$".r
-  private val DescInputRe = "(?is)^\\s*DESCRIBE\\s+INPUT\\s+(\\w+)\\s*$".r
-  private val DescOutputRe = "(?is)^\\s*DESCRIBE\\s+OUTPUT\\s+(\\w+)\\s*$".r
 
-  /** Splice EXECUTE … USING arguments into the statement's `?` parameter
-    * markers (left to right, literal-aware — a '?' inside a string survives).
-    * Text-splitting form used by the legacy regex fallback; the grammar path
-    * renders parsed arg expressions and calls [[bindArgs]] directly. */
-  private def bindParams(stmt: String, argsText: Option[String]): String = {
-    val args = argsText.map(a =>
-      maskLiterals(a).zip(a).foldLeft((Seq(new StringBuilder), 0)) {
-        case ((acc, depth), ((mc, oc))) => mc match {
-          case '(' => acc.last.append(oc); (acc, depth + 1)
-          case ')' => acc.last.append(oc); (acc, depth - 1)
-          case ',' if depth == 0 => (acc :+ new StringBuilder, depth)
-          case _ => acc.last.append(oc); (acc, depth)
-        }
-      }._1.map(_.toString.trim)).getOrElse(Seq.empty)
-    bindArgs(stmt, args)
-  }
-
-  /** Execute Trino-dialect SQL against the fixture catalog at `dir`.
-    *
-    * The PREPARE/EXECUTE/DEALLOCATE/DESCRIBE INPUT/OUTPUT family is parsed
-    * by the grammar front door (SqlParser → Statements); the regex forms
-    * survive only in the legacy fallback for inner statements the lexer
-    * cannot tokenize. */
+  /** Execute Trino-dialect SQL against the fixture catalog at `dir`. */
   def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
     Statements.logQuery(text) // system.runtime.queries history
     if (graft.functions.SqlRoutines.isCreateFunction(text))
@@ -85,9 +32,9 @@ object TrinoDialect {
     else sqlDirect(spark, dir, text)
   }
 
-  /** Named-statement registry lookup shared by both front doors. A
-    * request-scoped `X-Trino-Prepared-Statement` header (stateless-server
-    * protocol) shadows the JVM-global registry. */
+  /** Named-statement registry lookup. A request-scoped
+    * `X-Trino-Prepared-Statement` header (stateless-server protocol)
+    * shadows the JVM-global registry. */
   private[sqlx] def preparedStatement(name: String): String =
     SessionContext.preparedOverride(name)
       .orElse(prepared.get(name))
@@ -129,16 +76,14 @@ object TrinoDialect {
       if (masked(i) == '?') "NULL" else stmt(i).toString).mkString
     graft.sources.Tables.registerAll(spark, dir)
     graft.functions.Registry.registerAll(spark)
-    val schema =
-      try new SqlParser(bound).parseStatement() match {
-        case SqlAst.QueryStmt(q) =>
-          spark.sql(SqlFrontend.renderQuery(SqlFrontend.planQuery(
-            spark, dir, SqlFrontend.rewriteQuery(q)))).schema
-        case _ => org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("rows",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-      } catch { case _: SqlParseException =>
-        sqlDirect(spark, dir, bound).schema }
+    val schema = new SqlParser(bound).parseStatement() match {
+      case SqlAst.QueryStmt(q) =>
+        spark.sql(SqlFrontend.renderQuery(SqlFrontend.planQuery(
+          spark, dir, SqlFrontend.rewriteQuery(q)))).schema
+      case _ => org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("rows",
+          org.apache.spark.sql.types.LongType, nullable = false)))
+    }
     val rows = schema.fields.toSeq.map(f =>
       org.apache.spark.sql.Row(f.name, f.dataType.simpleString))
     spark.createDataFrame(java.util.List.copyOf(
@@ -168,9 +113,7 @@ object TrinoDialect {
 
   /** Front door: the recursive-descent parser (graft.sqlx.SqlParser) with
     * rewrites as AST passes (SqlFrontend) — dialect features compose at any
-    * nesting depth. Statements outside the parsed grammar (or hitting a
-    * documented parser gap) fall back to the legacy literal-aware regex
-    * rewriter, which remains the text-level subset it always was. */
+    * nesting depth. */
   private def sqlDirect(spark: SparkSession, dir: String, text: String): DataFrame = {
     graft.sources.Tables.registerAll(spark, dir)
     graft.functions.Registry.registerAll(spark)
@@ -184,22 +127,12 @@ object TrinoDialect {
       defs.foreach(d => graft.functions.SqlRoutines.create(spark, "CREATE " + d))
       return sqlDirect(spark, dir, query)
     }
-    try Statements.run(spark, dir, text) // DML/EXPLAIN/SHOW/DESCRIBE heads
+    Statements.run(spark, dir, text) // DML/EXPLAIN/SHOW/DESCRIBE heads
       // query path: prepared-plan cache (r19) — repeated statement text in
       // the same session/context/epoch skips parse + rewrite + analysis;
       // execution still runs from the parquet inputs on every action
       .getOrElse(PlanCache.cached(spark, dir, text)(
         SqlFrontend.run(spark, dir, text)))
-    catch {
-      case e: SqlParseException =>
-        // the legacy text-rewriter cannot classify table accesses, so an
-        // enforced user may not reach it (deny-by-default)
-        SessionContext.enforcedUser.foreach(u => throw new AccessDeniedException(
-          s"Cannot execute this statement as user $u (not coverable by " +
-            "grant enforcement)"))
-        System.err.println(s"[sqlx] parser fallback (${e.getMessage.takeWhile(_ != '\n')})")
-        legacyDirect(spark, dir, text)
-    }
   }
 
   /** Split `WITH FUNCTION d1 [, FUNCTION d2 ...] <query>` into the routine
@@ -253,79 +186,11 @@ object TrinoDialect {
     (defs.toSeq, rest)
   }
 
-  private def legacyDirect(spark: SparkSession, dir: String, text: String): DataFrame =
-    text match {
-      // PREPARE-family regex fallback: reached only when the grammar could
-      // not tokenize the statement (e.g. a prepared inner statement with
-      // characters outside the lexer's alphabet). Same registry as the
-      // grammar path, so the two doors interoperate.
-      case PrepareRe(name, stmt) =>
-        storePrepared(name, stmt); spark.emptyDataFrame
-      case DeallocRe(name) =>
-        dropPrepared(name); spark.emptyDataFrame
-      case DescInputRe(name) =>
-        describeInput(spark, preparedStatement(name))
-      case DescOutputRe(name) =>
-        describeOutput(spark, dir, preparedStatement(name))
-      case ExecuteRe(name, argsText) =>
-        sql(spark, dir, bindParams(preparedStatement(name), Option(argsText)))
-      case _ =>
-        // row-pattern window specifications (SqlBase.g4:876-880) first:
-        // their WINDOW … PATTERN shape is outside both the grammar parser
-        // and Spark's own WINDOW clause
-        MatchWindowSql.parse(text) match {
-          case Some(mw) => MatchWindowSql.lower(spark, dir, mw)
-          case None => MatchRecognizeSql.parse(text) match {
-            case Some(mr) => MatchRecognizeSql.lower(spark, dir, mr)
-            case None =>
-              spark.sql(rewrite(lowerTableFunctions(spark, dir, text)))
-          }
-        }
-    }
-
-  /** `FROM TABLE(name(args...))` → registered TVF materialized as a temp view
-    * (reference ConnectorTableFunction resolution; graft.functions.TableFunctions).
-    * Text-surface subset: scalar literal args without nested parens or commas
-    * inside quotes — TVFs with full SQL args (e.g. raw_query) are reachable
-    * through the Scala API (`TableFunctions.invoke`). */
-  private def lowerTableFunctions(spark: SparkSession, dir: String, sqlText: String): String = {
-    // exclude_columns (reference built-in table function,
-    // docs/functions/table.md:33-60): named TABLE/DESCRIPTOR arguments —
-    // returns the input table without the named columns. Resolved here
-    // because the descriptor must validate against the live schema.
-    val ExcludeRe = ("""(?i)TABLE\s*\(\s*exclude_columns\s*\(\s*input\s*=>\s*""" +
-      """TABLE\s*\(\s*(\w+)\s*\)\s*,\s*columns\s*=>\s*DESCRIPTOR\s*\(([^()]*)\)\s*\)\s*\)""").r
-    val afterExclude = ExcludeRe.replaceAllIn(sqlText, m => {
-      val tbl = m.group(1)
-      val cols = m.group(2).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-      require(cols.nonEmpty,
-        "exclude_columns: the columns descriptor must name at least one column")
-      val df = graft.sources.Tables.load(spark, dir, tbl)
-      cols.foreach(c => require(df.columns.exists(_.equalsIgnoreCase(c)),
-        s"exclude_columns: column '$c' is not in table '$tbl'"))
-      require(cols.length < df.columns.length,
-        "exclude_columns: cannot exclude every column of the input")
-      val view = s"tvf_exclude_${tbl}_${Integer.toHexString(m.group(2).hashCode).replace('-', 'n')}"
-      df.drop(cols: _*).createOrReplaceTempView(view)
-      view
-    })
-    val TvfRe = """(?i)TABLE\s*\(\s*(\w+)\s*\(([^()]*)\)\s*\)""".r
-    TvfRe.replaceAllIn(afterExclude, m => {
-      val name = m.group(1)
-      val args = if (m.group(2).trim.isEmpty) Seq.empty[String]
-        else m.group(2).split(",").toSeq.map(_.trim)
-      val view = s"tvf_${name}_${Integer.toHexString(m.group(2).hashCode).replace('-', 'n')}"
-      graft.functions.TableFunctions.invoke(spark, dir, name, args)
-        .createOrReplaceTempView(view)
-      view
-    })
-  }
-
   // ------------------------------------------------------------- masking
 
   /** Same-length shadow of `s` with every character INSIDE string literals
     * ('…', with '' escapes) and double-quoted identifiers replaced by \\u0001.
-    * All searching/matching below runs on the mask; slices for output are
+    * `?` binding and DESCRIBE INPUT search the mask; slices for output are
     * taken from the original. */
   private[sqlx] def maskLiterals(s: String): String = {
     val out = s.toCharArray
@@ -349,187 +214,5 @@ object TrinoDialect {
       }
     }
     new String(out)
-  }
-
-  /** Regex replace driven by the MASKED text: matches never touch literal
-    * contents; `build` receives original-text group slices. */
-  private def replaceMasked(s: String, re: scala.util.matching.Regex)(
-      build: (scala.util.matching.Regex.Match, Int => String) => String): String = {
-    val masked = maskLiterals(s)
-    val out = new StringBuilder
-    var last = 0
-    for (m <- re.findAllMatchIn(masked)) {
-      out.append(s.substring(last, m.start))
-      out.append(build(m, g => s.substring(m.start(g), m.end(g))))
-      last = m.end
-    }
-    out.append(s.substring(last))
-    out.toString
-  }
-
-  private def renameFn(s: String, from: String, to: String): String =
-    replaceMasked(s, ("(?i)(?<![\\w_])" + from + "\\s*\\(").r)((_, _) => to + "(")
-
-  /** Textual pre-rewrites for Trino-isms (no MATCH_RECOGNIZE here). */
-  def rewrite(sql: String): String = {
-    var s = rewriteTry(sql)
-    // CROSS JOIN UNNEST(expr) AS t (v)  →  LATERAL VIEW explode(expr) t AS v
-    // (reference SqlBase.g4 unnest rule; ordinality variant is q_unnest's
-    // posexplode surface — not rewritten textually)
-    s = replaceMasked(s,
-      "(?is)CROSS\\s+JOIN\\s+UNNEST\\s*\\(([^()]*(?:\\([^()]*\\))?[^()]*)\\)\\s+AS\\s+(\\w+)\\s*\\(\\s*(\\w+)\\s*\\)".r)(
-      (m, g) => s"LATERAL VIEW explode(${g(1)}) ${g(2)} AS ${g(3)}")
-    // Trino reduce(array, init, merge, final) ≡ Spark aggregate(...)
-    s = renameFn(s, "reduce", "aggregate")
-    s = renameFn(s, "format", "format_string")
-    s = renameFn(s, "approx_distinct", "approx_count_distinct")
-    s = renameFn(s, "arbitrary", "any_value")
-    s = renameFn(s, "strpos", "instr")
-    s = renameFn(s, "codepoint", "ascii")
-    s = renameFn(s, "json_extract_scalar", "get_json_object")
-    s = renameFn(s, "json_value", "json_path_value")
-    s = renameFn(s, "json_query", "json_path_query")
-    // FETCH FIRST n ROWS WITH TIES (reference SqlBase.g4 limitRowCount WITH
-    // TIES): Spark has no WITH TIES — lower onto rank() over the same ORDER
-    // BY around the whole query body. Applies to a trailing
-    // `ORDER BY … FETCH FIRST n ROWS WITH TIES`.
-    s = replaceMasked(s,
-      "(?is)^(.*?)\\s*ORDER\\s+BY\\s+(.+?)\\s+FETCH\\s+FIRST\\s+(\\d+)\\s+ROWS\\s+WITH\\s+TIES\\s*$".r)(
-      (m, g) =>
-        s"SELECT * EXCEPT(__tie_rank) FROM (SELECT *, rank() OVER (ORDER BY ${g(2)}) AS __tie_rank " +
-          s"FROM (${g(1)}) __fft) WHERE __tie_rank <= ${g(3)} ORDER BY ${g(2)}")
-    s = replaceMasked(s, "(?i)FETCH\\s+FIRST\\s+(\\d+)\\s+ROWS\\s+ONLY".r)(
-      (m, g) => s"LIMIT ${g(1)}")
-    // expr AT TIME ZONE 'z' (reference SqlBase.g4 valueExpression AT TIME
-    // ZONE): instant-preserving display-zone change. Spark timestamps are
-    // instants rendered in the session zone (UTC here), so the wall-clock in
-    // zone z is from_utc_timestamp. Subset: the operand is an identifier or
-    // a parenthesized/call expression directly before the operator.
-    s = replaceMasked(s,
-      "(?i)(\\w+(?:\\([^()]*\\))?)\\s+AT\\s+TIME\\s+ZONE\\s+('[^']+')".r)(
-      (m, g) => s"from_utc_timestamp(${g(1)}, ${g(2)})")
-    s
-  }
-
-  /** Rewrite every TRY(...) by recursively lowering its (balanced) body. */
-  private def rewriteTry(sql: String): String = {
-    val masked = maskLiterals(sql)
-    val out = new StringBuilder
-    var i = 0
-    val upper = masked.toUpperCase
-    while (i < sql.length) {
-      val at = upper.indexOf("TRY", i)
-      val isWord = at >= 0 &&
-        (at == 0 || !Character.isLetterOrDigit(masked(at - 1)) && masked(at - 1) != '_') &&
-        masked.drop(at + 3).dropWhile(_.isWhitespace).headOption.contains('(') &&
-        !upper.startsWith("TRY_CAST", at) // already Spark-compatible
-      if (at < 0) { out.append(sql.substring(i)); i = sql.length }
-      else if (!isWord) { out.append(sql.substring(i, at + 3)); i = at + 3 }
-      else {
-        out.append(sql.substring(i, at))
-        val open = masked.indexOf('(', at)
-        val close = matchParen(masked, open)
-        val body = sql.substring(open + 1, close).trim
-        out.append(lowerTryTop(body))
-        i = close + 1
-      }
-    }
-    out.toString
-  }
-
-  /** Single-call TRY(f(x)) mappings: Spark try_ twins plus the engine's
-    * null-on-error SQL/JSON expressions. */
-  private val tryFnMap = Map(
-    "element_at" -> "try_element_at",
-    "to_number" -> "try_to_number",
-    "to_timestamp" -> "try_to_timestamp",
-    "to_binary" -> "try_to_binary",
-    "url_decode" -> "try_url_decode",
-    "parse_json" -> "try_parse_json",
-    "json_value" -> "json_path_value",
-    "json_query" -> "json_path_query")
-
-  /** Top-level TRY entry: a body that nothing in the recursive lowering could
-    * absorb is a user error (silently dropping TRY would change semantics). */
-  private def lowerTryTop(body0: String): String = {
-    val body = stripOuterParens(body0.trim)
-    val lowered = lowerTryBody(body)
-    if (lowered == body) throw new IllegalArgumentException(
-      s"TRY($body0): unsupported body — the dialect layer lowers TRY over " +
-        "arithmetic (try_add/subtract/multiply/divide/mod), CAST, and the " +
-        s"function table ${tryFnMap.keys.toSeq.sorted.mkString("/")}")
-    lowered
-  }
-
-  /** Recursive TRY lowering: split on the lowest-precedence top-level
-    * arithmetic operator first (so every level of the expression gets its
-    * try_ twin), then single-call forms. */
-  private def lowerTryBody(body0: String): String = {
-    val body = stripOuterParens(body0.trim)
-    val masked = maskLiterals(body)
-    topLevelOp(masked, Seq('+', '-')).orElse(topLevelOp(masked, Seq('*', '/', '%'))) match {
-      case Some(at) =>
-        val fn = body(at) match {
-          case '+' => "try_add"
-          case '-' => "try_subtract"
-          case '*' => "try_multiply"
-          case '/' => "try_divide"
-          case '%' => "try_mod"
-        }
-        s"$fn(${lowerTryBody(body.substring(0, at))}, ${lowerTryBody(body.substring(at + 1))})"
-      case None =>
-        val u = masked.toUpperCase
-        if (u.startsWith("CAST") && u.drop(4).dropWhile(_.isWhitespace).headOption.contains('(')) "TRY_" + body
-        else "(?i)^(\\w+)\\s*\\(".r.findFirstMatchIn(masked) match {
-          case Some(m) if matchParen(masked, masked.indexOf('(', m.start)) == masked.length - 1 =>
-            tryFnMap.get(m.group(1).toLowerCase) match {
-              case Some(mapped) => mapped + body.substring(masked.indexOf('(', m.start))
-              case None => body // plain operand inside a lowered arithmetic level
-            }
-          case _ => body
-        }
-    }
-  }
-
-  /** TRY body operands recurse through lowerTryBody; a bare operand with no
-    * mappable structure is returned unchanged, but a WHOLE body that nothing
-    * matched is a user error — checked here at the top entry. */
-  private def stripOuterParens(s: String): String = {
-    val masked = maskLiterals(s)
-    if (s.startsWith("(") && matchParen(masked, 0) == s.length - 1)
-      stripOuterParens(s.substring(1, s.length - 1).trim)
-    else s
-  }
-
-  /** Rightmost position of one of `ops` at paren-depth 0 that is a BINARY
-    * operator (preceded by an operand, so unary minus/plus stay put). */
-  private def topLevelOp(masked: String, ops: Seq[Char]): Option[Int] = {
-    var depth = 0
-    var found = -1
-    var i = 0
-    while (i < masked.length) {
-      masked(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case c if depth == 0 && ops.contains(c) =>
-          val prev = masked.substring(0, i).reverse.dropWhile(_.isWhitespace).headOption
-          val binary = prev.exists(p => p.isLetterOrDigit || p == '_' || p == ')' || p == '\'' || p == '"' || p == '\u0001')
-          if (binary) found = i
-        case _ =>
-      }
-      i += 1
-    }
-    if (found >= 0) Some(found) else None
-  }
-
-  /** Index of the ')' matching the '(' at `open` (call on MASKED text). */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open
-    while (i < s.length) {
-      if (s(i) == '(') depth += 1
-      else if (s(i) == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens in: $s")
   }
 }

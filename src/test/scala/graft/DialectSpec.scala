@@ -1,54 +1,59 @@
 package graft
 
-import graft.sqlx.TrinoDialect
+import graft.sqlx.{SqlFrontend, SqlParser, TrinoDialect}
 
-/** Unit semantics of the Trino-dialect pre-rewriter (graft.sqlx.TrinoDialect)
-  * and the ALL ROWS PER MATCH operator surface. */
+/** Unit semantics of the Trino-dialect front door (graft.sqlx.SqlParser →
+  * SqlFrontend's rewrite passes) and the ALL ROWS PER MATCH operator
+  * surface. */
 class DialectSpec extends SparkSpec {
 
+  /** Spark SQL the front door renders for `sql` after its rewrite passes. */
+  private def lowered(sql: String): String =
+    SqlFrontend.renderQuery(SqlFrontend.rewriteQuery(new SqlParser(sql).parseQuery()))
+
   test("TRY lowering classifies cast / element_at / division bodies") {
-    assert(TrinoDialect.rewrite("SELECT TRY(CAST(x AS INT)) FROM t")
+    assert(lowered("SELECT TRY(CAST(x AS INT)) FROM t")
       .contains("TRY_CAST(x AS INT)"))
-    assert(TrinoDialect.rewrite("SELECT TRY(element_at(a, 5)) FROM t")
+    assert(lowered("SELECT TRY(element_at(a, 5)) FROM t")
       .contains("try_element_at(a, 5)"))
-    assert(TrinoDialect.rewrite("SELECT TRY(a / b) FROM t")
+    assert(lowered("SELECT TRY(a / b) FROM t")
       .contains("try_divide(a, b)"))
     // recursive lowering: every arithmetic level and the CAST get try_ twins
-    assert(TrinoDialect.rewrite("SELECT TRY(CAST(a AS INT) / (b - 1)) FROM t")
+    assert(lowered("SELECT TRY(CAST(a AS INT) / (b - 1)) FROM t")
       .contains("try_divide(TRY_CAST(a AS INT), try_subtract(b, 1))"))
     // already-Spark TRY_CAST is left alone
-    assert(TrinoDialect.rewrite("SELECT TRY_CAST(x AS INT) FROM t")
+    assert(lowered("SELECT TRY_CAST(x AS INT) FROM t")
       .contains("TRY_CAST(x AS INT)"))
     intercept[IllegalArgumentException] {
-      TrinoDialect.rewrite("SELECT TRY(some_udf(x)) FROM t")
+      lowered("SELECT TRY(some_udf(x)) FROM t")
     }
     // function-table bodies: Spark try_ twins and null-on-error SQL/JSON
-    assert(TrinoDialect.rewrite("SELECT TRY(to_number(s, '999')) FROM t")
+    assert(lowered("SELECT TRY(to_number(s, '999')) FROM t")
       .contains("try_to_number(s, '999')"))
-    assert(TrinoDialect.rewrite("SELECT TRY(json_value(j, 'strict $.a')) FROM t")
+    assert(lowered("SELECT TRY(json_value(j, 'strict $.a')) FROM t")
       .contains("json_path_value(j, 'strict $.a')"))
   }
 
   test("rewrites are literal-aware: function names and slashes inside strings survive") {
-    val s1 = TrinoDialect.rewrite("SELECT 'call format(x)' AS doc, format('%s', a) FROM t")
+    val s1 = lowered("SELECT 'call format(x)' AS doc, format('%s', a) FROM t")
     assert(s1.contains("'call format(x)'"), s1)
     assert(s1.contains("format_string('%s', a)"), s1)
     // a paren/slash inside a literal must not confuse the TRY classifier
-    val s2 = TrinoDialect.rewrite("SELECT TRY(concat(a, '(x/y)') / b) FROM t")
+    val s2 = lowered("SELECT TRY(concat(a, '(x/y)') / b) FROM t")
     assert(s2.contains("try_divide(concat(a, '(x/y)'), b)"), s2)
-    // quoted identifiers are opaque too
-    val s3 = TrinoDialect.rewrite("SELECT \"strpos(weird)\" , strpos(s, 'x') FROM t")
-    assert(s3.contains("\"strpos(weird)\""), s3)
+    // quoted identifiers are opaque too (rendered as Spark backticks)
+    val s3 = lowered("SELECT \"strpos(weird)\" , strpos(s, 'x') FROM t")
+    assert(s3.contains("`strpos(weird)`"), s3)
     assert(s3.contains("instr(s, 'x')"), s3)
     // FETCH FIRST inside a literal survives; real one rewrites
-    val s4 = TrinoDialect.rewrite(
+    val s4 = lowered(
       "SELECT 'FETCH FIRST 9 ROWS ONLY' AS note FROM t FETCH FIRST 3 ROWS ONLY")
     assert(s4.contains("'FETCH FIRST 9 ROWS ONLY'"), s4)
     assert(s4.trim.endsWith("LIMIT 3"), s4)
   }
 
   test("function renames are word-bounded and leave look-alikes alone") {
-    val out = TrinoDialect.rewrite(
+    val out = lowered(
       "SELECT format('%s', a), format_datetime(ts, 'y'), date_format(ts, 'y'), strpos(s, 'x') FROM t")
     assert(out.contains("format_string('%s', a)"))
     assert(out.contains("format_datetime(ts, 'y')"))
@@ -57,8 +62,8 @@ class DialectSpec extends SparkSpec {
   }
 
   test("FETCH FIRST and UNNEST rewrites") {
-    assert(TrinoDialect.rewrite("SELECT * FROM t FETCH FIRST 7 ROWS ONLY").contains("LIMIT 7"))
-    val un = TrinoDialect.rewrite("SELECT w FROM t CROSS JOIN UNNEST(split(s, ' ')) AS u (w)")
+    assert(lowered("SELECT * FROM t FETCH FIRST 7 ROWS ONLY").contains("LIMIT 7"))
+    val un = lowered("SELECT w FROM t CROSS JOIN UNNEST(split(s, ' ')) AS u (w)")
     assert(un.contains("LATERAL VIEW explode(split(s, ' ')) u AS w"), un)
   }
 

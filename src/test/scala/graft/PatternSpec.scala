@@ -192,14 +192,13 @@ class PatternSpec extends SparkSpec {
     val df = vals.zipWithIndex.map { case (v, i) => (1L, i.toLong, v) }
       .toDF("user_id", "event_id", "value")
 
-    def run(window: String): Seq[Option[Long]] = {
-      val mw = graft.sqlx.MatchWindowSql.parse(
+    df.createOrReplaceTempView("pw_t")
+
+    def run(window: String): Seq[Option[Long]] =
+      graft.sqlx.SqlFrontend.run(spark, sfDir,
         s"""SELECT user_id, event_id, m OVER w AS m FROM pw_t WINDOW w AS ($window)""")
-        .getOrElse(fail("window spec did not parse"))
-      graft.sqlx.MatchWindowSql.lowerDf(df, mw)
         .orderBy("event_id").collect()
         .map(r => if (r.isNullAt(2)) None else Some(r.getLong(2))).toSeq
-    }
 
     val core = """PARTITION BY user_id ORDER BY event_id
       MEASURES COUNT(D.*) AS m"""
@@ -251,18 +250,16 @@ class PatternSpec extends SparkSpec {
     val vals = Seq(9.0, 8.0, 7.0, 6.0, 5.0)
     val df = vals.zipWithIndex.map { case (v, i) => (1L, i.toLong, v) }
       .toDF("user_id", "event_id", "value")
-    def run(pattern: String): Seq[Option[Long]] = {
-      val mw = graft.sqlx.MatchWindowSql.parse(
+    df.createOrReplaceTempView("pw_t")
+    def run(pattern: String): Seq[Option[Long]] =
+      graft.sqlx.SqlFrontend.run(spark, sfDir,
         s"""SELECT user_id, event_id, m OVER w AS m FROM pw_t WINDOW w AS (
             PARTITION BY user_id ORDER BY event_id
             MEASURES COUNT(D.*) AS m
             PATTERN ($pattern)
             DEFINE D AS value < PREV(abs(value), 2))""")
-        .getOrElse(fail("window spec did not parse"))
-      graft.sqlx.MatchWindowSql.lowerDf(df, mw)
         .orderBy("event_id").collect()
         .map(r => if (r.isNullAt(2)) None else Some(r.getLong(2))).toSeq
-    }
     // D at view position 1 reads PREV(…, 2) BELOW the frame start → NULL →
     // never matches (the mis-routed stateless path would read the partition
     // value at i-1 and match from the second anchor on)
@@ -278,10 +275,11 @@ class PatternSpec extends SparkSpec {
     val vals = Seq(9.0, 8.0, 7.0, 6.0, 5.0, 9.0, 4.0, 3.0)
     val df = vals.zipWithIndex.map { case (v, i) => (1L, i.toLong, v) }
       .toDF("user_id", "event_id", "value")
-    val mw = graft.sqlx.MatchWindowSql.parse(
+    df.createOrReplaceTempView("pw_t")
+    val out = graft.sqlx.SqlFrontend.run(spark, sfDir,
       """SELECT event_id, m OVER w1 AS m, sum(value) OVER w2 AS dsum,
                 sum(value) OVER w3 AS rsum
-         FROM t WINDOW
+         FROM pw_t WINDOW
          w1 AS (PARTITION BY user_id ORDER BY event_id
            MEASURES COUNT(D.*) AS m
            AFTER MATCH SKIP TO NEXT ROW
@@ -292,8 +290,6 @@ class PatternSpec extends SparkSpec {
            PATTERN (A D D) DEFINE D AS value < PREV(value)),
          w3 AS (PARTITION BY user_id ORDER BY event_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""")
-      .getOrElse(fail("multi-window spec did not parse"))
-    val out = graft.sqlx.MatchWindowSql.lowerDf(df, mw)
       .orderBy("event_id").collect()
     def m(i: Int): Option[Long] =
       if (out(i).isNullAt(1)) None else Some(out(i).getLong(1))
@@ -314,19 +310,24 @@ class PatternSpec extends SparkSpec {
       vals8.scanLeft(0.0)(_ + _).tail)
     // unaliased duplicate window-function names fail loudly
     intercept[IllegalArgumentException] {
-      graft.sqlx.MatchWindowSql.parse(
-        """SELECT sum(a) OVER w2, sum(b) OVER w2 FROM t WINDOW
-           w1 AS (PARTITION BY k ORDER BY o MEASURES COUNT(D.*) AS a
-             PATTERN (D) DEFINE D AS v > 0),
-           w2 AS (PARTITION BY k ORDER BY o)""")
+      graft.sqlx.SqlFrontend.run(spark, sfDir,
+        """SELECT sum(value) OVER w2, sum(event_id) OVER w2 FROM pw_t WINDOW
+           w1 AS (PARTITION BY user_id ORDER BY event_id MEASURES COUNT(D.*) AS a
+             PATTERN (D) DEFINE D AS value > 0),
+           w2 AS (PARTITION BY user_id ORDER BY event_id)""")
     }
     // a paren inside a quoted literal no longer miscounts the window-block
     // splitter's depth
-    val quoted = graft.sqlx.MatchWindowSql.parse(
+    val quoted = new graft.sqlx.SqlParser(
       """SELECT m OVER w1 AS m FROM t WINDOW
          w1 AS (PARTITION BY k ORDER BY o MEASURES COUNT(D.*) AS m
-           PATTERN (D) DEFINE D AS v <> '(')""")
-    assert(quoted.isDefined && quoted.get.windows.size == 1)
+           PATTERN (D) DEFINE D AS v <> '(')""").parseQuery()
+    quoted match {
+      case s: graft.sqlx.SqlAst.Select =>
+        assert(s.windows.flatMap(_._2.rowPattern)
+          .map(_.trim.endsWith("DEFINE D AS v <> '('")) == Seq(true))
+      case other => fail(s"expected a SELECT, got $other")
+    }
   }
 
   test("row-pattern window spec: CLASSIFIER and multi-symbol measures") {

@@ -583,6 +583,24 @@ class RoutineSpec extends SparkSpec {
     assert(rows.getLong(1) == -1L)
   }
 
+  test("RETURN bodies lower through the front-door AST passes (strpos, format, TRY)") {
+    val body = "format('%s:%s', strpos(s, 'x'), TRY(10 / d))"
+    sql(s"""CREATE OR REPLACE FUNCTION t_lowered(s varchar, d bigint) RETURNS varchar
+            RETURN $body""")
+    sql(s"""CREATE OR REPLACE FUNCTION t_lowered_block(s varchar, d bigint) RETURNS varchar
+            BEGIN
+              DECLARE r varchar DEFAULT $body;
+              RETURN r;
+            END""")
+    def rows(select: String): Seq[String] =
+      sql(s"SELECT $select AS r FROM (VALUES ('axe', 2), ('none', 0)) AS t(s, d) ORDER BY s")
+        .collect().map(_.getString(0)).toSeq
+    val direct = rows(body)
+    assert(direct == Seq("2:5.0", "0:null"))
+    assert(rows("t_lowered(s, d)") == direct)
+    assert(rows("t_lowered_block(s, d)") == direct)
+  }
+
   test("CASE expression inside a routine expression does not confuse THEN/END scanning") {
     sql("""CREATE OR REPLACE FUNCTION t_casescan(x bigint) RETURNS varchar
            BEGIN

@@ -57,13 +57,78 @@ class SqlParserSpec extends SparkSpec {
     assert(s.contains("(((1 + (2 * 3)) - 4) = 3)"), s)
   }
 
-  test("parser fallback: statements outside the grammar still execute") {
-    // LATERAL VIEW is Spark syntax the Trino grammar doesn't have — the
-    // front door rejects it and TrinoDialect falls back to the legacy layer
-    val df = graft.sqlx.TrinoDialect.sql(spark, sfDir,
-      "SELECT n_name, w FROM nation LATERAL VIEW explode(split(n_name, '_')) t AS w " +
-        "WHERE n_nationkey = 0")
-    assert(df.count() >= 1)
+  test("LATERAL VIEW (Spark-only syntax) is rejected with SqlParseException") {
+    // a syntax error in Trino; the grammar is the only front door, so the
+    // text never reaches Spark's own parser
+    intercept[SqlParseException] {
+      graft.sqlx.TrinoDialect.sql(spark, sfDir,
+        "SELECT n_name, w FROM nation LATERAL VIEW explode(split(n_name, '_')) t AS w " +
+          "WHERE n_nationkey = 0")
+    }
+  }
+
+  test("row patterns lex: {n,m} quantifiers, alternation and anchors in MATCH_RECOGNIZE") {
+    new SqlParser(
+      """SELECT * FROM events MATCH_RECOGNIZE (
+           PARTITION BY user_id ORDER BY event_id
+           MEASURES COUNT(D.*) AS nd
+           PATTERN (^ (D | E){2,3}? $)
+           DEFINE D AS value < PREV(value), E AS value > 0)""").parseQuery() match {
+      case s: SqlAst.Select => s.from match {
+        case Some(SqlAst.MatchRel(SqlAst.TableRef(_, None), block, None)) =>
+          assert(block.contains("PATTERN (^ (D | E){2,3}? $)"), block)
+        case other => fail(s"expected a MATCH_RECOGNIZE relation, got $other")
+      }
+      case other => fail(s"unexpected parse: $other")
+    }
+  }
+
+  test("row-pattern WINDOW: `m OVER w` items and a MEASURES … PATTERN window spec") {
+    new SqlParser(
+      """SELECT user_id, nd OVER w AS n_down, sum(value) OVER p AS s
+         FROM events
+         WINDOW w AS (PARTITION BY user_id ORDER BY event_id
+                      MEASURES COUNT(D.*) AS nd
+                      PATTERN (A D+) DEFINE D AS value < PREV(value)),
+                p AS (PARTITION BY user_id ORDER BY event_id)""").parseQuery() match {
+      case s: SqlAst.Select =>
+        assert(s.items(1) == SqlAst.SelectItem(SqlAst.MeasureRef("nd", "w"), Some("n_down")))
+        val Seq((w, pattern), (p, plain)) = s.windows
+        assert(w == "w" && p == "p")
+        assert(pattern.rowPattern.exists(_.contains("PATTERN (A D+)")), pattern)
+        assert(plain.rowPattern.isEmpty && plain.partitionBy.nonEmpty, plain)
+      case other => fail(s"unexpected parse: $other")
+    }
+  }
+
+  test("table functions take named TABLE(…) and DESCRIPTOR(…) arguments") {
+    new SqlParser(
+      """SELECT * FROM TABLE(exclude_columns(
+           input => TABLE(nation), columns => DESCRIPTOR(n_name, n_regionkey)))""")
+      .parseQuery() match {
+      case s: SqlAst.Select => assert(s.from.contains(SqlAst.TvfRel("exclude_columns",
+        Seq(Some("input") -> SqlAst.TableArg(SqlAst.TableRef(SqlAst.Id(Seq(("nation", false))), None)),
+          Some("columns") -> SqlAst.DescriptorArg(Seq("n_name", "n_regionkey"))), None)))
+      case other => fail(s"unexpected parse: $other")
+    }
+    def exclude(cols: String) = graft.sqlx.TrinoDialect.sql(spark, sfDir,
+      s"SELECT * FROM TABLE(exclude_columns(input => TABLE(nation), columns => DESCRIPTOR($cols)))")
+    assert(exclude("n_name").columns.toSeq == Seq("n_nationkey", "n_regionkey"))
+    val all = spark.table("nation").columns.mkString(", ")
+    Seq("nope" -> "column 'nope' is not in table 'nation'",
+      "" -> "must name at least one column",
+      all -> "cannot exclude every column").foreach { case (cols, msg) =>
+      val e = intercept[IllegalArgumentException](exclude(cols))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
+
+  test("bare VALUES rows are single-column rows") {
+    assert(new SqlParser("VALUES 1, 2 + 3").parseQuery() == SqlAst.ValuesQ(Seq(
+      Seq(SqlAst.Lit("1")), Seq(SqlAst.Bin("+", SqlAst.Lit("2"), SqlAst.Lit("3"))))))
+    val got = SqlFrontend.run(spark, sfDir,
+      "SELECT v FROM (VALUES 0, 1, 7) AS t(v) ORDER BY v").collect().map(_.getInt(0))
+    assert(got.toSeq == Seq(0, 1, 7))
   }
 
   test("string and identifier edge cases survive the roundtrip") {

@@ -46,6 +46,9 @@ class StatementServerSpec extends SparkSpec
   override def afterAll(): Unit = handle.stop()
 
   /** The reference client loop: POST, then follow nextUri, collecting data. */
+  /** errorName of the last statement runStatement saw fail. */
+  private var lastErrorName: Option[String] = None
+
   private def runStatement(sql: String):
       (Seq[(String, String)], Seq[Seq[Any]], Option[String]) = {
     var resp = http.send(
@@ -85,7 +88,9 @@ class StatementServerSpec extends SparkSpec
         case _ =>
       }
       json \ "error" \ "message" match {
-        case JString(m) => error = Some(m)
+        case JString(m) =>
+          error = Some(m)
+          lastErrorName = Some((json \ "error" \ "errorName").values.toString)
         case _ =>
       }
       json \ "nextUri" match {
@@ -146,6 +151,7 @@ class StatementServerSpec extends SparkSpec
   test("a broken statement surfaces an error, not a hang") {
     val (_, _, err) = runStatement("SELECT FROM WHERE")
     assert(err.nonEmpty)
+    assert(lastErrorName.contains("SYNTAX_ERROR"), lastErrorName)
   }
 
   private def getJson(path: String): (Int, JValue) = {

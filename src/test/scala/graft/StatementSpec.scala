@@ -339,7 +339,9 @@ class StatementSpec extends SparkSpec {
       sql("SELECT count(*) AS n FROM st_call").collect()
     }
     sql("CALL system.flush_metadata_cache()")
-    intercept[Exception] { sql("CALL system.no_such_proc()") }
+    val unknown = intercept[IllegalArgumentException] { sql("CALL system.no_such_proc()") }
+    assert(unknown.getMessage.contains("procedure 'system.no_such_proc' is not registered"),
+      unknown.getMessage)
     sql("DROP TABLE IF EXISTS st_call")
   }
 

@@ -49,6 +49,25 @@ class TextKernelFusionSpec extends SparkSpec {
     assertFusedMatchesLegacy(edge)
   }
 
+  test("fused signature equals the shingles3 → concat_ws spelling on token arrays with nulls") {
+    // concat_ws / array_join skip a null token AND its separator; the fused
+    // kernel's window join must too (a null inside the first window, at
+    // both ends, a short doc, an all-null window)
+    val toks = Seq(
+      Seq("a", null, "b", "c"),
+      Seq(null, "x", "y", "z", null),
+      Seq("p", null),
+      Seq[String](null, null, null),
+      Seq("a", "b", "c", "d")).toDF("toks")
+    val rows = toks
+      .select(minhashSignature(shingles3($"toks"), K).as("legacy"),
+        minhashShinglesSig($"toks", K).as("ss"))
+      .select($"legacy", $"ss.sig").collect()
+    rows.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"sig mismatch at row $i")
+    }
+  }
+
   test("keyed materialized evicts the previous invocation's cache entry") {
     // plans embedding per-invocation driver-collected literals (ngram's
     // stop-shingle array, contamination's bench set) canonicalize
