@@ -86,11 +86,8 @@ final class CowTable private (root0: String, spark: SparkSession) {
     *    (DPP) filters prune partitions/buckets at execution, and a fresh
     *    single-file-per-bucket generation also reports its sort order. No
     *    directory materialization, no catalog DDL, no per-version entries.
-    *  - The pre-r17 DIRECTORY-VIEW mode (hardlink-carried `data/v<N>/`
-    *    snapshot dirs + a re-pointed session-catalog CLUSTERED BY entry)
-    *    remains behind `spark.graft.cow.legacyDirView` — see
-    *    `legacyDirView` below. Schema-evolved snapshots fall back to the
-    *    manifest file-list read (correct, unbucketed) in both modes.
+    *    Schema-evolved snapshots fall back to the manifest file-list read
+    *    (correct, unbucketed).
     *
     * The bucket count is fixed at CREATE — the classic bucketed-table
     * trade; pick it for the target scale (buckets ≈ cluster cores at the
@@ -110,79 +107,19 @@ final class CowTable private (root0: String, spark: SparkSession) {
     }
   }
 
-  /** Stored schema DDL (written at CREATE) — the catalog registration for
-    * bucketed tables needs an explicit schema even when the first snapshot
-    * is empty. */
+  /** Stored schema DDL (written at CREATE): a bucketed table's declared
+    * schema, known even when the first snapshot is empty. */
   private def storedSchemaDdl: String =
     new String(Files.readAllBytes(Paths.get(root, "_table_schema"))).trim
 
-  /** Session-catalog name of the bucketed directory view; derived from the
-    * table root so every session lands on the same entry. */
+  /** Stable per-table name derived from the table root: prefixes the
+    * staging catalog entry of a bucketed write and names the table in its
+    * skew warning. */
   private[catalog] def catalogName: String =
     "cow_bkt_" + java.lang.Long.toHexString(
       root.getBytes("UTF-8").foldLeft(1125899906842597L)((h, b) => 31 * h + b) & Long.MaxValue)
 
   private def versionDir(v: Int): Path = dataDir.resolve(s"v$v")
-
-  /** LEGACY directory-view mode (pre-r17): bucketed snapshots are served
-    * through a session-catalog CLUSTERED BY entry over a complete version
-    * DIRECTORY maintained by hardlink carry. The default since r17 is the
-    * DSv2 manifest path ([[CowDsv2]]): KeyGroupedPartitioning straight from
-    * the manifest — no directory materialization (commit cost drops from
-    * O(file census) to O(files touched)), no catalog DDL per read, no
-    * per-version entries for time travel. The flag exists for comparison
-    * and rollback; a table must be written AND read in one mode (the
-    * directory view is only complete when commits carry hardlinks). */
-  private def legacyDirView: Boolean =
-    spark.conf.getOption("spark.graft.cow.legacyDirView").contains("true")
-
-  /** Register or re-point the catalog table at `dir` (the current
-    * snapshot), then refresh cached listings. Skipped entirely when the
-    * entry already serves `version` — repeated reads of an unchanged table
-    * must not pay catalog DDL (r16 judge "What's wrong" #1). */
-  private def syncCatalog(dir: Path, version: Int): Unit = {
-    if (!CowTable.syncedVersions.get(catalogName).contains(version) ||
-        !spark.catalog.tableExists(catalogName)) {
-      registerEntry(catalogName, dir, repoint = true)
-      CowTable.syncedVersions.put(catalogName, version)
-      ()
-    }
-  }
-
-  /** Create (or re-point) a CLUSTERED BY catalog entry named `name` at
-    * `dir`. A PARTITIONED table is DROPPED and recreated on every re-point
-    * rather than ALTER TABLE SET LOCATION + RECOVER PARTITIONS: RECOVER
-    * only ADDs partitions, so on any catalog that tracks per-partition
-    * locations (e.g. a Hive metastore) pre-existing partitions would keep
-    * pointing at the PREVIOUS version directory, resurrecting deleted
-    * rows. Drop+recreate is correct on every catalog; the entry is
-    * metadata-only, so the cost is one round trip. */
-  private def registerEntry(name: String, dir: Path, repoint: Boolean): Unit =
-    bucketing.foreach { b =>
-      Files.createDirectories(dir)
-      val exists = spark.catalog.tableExists(name)
-      if (exists && repoint && partitioning.nonEmpty) {
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        ()
-      }
-      if (!spark.catalog.tableExists(name)) {
-        val sorted =
-          if (b.sortCols.nonEmpty) s"SORTED BY (${b.sortCols.mkString(", ")}) " else ""
-        val parted =
-          if (partitioning.nonEmpty) s"PARTITIONED BY (${partitioning.mkString(", ")}) " else ""
-        spark.sql(
-          s"CREATE TABLE $name (${storedSchemaDdl}) USING PARQUET " +
-            s"${parted}CLUSTERED BY (${b.cols.mkString(", ")}) ${sorted}INTO ${b.count} BUCKETS " +
-            s"LOCATION '$dir'")
-        ()
-      } else if (repoint) {
-        spark.sql(s"ALTER TABLE $name SET LOCATION '$dir'")
-        ()
-      }
-      // hive-partitioned layout: the (fresh) entry discovers its partitions
-      if (partitioning.nonEmpty) spark.sql(s"ALTER TABLE $name RECOVER PARTITIONS")
-      spark.catalog.refreshTable(name)
-    }
 
   /** File-list read that recovers partition columns when partitioned. */
   private def readFiles(files: Seq[String], mergeSchema: Boolean = false): DataFrame = {
@@ -313,7 +250,7 @@ final class CowTable private (root0: String, spark: SparkSession) {
     * partition directories (one write job emits the same
     * part-<task>-<uuid>_<bucket> name under every col=value/ dir), so their
     * identity is the path RELATIVE to the version directory — which the
-    * hardlink carry preserves across versions. Computed relative to this
+    * carried files keep across versions. Computed relative to this
     * table's dataDir, never by pattern-matching the whole absolute path: a
     * warehouse root that itself contains a `/v<digits>/` segment (e.g.
     * `/srv/v2/warehouse`) must not corrupt identities. */
@@ -341,8 +278,8 @@ final class CowTable private (root0: String, spark: SparkSession) {
   /** Marker: some committed file generation's column set/types differ from
     * `_table_schema` (ALTER ADD COLUMN + INSERT, RENAME, …). While set,
     * bucketed reads fall back to the manifest file-list (mergeSchema-
-    * capable, correct, NOT bucket-aware) instead of the catalog entry,
-    * whose frozen schema would silently NULL the evolved columns. A full
+    * capable, correct, NOT bucket-aware) instead of the DSv2 bucketed scan,
+    * whose declared schema would silently NULL the evolved columns. A full
     * `replace` (one consistent generation — e.g. SET DATA TYPE's rewrite)
     * refreshes `_table_schema` and clears the marker, restoring the
     * bucket-aware fast path. */
@@ -369,35 +306,15 @@ final class CowTable private (root0: String, spark: SparkSession) {
     * schema — the default read keeps the single-footer fast path.
     *
     * Bucketed tables serve BOTH current and time-travel reads through
-    * CLUSTERED BY catalog entries (HashPartitioning + bucket pruning) as
-    * long as the schema has not evolved: the current snapshot through the
-    * re-pointed main entry, a past version through an immutable per-version
-    * entry over its hardlink-carried directory (`data/v<N>/` — complete by
-    * construction while its manifest exists; vacuum removes the manifests
-    * of expired versions first, so a registered-but-expired version fails
-    * loudly at the manifest check, never reads a partial directory). */
+    * [[CowDsv2]] (bucket-aware partitioning and pruning straight from the
+    * manifest, zero catalog DDL) for any version whose manifest exists and
+    * which the declared schema still describes (`schemaFloor`, no
+    * evolution); other versions take the manifest file-list read. */
   def read(asOfVersion: Option[Int] = None, mergeSchema: Boolean = false): DataFrame = {
     if (bucketing.isDefined && !schemaEvolved) {
       val v = asOfVersion.getOrElse(currentVersion)
-      if (!legacyDirView) {
-        // DSv2 manifest path (default since r17): ANY version whose manifest
-        // exists and which the declared schema still describes is served
-        // bucket-aware with zero catalog DDL and zero directory state
-        if (v >= schemaFloor && Files.isDirectory(manifestDir.resolve(s"v$v")))
-          return CowDsv2.table(spark, root, v)
-      } else asOfVersion match {
-        case None =>
-          syncCatalog(versionDir(currentVersion), v)
-          return spark.table(catalogName)
-        case Some(_)
-          if v >= schemaFloor &&
-            Files.isDirectory(manifestDir.resolve(s"v$v")) &&
-            Files.isDirectory(versionDir(v)) =>
-          val name = s"${catalogName}_v$v"
-          registerEntry(name, versionDir(v), repoint = false)
-          return spark.table(name)
-        case _ => // expired/foreign version: manifest file-list path below
-      }
+      if (v >= schemaFloor && Files.isDirectory(manifestDir.resolve(s"v$v")))
+        return CowDsv2.table(spark, root, v)
     }
     val files = manifestFiles(asOfVersion.getOrElse(currentVersion))
     if (files.isEmpty) spark.emptyDataFrame
@@ -534,16 +451,12 @@ final class CowTable private (root0: String, spark: SparkSession) {
   def replace(df: DataFrame): Unit = {
     import spark.implicits._
     // a replace publishes ONE consistent file generation: refresh the
-    // declared bucketed-table schema to df's, drop the (stale-schema)
-    // catalog entry so syncCatalog recreates it, and clear the evolution
+    // declared bucketed-table schema to df's and clear the evolution
     // marker — the bucket-aware fast path is valid again
     val schemaChanged = bucketing.isDefined && schemaSig(df.schema) !=
       schemaSig(org.apache.spark.sql.types.StructType.fromDDL(storedSchemaDdl))
-    if (schemaChanged) {
+    if (schemaChanged)
       Files.write(Paths.get(root, "_table_schema"), df.schema.toDDL.getBytes)
-      spark.sql(s"DROP TABLE IF EXISTS $catalogName")
-      ()
-    }
     val newFiles = writeData(df)
     val (_, v) = commit(Seq.empty[String].toDF("path"), newFiles, "main")
     // versions BELOW the floor predate the current declared schema — time
@@ -890,38 +803,8 @@ final class CowTable private (root0: String, spark: SparkSession) {
       Files.write(manifestDir.resolve(s"v$v").resolve(t), Array.emptyByteArray)
       ()
     }
-    if (bucketing.isDefined && legacyDirView) {
-      // LEGACY directory view: publish a complete snapshot DIRECTORY —
-      // carried files hardlink in (metadata-only, names preserved so bucket
-      // ids survive), staged files move in. The carried list lands on the
-      // driver here; that is inherent to maintaining a local-FS directory
-      // view (one link(2) per carried file — O(file census) PER COMMIT,
-      // copies on stores without hardlinks). The default DSv2 manifest path
-      // below has neither cost.
-      val dir = versionDir(v)
-      Files.createDirectories(dir)
-      val carriedPaths = carriedDf.select("path").collect().map(_.getString(0))
-      val outCarried = carriedPaths.map { pth =>
-        val dest = dir.resolve(relOf(pth))
-        Option(dest.getParent).foreach(Files.createDirectories(_))
-        try Files.createLink(dest, Paths.get(pth))
-        catch { // FS without hardlinks: fall back to a copy
-          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-            Files.copy(Paths.get(pth), dest, StandardCopyOption.REPLACE_EXISTING)
-        }
-        dest.toString
-      }
-      val outNew = newFiles.map(moveStaged(_, dir))
-      (outCarried ++ outNew).toSeq.toDF("path")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(manifestDir.resolve(s"v$v").toString)
-      writeTag()
-      setHead(branch, v)
-      if (branch.equalsIgnoreCase("main")) syncCatalog(dir, v)
-      return (outCarried.length.toLong, v)
-    }
     if (bucketing.isDefined) {
-      // DSv2 manifest commit (default): staged files move into data/v<N>/
+      // DSv2 manifest commit: staged files move into data/v<N>/
       // keeping their bucket-id names and partition subdirectories; CARRIED
       // files stay exactly where previous commits put them — the manifest
       // union IS the snapshot, served bucket-aware by CowDsv2. Filesystem
@@ -1128,8 +1011,7 @@ final class CowTable private (root0: String, spark: SparkSession) {
     // recursive: partitioned tables nest files under col=value/ dirs.
     // Liveness compares the same identity the manifests use — the bare
     // uuid name for plain tables, the version-relative path for bucketed
-    // ones (where a live identity keeps its hardlink in EVERY version dir:
-    // extra inode references, zero data bytes).
+    // ones.
     def sweep(p: Path): Unit = {
       if (Files.isDirectory(p)) {
         val it = Files.list(p).iterator()
@@ -1147,11 +1029,6 @@ final class CowTable private (root0: String, spark: SparkSession) {
       if (n.startsWith("v") && n.stripPrefix("v").forall(_.isDigit) &&
           !heads.contains(n.stripPrefix("v").toInt)) {
         deleteRecursively(p); manifestsRemoved += 1
-        // drop the expired version's time-travel catalog entry (its
-        // directory may now be partial; the manifest check in read()
-        // already refuses it — this just avoids accumulating entries)
-        if (bucketing.isDefined)
-          spark.sql(s"DROP TABLE IF EXISTS ${catalogName}_v${n.stripPrefix("v")}")
       }
     }
     (dataRemoved, manifestsRemoved)
@@ -1159,11 +1036,6 @@ final class CowTable private (root0: String, spark: SparkSession) {
 }
 
 object CowTable {
-  /** Version each legacy catalog entry currently serves: repeated reads of
-    * an unchanged table skip the catalog DDL entirely (re-point only on a
-    * version change or a missing entry). */
-  private val syncedVersions = scala.collection.concurrent.TrieMap[String, Int]()
-
   /** Per-file column statistics stored in bucketed manifests (r17):
     * min/max as strings (re-typed at scan), null count, value count. */
   final case class ColStat(min: String, max: String, nulls: Long, cnt: Long)

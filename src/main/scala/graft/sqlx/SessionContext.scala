@@ -9,10 +9,14 @@ package graft.sqlx
   * state — the server echoes `X-Trino-Set-Session` and the client carries
   * the property back on every subsequent request. That design is what makes
   * a fleet of coordinators horizontally scalable, and it is reproduced
-  * here: [[graft.server.StatementServer]] parses the headers into a [[Ctx]]
-  * and executes the statement inside [[SessionContext.within]]; the
-  * front-door readers ([[Statements]] SHOW SESSION / schema resolution,
-  * [[TrinoDialect]] prepared-statement lookup) consult the overlay first.
+  * here: [[graft.server.StatementServer]] parses each request once, answers
+  * the session statements (SET/RESET SESSION [AUTHORIZATION], USE, PREPARE,
+  * DEALLOCATE) from that AST as protocol headers, parses the request
+  * headers into a [[Ctx]] and executes every other statement inside
+  * [[SessionContext.within]]; the front-door readers ([[Statements]] SHOW
+  * SESSION / schema resolution, [[TrinoDialect]] prepared-statement
+  * lookup) consult the overlay first, and [[Statements]] refuses a session
+  * statement that reaches it under a context (EXECUTE of its text).
   *
   * In-process callers (the gate, specs, the Scala API) never set a context,
   * so they keep the JVM-global session semantics they always had. */

@@ -34,8 +34,12 @@ private[graft] object SqlFrontend {
 
   private val viewCounter = new AtomicInteger(0)
 
-  def run(spark: SparkSession, dir: String, text: String): DataFrame = {
-    val parsed = new SqlParser(text).parseQuery()
+  def run(spark: SparkSession, dir: String, text: String): DataFrame =
+    run(spark, dir, new SqlParser(text).parseQuery())
+
+  /** Lower a parsed query (the front door's one parse) to an analyzed
+    * DataFrame. */
+  def run(spark: SparkSession, dir: String, parsed: Query): DataFrame = {
     // row filters / column masks splice in BEFORE planning, so the policy
     // predicate optimizes (and pushes down) like any user WHERE clause
     val secured = SessionContext.enforcedUser

@@ -88,7 +88,7 @@ private[graft] object Statements {
     * matching DML grant (or ownership); DROP/ALTER/COMMENT/GRANT require
     * ownership. In-process callers and admins carry no enforced user, so
     * every historical path is unaffected. */
-  private def accessCheck(st: Statement): Unit = {
+  private[sqlx] def accessCheck(st: Statement): Unit = {
     val user = SessionContext.enforcedUser.getOrElse(return)
     // reference operation names per privilege (OpaAccessControl.java)
     val opaOps = Map("SELECT" -> "SelectFromColumns",
@@ -342,18 +342,6 @@ private[graft] object Statements {
       s"graft_sql_warehouse_${ProcessHandle.current().pid()}")
     Files.createDirectories(p)
     p.toString
-  }
-
-  /** Execute `text` if it parses as a non-query statement; None → caller
-    * runs the ordinary query path. Throws SqlParseException upward only
-    * for statements the grammar doesn't cover at all. */
-  def run(spark: SparkSession, dir: String, text: String): Option[DataFrame] = {
-    val st = new SqlParser(text).parseStatement()
-    accessCheck(st)
-    st match {
-      case QueryStmt(_) => None
-      case other => Some(execute(spark, dir, other))
-    }
   }
 
   private def subquery(spark: SparkSession, dir: String, q: Query): DataFrame = {
@@ -722,7 +710,23 @@ private[graft] object Statements {
     }
   }
 
-  private def execute(spark: SparkSession, dir: String, st: Statement): DataFrame = {
+  /** Execute a parsed non-query statement (TrinoDialect dispatches queries
+    * to SqlFrontend). */
+  private[sqlx] def execute(spark: SparkSession, dir: String, st: Statement): DataFrame = {
+    // SET/RESET SESSION, USE, PREPARE and DEALLOCATE write JVM-global state
+    // below. The statement server answers them from the AST as protocol
+    // headers, so under a request's context they can only arrive nested in
+    // EXECUTE [IMMEDIATE]: refuse them there instead of leaking one
+    // client's session into every other client's.
+    if (SessionContext.current.isDefined) (st match {
+      case SetSessionStmt(k, _) => Some(s"SET SESSION $k")
+      case ResetSessionStmt(k) => Some(s"RESET SESSION $k")
+      case UseStmt(schema) => Some(s"USE $schema")
+      case PrepareStmt(n, _) => Some(s"PREPARE $n")
+      case DeallocateStmt(n) => Some(s"DEALLOCATE PREPARE $n")
+      case _ => None
+    }).foreach(what => throw new IllegalArgumentException(
+      s"$what changes session state: send it as its own statement"))
     // any non-query statement may change what a cached plan would read
     // (DDL/DML/GRANT/...); bumping the epoch on all of them over-invalidates
     // (EXPLAIN/SHOW cost a re-plan) but can never serve stale data. The

@@ -7,8 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference parses its dialect with one grammar
   * (core/trino-grammar/src/main/antlr4/io/trino/grammar/sql/SqlBase.g4);
-  * so does this engine. Every statement goes through SqlParser → Statements
-  * (DML/DDL/SHOW/PREPARE heads) or SqlFrontend (queries: rewrite passes,
+  * so does this engine. Every statement is parsed once by SqlParser, then
+  * dispatched on its AST: non-queries to Statements (DML/DDL/SHOW/PREPARE
+  * heads), queries through the plan cache to SqlFrontend (rewrite passes,
   * planning of MATCH_RECOGNIZE / row-pattern windows / table functions, and
   * rendering to Spark SQL for Catalyst). A text the grammar rejects is a
   * SqlParseException — there is no second, textual parse. What lives here:
@@ -20,16 +21,21 @@ object TrinoDialect {
 
   // PREPARE/EXECUTE/DEALLOCATE statement registry (reference:
   // execution/PrepareTask.java, DeallocateTask.java, grammar EXECUTE …
-  // USING). Session-scope in the reference; JVM-scope here (one engine
-  // session per JVM in this harness).
-  private val prepared = scala.collection.mutable.Map[String, String]()
+  // USING) for in-process callers. Session-scope in the reference; the
+  // statement server keeps it so too (X-Trino-Prepared-Statement headers,
+  // and Statements refuses PREPARE/DEALLOCATE under a request context), so
+  // only in-process callers share this JVM-wide map.
+  private val prepared = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Execute Trino-dialect SQL against the fixture catalog at `dir`. */
-  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
+  /** Execute Trino-dialect SQL against the fixture catalog at `dir`.
+    * `parsed` is `text`'s AST when the caller has parsed it already (the
+    * statement server parses each request once); None parses here. */
+  def sql(spark: SparkSession, dir: String, text: String,
+      parsed: Option[SqlAst.Statement] = None): DataFrame = {
     Statements.logQuery(text) // system.runtime.queries history
     if (graft.functions.SqlRoutines.isCreateFunction(text))
       graft.functions.SqlRoutines.create(spark, text)
-    else sqlDirect(spark, dir, text)
+    else sqlDirect(spark, dir, text, parsed)
   }
 
   /** Named-statement registry lookup. A request-scoped
@@ -44,11 +50,9 @@ object TrinoDialect {
   private[sqlx] def storePrepared(name: String, stmt: String): Unit =
     prepared(name) = stmt.trim
 
-  private[sqlx] def dropPrepared(name: String): Unit = {
-    if (!prepared.contains(name))
+  private[sqlx] def dropPrepared(name: String): Unit =
+    if (prepared.remove(name).isEmpty)
       throw new IllegalArgumentException(s"no prepared statement '$name'")
-    prepared.remove(name)
-  }
 
   /** DESCRIBE INPUT (reference execution/DescribeInputTask.java): lists `?`
     * positions; types are 'unknown' — the reference also reports unknown
@@ -114,7 +118,8 @@ object TrinoDialect {
   /** Front door: the recursive-descent parser (graft.sqlx.SqlParser) with
     * rewrites as AST passes (SqlFrontend) — dialect features compose at any
     * nesting depth. */
-  private def sqlDirect(spark: SparkSession, dir: String, text: String): DataFrame = {
+  private def sqlDirect(spark: SparkSession, dir: String, text: String,
+      parsed: Option[SqlAst.Statement]): DataFrame = {
     graft.sources.Tables.registerAll(spark, dir)
     graft.functions.Registry.registerAll(spark)
     // WITH FUNCTION f(...) RETURNS t RETURN e [, FUNCTION ...] <query>
@@ -125,14 +130,18 @@ object TrinoDialect {
     if ("(?is)^\\s*WITH\\s+FUNCTION\\b".r.findFirstIn(text).isDefined) {
       val (defs, query) = splitInlineFunctions(text)
       defs.foreach(d => graft.functions.SqlRoutines.create(spark, "CREATE " + d))
-      return sqlDirect(spark, dir, query)
+      return sqlDirect(spark, dir, query, None)
     }
-    Statements.run(spark, dir, text) // DML/EXPLAIN/SHOW/DESCRIBE heads
+    val st = parsed.getOrElse(new SqlParser(text).parseStatement())
+    Statements.accessCheck(st)
+    st match {
       // query path: prepared-plan cache (r19) — repeated statement text in
-      // the same session/context/epoch skips parse + rewrite + analysis;
-      // execution still runs from the parquet inputs on every action
-      .getOrElse(PlanCache.cached(spark, dir, text)(
-        SqlFrontend.run(spark, dir, text)))
+      // the same session/context/epoch skips rewrite + analysis; execution
+      // still runs from the parquet inputs on every action
+      case SqlAst.QueryStmt(q) =>
+        PlanCache.cached(spark, dir, text)(SqlFrontend.run(spark, dir, q))
+      case other => Statements.execute(spark, dir, other) // DML/EXPLAIN/SHOW/…
+    }
   }
 
   /** Split `WITH FUNCTION d1 [, FUNCTION d2 ...] <query>` into the routine

@@ -396,7 +396,7 @@ class CowTableSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
     // CoW delete inside one (partition, bucket): untouched files carry by
-    // hardlink, partition dirs preserved; time travel intact
+    // manifest reference, partition dirs preserved; time travel intact
     val before = t.read().count()
     val victims = t.read().filter("cust = 19").count()
     t.delete(org.apache.spark.sql.functions.expr("cust = 19"))
@@ -427,10 +427,10 @@ class CowTableSpec extends SparkSpec {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // FOR VERSION AS OF v1 through the per-version catalog entry: the
-      // hardlink-carried version directory serves a bucket-aware scan, so
-      // the self-join on the bucket key plans ZERO exchanges (r16 — before,
-      // time travel fell back to an unbucketed manifest read)
+      // FOR VERSION AS OF v1 through the DSv2 manifest scan: the past
+      // version serves a bucket-aware scan, so the self-join on the bucket
+      // key plans ZERO exchanges (r16 — before, time travel fell back to an
+      // unbucketed manifest read)
       val past = t.read(asOfVersion = Some(v1))
       assert(past.count() == src.count()) // pre-delete snapshot
       val j = past.as("a").join(past.as("b"), "cust").groupBy("cust").count()
@@ -467,7 +467,7 @@ class CowTableSpec extends SparkSpec {
     // commit cost is O(files touched): the new version directory holds ONLY
     // the rewritten bucket's file — untouched files are carried by manifest
     // REFERENCE and never move, link, or copy (the r16 hardlink census is
-    // gone; it remains only behind spark.graft.cow.legacyDirView)
+    // gone)
     val v2Files = filesUnder(java.nio.file.Paths.get(root, "data", s"v$v2"))
     assert(v2Files.size == 1, s"expected 1 rewritten file in v$v2, got $v2Files")
     val paths = t.manifestDf(v2).select("path").collect().map(_.getString(0))
