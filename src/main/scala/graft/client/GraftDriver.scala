@@ -7,6 +7,8 @@ import java.sql.{Connection, DatabaseMetaData, Driver, DriverPropertyInfo,
 import java.util.Properties
 import java.util.logging.Logger
 
+import scala.jdk.CollectionConverters._
+
 /** JDBC over the statement protocol (reference: client/trino-jdbc —
   * TrinoDriver accepts `jdbc:trino://host:port`, TrinoStatement drives
   * StatementClientV1, TrinoResultSet cursors the concatenated pages). URL:
@@ -18,9 +20,10 @@ import java.util.logging.Logger
   * analytics protocol; like the reference we implement the core and throw
   * SQLFeatureNotSupportedException elsewhere — here via documented
   * reflective proxies (one dispatch map per interface) instead of
-  * hundreds of stub overrides. PreparedStatement binds client-side by
-  * literal substitution (documented subset; the server's own
-  * PREPARE/EXECUTE handles server-side preparation via plain statements).
+  * hundreds of stub overrides. PreparedStatement binds on the server, as
+  * the reference's driver does: the statement text travels in the
+  * connection's `X-Trino-Prepared-Statement` map, and each execution runs
+  * `EXECUTE name USING <literals>`.
   *
   * Registered with DriverManager by
   * `META-INF/services/java.sql.Driver`. */
@@ -141,26 +144,24 @@ object GraftDriver {
     })
   }
 
-  /** Client-side binding: `?` placeholders outside quotes become SQL
-    * literals at execute time. */
+  private val preparedIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Server-side binding: `sql` joins the session's prepared statements
+    * under a fresh name while this PreparedStatement is open; parameters
+    * 1..n travel as the USING literals of an EXECUTE. */
   private def prepared(base: String, conn: Connection, sql: String,
       sess: StatementClient.Session): PreparedStatement = {
     val params = new java.util.HashMap[Int, Any]() // nullable values (setNull)
     val inner = statement(base, conn, sess)
+    val name = s"jdbc_statement_${preparedIds.incrementAndGet()}"
+    sess.prepared(name) = sql
     def bound: String = {
-      val sb = new StringBuilder
-      var i = 0; var inQ = false; var n = 0
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        if (c == '\'') { inQ = !inQ; sb += c }
-        else if (c == '?' && !inQ) {
-          n += 1
-          if (!params.containsKey(n)) throw new SQLException(s"parameter $n not set")
-          sb ++= literal(params.get(n))
-        } else sb += c
-        i += 1
+      val n = params.keySet.asScala.maxOption.getOrElse(0)
+      val lits = (1 to n).map { i =>
+        if (!params.containsKey(i)) throw new SQLException(s"parameter $i not set")
+        literal(params.get(i))
       }
-      sb.toString
+      s"EXECUTE $name" + (if (n == 0) "" else lits.mkString(" USING ", ", ", ""))
     }
     proxy(classOf[PreparedStatement], {
       case ("setObject", Array(i: Integer, v)) => params.put(i, v); ()
@@ -183,7 +184,7 @@ object GraftDriver {
       // plain-Statement methods delegate
       case ("executeQuery", Array(s: String)) => inner.executeQuery(s)
       case ("executeUpdate", Array(s: String)) => inner.executeUpdate(s)
-      case ("close", _) => inner.close(); ()
+      case ("close", _) => sess.prepared.remove(name); inner.close(); ()
       case ("isClosed", _) => inner.isClosed
       case ("getConnection", _) => conn
       case ("getResultSet", _) => inner.getResultSet

@@ -110,16 +110,6 @@ object RoutineLang {
   final case class RRepeat(label: Option[String], body: Seq[RStmt],
       until: String) extends RStmt
 
-  /** Does the head of `tail` (post-characteristics body text) start a
-    * control statement this module owns? RETURN stays on SqlRoutines' fast
-    * path — a bare RETURN body needs no frame. */
-  def isControlBody(tail: String): Boolean = {
-    val t = tail.trim.toUpperCase
-    Seq("BEGIN", "IF ", "IF(", "CASE", "WHILE", "REPEAT", "LOOP", "SET ")
-      .exists(t.startsWith) ||
-      "^[A-Z_][A-Z_0-9]*\\s*:".r.findFirstIn(t).isDefined // label: LOOP …
-  }
-
   // --------------------------------------------------------------- parser
   /** Parses ONE controlStatement from `src` (SqlBase.g4:995). Expressions
     * are kept as raw source slices, terminated by the first top-level

@@ -602,8 +602,7 @@ object StatementServer {
       respond(ex, code, body)
     }
     // the one parse; a text the grammar rejects goes to the worker unparsed,
-    // which routes a CREATE FUNCTION / WITH FUNCTION head by its text and
-    // reports anything else as SYNTAX_ERROR, like any other failed query
+    // which parses it again and reports SYNTAX_ERROR like any failed query
     val parsed = try Some(new graft.sqlx.SqlParser(sql).parseStatement())
       catch { case scala.util.control.NonFatal(_) => None }
     // the session statements of the reference's protocol (SetSessionTask

@@ -5,15 +5,16 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-session prepared-plan cache for the dialect front door (r18 verdict
-  * #3; the reference caches prepared statements the same way): SQL text →
-  * the ANALYZED DataFrame, so a repeated statement skips rewrite + planning
-  * + analysis after its one parse and goes straight to execution. Never
+  * #3; the reference caches prepared statements the same way): SQL text
+  * (for EXECUTE, the prepared text plus its arguments) → the ANALYZED
+  * DataFrame, so a repeated statement skips rewrite + planning + analysis
+  * after its one parse and goes straight to execution. Never
   * caches results or data —
   * every lookup hit still executes the physical plan from the parquet
   * inputs on every action.
   *
-  * Invalidation is epoch-based: any front-door non-query statement
-  * (DDL/DML/GRANT/…, [[Statements]]), any CoW commit
+  * Invalidation is epoch-based: any front-door non-query statement but the
+  * PREPARE family (DDL/DML/GRANT/…, [[Statements]]), any CoW commit
   * ([[graft.catalog.CowTable]]), any CREATE FUNCTION
   * ([[graft.functions.SqlRoutines]]), and any fixture-file change detected
   * by [[graft.sources.Tables.registerAll]] bumps the global epoch, and the

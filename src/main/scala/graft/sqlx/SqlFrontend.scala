@@ -55,7 +55,11 @@ private[graft] object SqlFrontend {
     * to Spark SQL text: parse, rewrite, render. Trailing input is a
     * SqlParseException. */
   private[graft] def lowerExprText(text: String): String =
-    renderExpr(rewriteExpr(new SqlParser(text).parseStandaloneExpr()))
+    lowerExpr(new SqlParser(text).parseStandaloneExpr())
+
+  /** A parsed dialect expression (a routine's RETURN body) lowered to
+    * Spark SQL text. */
+  private[graft] def lowerExpr(e: Expr): String = renderExpr(rewriteExpr(e))
 
   private val fnRenames = Map(
     "row" -> "struct", // ROW(...) constructor; CAST names the fields
@@ -86,6 +90,10 @@ private[graft] object SqlFrontend {
       case Fn(name, args, d, over) if fnRenames.contains(name.toLowerCase) =>
         Fn(fnRenames(name.toLowerCase), args, d, over)
       case AtTimeZone(x, tz) => Fn("from_utc_timestamp", Seq(x, tz), distinct = false, None)
+      // MAP(keys, values) pairs two arrays (reference MapConstructor);
+      // Spark's map(k, v) would build one entry keyed by the keys array
+      case Fn(name, kv @ Seq(_, _), false, None) if name.equalsIgnoreCase("map") =>
+        Fn("map_from_arrays", kv, distinct = false, None)
       case TryExpr(body) =>
         lowerTry(body).getOrElse(throw new SqlParseException(
           s"TRY(${renderExpr(body)}): unsupported body — TRY lowers over " +

@@ -18,8 +18,9 @@ package graft.sqlx
   * SqlParseException, never a second parse. MATCH_RECOGNIZE blocks and
   * row-pattern WINDOW specifications are captured as balanced raw spans and
   * handed to MatchRecognizeSql's / MatchWindowSql's clause parsers — one
-  * owner for that sub-grammar. CREATE FUNCTION and WITH FUNCTION heads are
-  * split off by SqlRoutines / TrinoDialect before a statement reaches here.
+  * owner for that sub-grammar; routine control bodies go to RoutineLang the
+  * same way. CREATE FUNCTION and WITH FUNCTION heads parse here, and `?`
+  * markers bind to the EXECUTE arguments as they are parsed.
   */
 object SqlAst {
   sealed trait Expr
@@ -331,8 +332,8 @@ object SqlAst {
   final case class GrantRoleStmt(revoke: Boolean, role: String,
       grantee: String) extends Statement
   /** PREPARE name FROM statement (SqlBase.g4 :145) — the inner statement is
-    * kept as raw text (bound and re-parsed at EXECUTE time, matching the
-    * text-based `?`-parameter model). */
+    * kept as text and parsed at EXECUTE / DESCRIBE time, with its `?`
+    * markers bound to the USING arguments. */
   final case class PrepareStmt(name: String, stmtText: String) extends Statement
   /** EXECUTE name [USING e, …] | EXECUTE IMMEDIATE 'sql' [USING e, …]
     * (SqlBase.g4 :147-149). */
@@ -341,6 +342,27 @@ object SqlAst {
   final case class DeallocateStmt(name: String) extends Statement
   /** DESCRIBE INPUT name | DESCRIBE OUTPUT name (SqlBase.g4 :151-153). */
   final case class DescribeIOStmt(input: Boolean, name: String) extends Statement
+
+  /** A routine (SqlBase.g4 functionSpecification): `params` and `returns`
+    * are type spellings as written, `language` the LANGUAGE characteristic,
+    * `characteristics` the others (DETERMINISTIC, COMMENT '…', …) as
+    * written, and `text` its `CREATE FUNCTION …` DDL for SHOW CREATE
+    * FUNCTION. */
+  final case class RoutineDef(name: String, params: Seq[(String, String)],
+      returns: String, language: Option[String], characteristics: Seq[String],
+      body: RoutineBody, text: String)
+  sealed trait RoutineBody
+  /** `RETURN expr`. */
+  final case class ReturnBody(e: Expr) extends RoutineBody
+  /** Any other controlStatement (SqlBase.g4:995): its raw source span, for
+    * RoutineLang's sub-grammar. */
+  final case class ControlBody(raw: String) extends RoutineBody
+  /** `[WITH (handler = '…')] AS $$…$$`: a guest-language body. */
+  final case class GuestBody(handler: Option[String], code: String) extends RoutineBody
+  /** CREATE [OR REPLACE] FUNCTION (SqlBase.g4 :153). */
+  final case class CreateFunctionStmt(routine: RoutineDef) extends Statement
+  /** `WITH FUNCTION …[, FUNCTION …] query` (SqlBase.g4 rootQuery). */
+  final case class WithFunctionStmt(routines: Seq[RoutineDef], q: Query) extends Statement
 }
 
 final class SqlParseException(msg: String) extends IllegalArgumentException(msg)
@@ -352,6 +374,8 @@ object SqlLexer {
   case object TStr extends Kind
   case object TNum extends Kind
   case object TOp extends Kind
+  /** `$$…$$` (a guest-language routine body); text = the inside. */
+  case object TDollar extends Kind
   case object TEof extends Kind
   final case class Token(kind: Kind, text: String, pos: Int) {
     def is(s: String): Boolean = kind == TIdent && text.equalsIgnoreCase(s)
@@ -412,6 +436,11 @@ object SqlLexer {
         val start = i
         while (i < s.length && (s(i).isLetterOrDigit || s(i) == '_')) i += 1
         out += Token(TIdent, s.substring(start, i), start)
+      } else if (s.startsWith("$$", i)) { // a lone `$` stays a row-pattern anchor
+        val end = s.indexOf("$$", i + 2)
+        if (end < 0) err("unterminated $$ string")
+        out += Token(TDollar, s.substring(i + 2, end), i)
+        i = end + 2
       } else {
         multiOps.find(op => s.startsWith(op, i)) match {
           case Some(op) => out += Token(TOp, op, i); i += op.length
@@ -426,13 +455,20 @@ object SqlLexer {
   }
 }
 
-/** The parser proper. One instance per statement; not thread-shared. */
-final class SqlParser(src: String) {
+/** The parser proper. One instance per statement; not thread-shared.
+  * `args` binds `?` markers (SqlBase.g4 #parameter) in order: each marker
+  * yields the next argument, or NULL past the last one (DESCRIBE INPUT /
+  * OUTPUT pass none); [[parameterCount]] reports how many markers the
+  * parse consumed. Without `args` a `?` is a syntax error. */
+final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
   import SqlAst._
   import SqlLexer._
 
   private val tokens = SqlLexer.lex(src)
   private var p = 0
+  private var markers = 0
+
+  def parameterCount: Int = markers
 
   private def peek: Token = tokens(p)
   private def peek2: Token = tokens(math.min(p + 1, tokens.length - 1))
@@ -483,8 +519,22 @@ final class SqlParser(src: String) {
 
   /** Full-statement entry: queries plus the DML/EXPLAIN/SHOW subset. */
   def parseStatement(): Statement = {
+    val start = peek.pos
     val stmt: Statement =
-      if (acceptSeq("CREATE", "OR", "REPLACE", "TABLE"))
+      if (acceptSeq("CREATE", "FUNCTION") ||
+          acceptSeq("CREATE", "OR", "REPLACE", "FUNCTION"))
+        CreateFunctionStmt(parseRoutine("", start))
+      else if (peek.is("WITH") && peek2.is("FUNCTION") &&
+          !tokens(math.min(p + 2, tokens.length - 1)).is("AS")) { // not a CTE
+        p += 1
+        val routines = scala.collection.mutable.ArrayBuffer[RoutineDef]()
+        do {
+          val at = peek.pos
+          expectKw("FUNCTION")
+          routines += parseRoutine("CREATE ", at)
+        } while (acceptOp(","))
+        WithFunctionStmt(routines.toSeq, parseQueryNoFinish())
+      } else if (acceptSeq("CREATE", "OR", "REPLACE", "TABLE"))
         parseCtas(orReplace = true, ifNotExists = false)
       else if (acceptSeq("CREATE", "OR", "REPLACE", "MATERIALIZED", "VIEW")) {
         parseMvTail(orReplace = true, ifNotExists = false)
@@ -960,10 +1010,10 @@ final class SqlParser(src: String) {
       else if (accept("PREPARE")) {
         val name = ident("prepared statement name")
         expectKw("FROM")
-        // The inner statement is raw text from here to end-of-input: `?`
-        // parameters live at arbitrary depth, so binding is textual
-        // (literal-aware) at EXECUTE time, like the reference's
-        // parameter-rewrite over the parsed tree (PrepareTask.java).
+        // The inner statement is kept as text from here to end-of-input;
+        // EXECUTE parses it with the USING arguments bound to its `?`
+        // markers (the reference binds parameters on its parsed tree,
+        // PrepareTask.java / ParameterRewriter).
         val rest = src.substring(peek.pos).trim.stripSuffix(";").trim
         if (rest.isEmpty) err("expected a statement after FROM")
         p = tokens.length - 1 // consume to EOF
@@ -988,6 +1038,78 @@ final class SqlParser(src: String) {
     val props = if (accept("WITH")) parsePropertyAssignments() else Nil
     expectKw("AS")
     CreateTableAs(name, orReplace, ifNotExists, parseQueryNoFinish(), comment, props)
+  }
+
+  /** Clause keywords that end a routine's RETURNS type. */
+  private val routineTypeStops = Set("RETURN", "LANGUAGE", "DETERMINISTIC",
+    "RETURNS", "CALLED", "SECURITY", "COMMENT", "BEGIN", "IF", "WHILE",
+    "REPEAT", "LOOP", "SET", "DECLARE")
+
+  /** functionSpecification after FUNCTION (SqlBase.g4): `name(p type, …)
+    * RETURNS type routineCharacteristic* body`. The routine's DDL text is
+    * `head` plus the source from `start` to the end of the body. */
+  private def parseRoutine(head: String, start: Int): RoutineDef = {
+    def expectHead(ok: Boolean): Unit = if (!ok) err("CREATE FUNCTION subset: " +
+      "FUNCTION name(p type, …) RETURNS type [characteristics] body")
+    val name = ident("function name")
+    expectHead(acceptOp("("))
+    val params = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    if (!acceptOp(")")) {
+      var more = true
+      while (more) {
+        params += ((ident("parameter name"), parseTypeRaw()))
+        more = acceptOp(",")
+      }
+      expectOp(")")
+    }
+    expectHead(accept("RETURNS"))
+    val returns = parseTypeRaw(routineTypeStops)
+    var language: Option[String] = None
+    var handler: Option[String] = None
+    val traits = scala.collection.mutable.ArrayBuffer[String]()
+    var more = true
+    while (more) {
+      if (accept("LANGUAGE")) language = Some(ident("language name").toUpperCase)
+      else if (accept("DETERMINISTIC")) traits += "DETERMINISTIC"
+      else if (acceptSeq("NOT", "DETERMINISTIC")) traits += "NOT DETERMINISTIC"
+      else if (acceptSeq("RETURNS", "NULL", "ON", "NULL", "INPUT"))
+        traits += "RETURNS NULL ON NULL INPUT"
+      else if (acceptSeq("CALLED", "ON", "NULL", "INPUT")) traits += "CALLED ON NULL INPUT"
+      else if (accept("SECURITY"))
+        traits += "SECURITY " + (if (accept("DEFINER")) "DEFINER"
+          else { expectKw("INVOKER"); "INVOKER" })
+      else if (accept("COMMENT")) traits += s"COMMENT '${stringLit("routine comment")}'"
+      else if (accept("WITH")) { // the guest language's handler property
+        expectOp("("); expectKw("HANDLER"); expectOp("=")
+        handler = Some(stringLit("handler name"))
+        expectOp(")")
+      } else more = false
+    }
+    val body =
+      if (accept("RETURN")) ReturnBody(parseExpr())
+      else if (peek.is("AS") && peek2.kind == TDollar) {
+        p += 1; GuestBody(handler, next().text)
+      } else ControlBody(controlSpan())
+    RoutineDef(name, params.toSeq, returns, language, traits.toSeq, body,
+      head + src.substring(start, peek.pos).trim.stripSuffix(";").trim)
+  }
+
+  /** Raw source span of a routine's control statement (SqlBase.g4:995),
+    * for RoutineLang's sub-grammar: to end of input, or under a WITH
+    * FUNCTION head to the depth-0 `, FUNCTION` or query keyword after it. */
+  private def controlSpan(): String = {
+    val start = peek.pos
+    var depth = 0
+    def atEnd = peek.kind == TEof || depth == 0 &&
+      ((peek.isOp(",") && peek2.is("FUNCTION")) ||
+        Seq("SELECT", "VALUES", "TABLE", "WITH").exists(peek.is))
+    while (!atEnd) {
+      if (peek.isOp("(")) depth += 1 else if (peek.isOp(")")) depth -= 1
+      p += 1
+    }
+    val span = src.substring(start, peek.pos).trim
+    if (span.isEmpty) err("expected RETURN, a control statement or AS $$…$$")
+    span
   }
 
   /** Dotted name (schema.table or catalog-prop key) joined verbatim. */
@@ -1188,17 +1310,15 @@ final class SqlParser(src: String) {
     var off: Option[Long] = None
     def offsetClause(): Unit =
       if (accept("OFFSET")) {
-        if (peek.kind == TNum) off = Some(next().text.toLong) else err("OFFSET expects a number")
+        off = Some(rowCount("OFFSET"))
         accept("ROWS"); accept("ROW")
       }
     offsetClause()
     if (accept("LIMIT")) {
-      if (peek.kind == TNum) lim = Some(next().text.toLong)
-      else if (accept("ALL")) ()
-      else err("LIMIT expects a number")
+      if (!accept("ALL")) lim = Some(rowCount("LIMIT"))
     } else if (accept("FETCH")) {
       if (!accept("FIRST")) expectKw("NEXT")
-      val n = if (peek.kind == TNum) next().text.toLong else err("FETCH expects a count")
+      val n = rowCount("FETCH")
       accept("ROWS"); accept("ROW")
       if (accept("ONLY")) lim = Some(n)
       else if (acceptSeq("WITH", "TIES")) ties = Some(n)
@@ -1603,6 +1723,37 @@ final class SqlParser(src: String) {
 
   private val typedLitKws = Set("DATE", "TIMESTAMP", "TIME", "INTERVAL")
 
+  /** Consume a `?` marker: its bound argument, or None past the last. */
+  private def parameter(): Option[Expr] = {
+    val bound = args.getOrElse(err("parameter marker outside EXECUTE … USING"))
+    p += 1
+    markers += 1
+    bound.lift(markers - 1)
+  }
+
+  /** Row count of OFFSET / LIMIT / FETCH: a number or a bound `?` (an
+    * unbound one plans as 0, for DESCRIBE OUTPUT). */
+  private def rowCount(what: String): Long =
+    if (peek.kind == TNum) next().text.toLong
+    else if (!peek.isOp("?")) err(s"$what expects a number")
+    else parameter() match {
+      case None => 0L
+      case Some(Lit(n)) if n.nonEmpty && n.forall(_.isDigit) => n.toLong
+      case Some(_) => err(s"$what expects a number")
+    }
+
+  /** Trino's type of `DECIMAL '<v>'` (Decimals.parse): precision counts the
+    * digits less leading integral zeros, scale the fraction digits. */
+  private def decimalLiteralType(v: String): String = {
+    val m = "[+-]?(\\d*)(?:\\.(\\d*))?".r.unapplySeq(v.trim)
+      .filter(_ => v.exists(_.isDigit))
+      .getOrElse(err(s"invalid DECIMAL literal '$v'"))
+    val scale = Option(m(1)).fold(0)(_.length)
+    val precision = math.max(1, m.head.dropWhile(_ == '0').length + scale)
+    if (precision > 38) err(s"DECIMAL literal '$v' exceeds precision 38")
+    s"decimal($precision,$scale)"
+  }
+
   private def parsePrimary(): Expr = {
     val t = peek
     t.kind match {
@@ -1638,7 +1789,7 @@ final class SqlParser(src: String) {
           expectOp(")")
           e
         }
-      case TOp if t.text == "?" => p += 1; Lit("?")
+      case TOp if t.text == "?" => parameter().getOrElse(Lit("NULL"))
       case TOp if t.text == "*" => p += 1; Star(None)
       case TQIdent => parseIdentOrCall()
       case TIdent =>
@@ -1671,6 +1822,14 @@ final class SqlParser(src: String) {
             val items = if (peek.isOp("]")) Seq.empty else exprList()
             expectOp("]")
             Fn("array", items, distinct = false, over = None)
+          // DECIMAL '1.50' / DOUBLE '…' / REAL '…' (SqlBase.g4
+          // typeConstructor): a cast of the string to the literal's type
+          case "DECIMAL" | "DOUBLE" | "REAL" if peek2.kind == TStr =>
+            p += 1
+            val v = next().text
+            Cast(Lit(s"'${v.trim}'"),
+              if (up == "DECIMAL") decimalLiteralType(v) else up.toLowerCase,
+              isTry = false)
           case k if typedLitKws(k) && peek2.kind == TStr =>
             p += 1
             val v = next().text
@@ -1910,8 +2069,9 @@ final class SqlParser(src: String) {
           p += 1
         }
       }
-      // ARRAY<INT> style or multi-word types (DOUBLE PRECISION)
-      if (peek.kind == TIdent && !peek.is("AS") &&
+      // ARRAY<INT> style or multi-word types (DOUBLE PRECISION); not a
+      // `label:` that opens a routine body
+      if (peek.kind == TIdent && !peek.is("AS") && !peek2.isOp(":") &&
           !reserved(peek.text.toUpperCase) &&
           !stops(peek.text.toUpperCase)) sb.append(' ')
       else expectMore = false

@@ -137,6 +137,7 @@ private[graft] object Statements {
         check("SELECT", "select from table", t))
     st match {
       case QueryStmt(q) => checkQuery(q)
+      case WithFunctionStmt(_, q) => checkQuery(q)
       case ExplainStmt(_, q, _, _) => checkQuery(q)
       case CreateTableAs(_, _, _, q, _, _) => checkQuery(q) // creator owns the target
       case CreateViewStmt(_, _, q, _, _) => checkQuery(q)
@@ -727,15 +728,21 @@ private[graft] object Statements {
       case _ => None
     }).foreach(what => throw new IllegalArgumentException(
       s"$what changes session state: send it as its own statement"))
-    // any non-query statement may change what a cached plan would read
-    // (DDL/DML/GRANT/...); bumping the epoch on all of them over-invalidates
-    // (EXPLAIN/SHOW cost a re-plan) but can never serve stale data. The
-    // bump AFTER (in finally: also on partial failure) is the
-    // correctness-critical one — a query planned concurrently with this
-    // statement must not survive under the post-mutation epoch.
-    PlanCache.invalidate()
-    try executeStatement(spark, dir, st)
-    finally PlanCache.invalidate()
+    st match {
+      // the PREPARE family changes nothing a cached plan reads
+      case _: PrepareStmt | _: DeallocateStmt | _: DescribeIOStmt =>
+        executeStatement(spark, dir, st)
+      // any other statement may change what a cached plan would read
+      // (DDL/DML/GRANT/...); bumping the epoch on all of them
+      // over-invalidates (EXPLAIN/SHOW cost a re-plan) but can never serve
+      // stale data. The bump AFTER (in finally: also on partial failure) is
+      // the correctness-critical one — a query planned concurrently with
+      // this statement must not survive under the post-mutation epoch.
+      case _ =>
+        PlanCache.invalidate()
+        try executeStatement(spark, dir, st)
+        finally PlanCache.invalidate()
+    }
   }
 
   private def executeStatement(spark: SparkSession, dir: String, st: Statement): DataFrame = st match {
@@ -1788,21 +1795,11 @@ private[graft] object Statements {
 
     // PREPARE family (reference SqlBase.g4 :145-153; PrepareTask /
     // DeallocateTask / DescribeInputTask / DescribeOutputTask). The
-    // statement body is stored as raw text and bound textually at EXECUTE
-    // (literal-aware `?` splice), then runs through the front door like
-    // any other statement.
+    // statement body is stored as text; TrinoDialect runs EXECUTE by
+    // parsing it with the USING arguments bound to its `?` markers.
     case PrepareStmt(name, stmtText) =>
       TrinoDialect.storePrepared(name, stmtText)
       spark.emptyDataFrame
-
-    case ExecuteStmt(target, args) =>
-      val stmtText = target match {
-        case Left(name) => TrinoDialect.preparedStatement(name)
-        case Right(text) => text // EXECUTE IMMEDIATE
-      }
-      val rendered = args.map(e =>
-        SqlFrontend.renderExpr(SqlFrontend.rewriteExpr(e)))
-      TrinoDialect.sql(spark, dir, TrinoDialect.bindArgs(stmtText, rendered))
 
     case DeallocateStmt(name) =>
       TrinoDialect.dropPrepared(name)
@@ -1813,7 +1810,8 @@ private[graft] object Statements {
       if (input) TrinoDialect.describeInput(spark, stmtText)
       else TrinoDialect.describeOutput(spark, dir, stmtText)
 
-    case QueryStmt(_) => throw new IllegalStateException("unreachable")
+    case QueryStmt(_) | _: ExecuteStmt | _: CreateFunctionStmt | _: WithFunctionStmt =>
+      throw new IllegalStateException("unreachable: TrinoDialect dispatches these")
   }
 
   /** CALL procedures (reference SqlBase.g4 :94 + the lake connectors'

@@ -1,6 +1,7 @@
 package graft.sqlx
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Trino-dialect entry point (SURVEY.md §3 "sqlx/"): accepts SQL text in
   * the reference's dialect and runs it on Spark.
@@ -8,14 +9,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference parses its dialect with one grammar
   * (core/trino-grammar/src/main/antlr4/io/trino/grammar/sql/SqlBase.g4);
   * so does this engine. Every statement is parsed once by SqlParser, then
-  * dispatched on its AST: non-queries to Statements (DML/DDL/SHOW/PREPARE
-  * heads), queries through the plan cache to SqlFrontend (rewrite passes,
-  * planning of MATCH_RECOGNIZE / row-pattern windows / table functions, and
-  * rendering to Spark SQL for Catalyst). A text the grammar rejects is a
-  * SqlParseException — there is no second, textual parse. What lives here:
-  * the CREATE FUNCTION / WITH FUNCTION routing, the session's PREPARE
-  * registry, and the literal-aware `?` binding and DESCRIBE INPUT/OUTPUT
-  * that the PREPARE family needs.
+  * dispatched on its AST: queries through the plan cache to SqlFrontend
+  * (rewrite passes, planning of MATCH_RECOGNIZE / row-pattern windows /
+  * table functions, and rendering to Spark SQL for Catalyst), routines
+  * (CREATE FUNCTION, a WITH FUNCTION head) to SqlRoutines, everything else
+  * to Statements. A text the grammar rejects is a SqlParseException — there
+  * is no second, textual parse. EXECUTE parses the prepared text with its
+  * `?` markers bound to the USING arguments and dispatches the bound
+  * statement the same way. What lives here: that dispatch, the session's
+  * PREPARE registry, and DESCRIBE INPUT/OUTPUT.
   */
 object TrinoDialect {
 
@@ -33,9 +35,37 @@ object TrinoDialect {
   def sql(spark: SparkSession, dir: String, text: String,
       parsed: Option[SqlAst.Statement] = None): DataFrame = {
     Statements.logQuery(text) // system.runtime.queries history
-    if (graft.functions.SqlRoutines.isCreateFunction(text))
-      graft.functions.SqlRoutines.create(spark, text)
-    else sqlDirect(spark, dir, text, parsed)
+    graft.sources.Tables.registerAll(spark, dir)
+    graft.functions.Registry.registerAll(spark)
+    run(spark, dir, text, parsed.getOrElse(new SqlParser(text).parseStatement()))
+  }
+
+  /** Dispatch one parsed statement; `key` identifies it in the plan cache. */
+  private def run(spark: SparkSession, dir: String, key: String,
+      st: SqlAst.Statement): DataFrame = {
+    Statements.accessCheck(st)
+    st match {
+      // query path: prepared-plan cache (r19) — repeated statement text in
+      // the same session/context/epoch skips rewrite + analysis; execution
+      // still runs from the parquet inputs on every action
+      case SqlAst.QueryStmt(q) =>
+        PlanCache.cached(spark, dir, key)(SqlFrontend.run(spark, dir, q))
+      case SqlAst.CreateFunctionStmt(r) => graft.functions.SqlRoutines.create(spark, r)
+      // WITH FUNCTION … <query>: register each inline routine, then run the
+      // query (uncached: registering bumps the plan-cache epoch anyway).
+      // Scope subset: temporary-function (session) rather than
+      // statement-local — the nearest Spark scoping.
+      case SqlAst.WithFunctionStmt(routines, q) =>
+        routines.foreach(graft.functions.SqlRoutines.create(spark, _))
+        SqlFrontend.run(spark, dir, q)
+      // the bound statement is keyed on the prepared text plus its
+      // arguments; NUL never occurs in a text the lexer accepts
+      case SqlAst.ExecuteStmt(target, args) =>
+        val text = target.fold(preparedStatement, identity)
+        run(spark, dir, ("EXECUTE" +: text +: args.map(_.toString)).mkString("\u0000"),
+          bind(text, args))
+      case other => Statements.execute(spark, dir, other) // DML/EXPLAIN/SHOW/…
+    }
   }
 
   /** Named-statement registry lookup. A request-scoped
@@ -54,174 +84,48 @@ object TrinoDialect {
     if (prepared.remove(name).isEmpty)
       throw new IllegalArgumentException(s"no prepared statement '$name'")
 
-  /** DESCRIBE INPUT (reference execution/DescribeInputTask.java): lists `?`
-    * positions; types are 'unknown' — the reference also reports unknown
-    * absent coercion context. */
-  private[sqlx] def describeInput(spark: SparkSession, stmt: String): DataFrame = {
-    val masked = maskLiterals(stmt)
-    val rows = masked.zipWithIndex.collect { case ('?', _) => "unknown" }
-      .zipWithIndex.map { case (t, i) => org.apache.spark.sql.Row(i + 1, t) }
-    spark.createDataFrame(java.util.List.copyOf(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("position",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("type",
-          org.apache.spark.sql.types.StringType, nullable = false))))
+  /** `text` parsed with its `?` markers bound to `args` in order (NULL past
+    * the last), and the number of markers. */
+  private def parseBound(text: String, args: Seq[SqlAst.Expr]): (SqlAst.Statement, Int) = {
+    val parser = new SqlParser(text, Some(args))
+    (parser.parseStatement(), parser.parameterCount)
   }
+
+  /** EXECUTE … USING: one argument per marker. */
+  private def bind(text: String, args: Seq[SqlAst.Expr]): SqlAst.Statement = {
+    val (st, markers) = parseBound(text, args)
+    require(markers >= args.length,
+      s"EXECUTE: ${args.length} USING arguments but $markers parameter markers")
+    require(markers <= args.length, s"EXECUTE: not enough USING arguments for '$text'")
+    st
+  }
+
+  private def frame(spark: SparkSession, rows: Seq[Row],
+      cols: (String, DataType)*): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) }))
+
+  /** DESCRIBE INPUT (reference execution/DescribeInputTask.java): lists the
+    * `?` positions; types are 'unknown' — the reference also reports
+    * unknown absent coercion context. */
+  private[sqlx] def describeInput(spark: SparkSession, stmt: String): DataFrame =
+    frame(spark, (1 to parseBound(stmt, Nil)._2).map(Row(_, "unknown")),
+      "position" -> IntegerType, "type" -> StringType)
 
   /** DESCRIBE OUTPUT (reference execution/DescribeOutputTask.java): plans
     * the statement WITHOUT executing it — `?` bound to NULL — and reports
     * the output schema; DML heads as the single `rows bigint` column. */
   private[sqlx] def describeOutput(spark: SparkSession, dir: String,
       stmt: String): DataFrame = {
-    val masked = maskLiterals(stmt)
-    val bound = stmt.indices.map(i =>
-      if (masked(i) == '?') "NULL" else stmt(i).toString).mkString
     graft.sources.Tables.registerAll(spark, dir)
     graft.functions.Registry.registerAll(spark)
-    val schema = new SqlParser(bound).parseStatement() match {
+    val schema = parseBound(stmt, Nil)._1 match {
       case SqlAst.QueryStmt(q) =>
         spark.sql(SqlFrontend.renderQuery(SqlFrontend.planQuery(
           spark, dir, SqlFrontend.rewriteQuery(q)))).schema
-      case _ => org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("rows",
-          org.apache.spark.sql.types.LongType, nullable = false)))
+      case _ => StructType(Seq(StructField("rows", LongType, nullable = false)))
     }
-    val rows = schema.fields.toSeq.map(f =>
-      org.apache.spark.sql.Row(f.name, f.dataType.simpleString))
-    spark.createDataFrame(java.util.List.copyOf(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("column_name",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("type",
-          org.apache.spark.sql.types.StringType, nullable = false))))
-  }
-
-  /** Splice pre-rendered argument texts into `?` markers (literal-aware). */
-  private[sqlx] def bindArgs(stmt: String, args: Seq[String]): String = {
-    val masked = maskLiterals(stmt)
-    val out = new StringBuilder
-    var argIdx = 0
-    for (i <- stmt.indices) {
-      if (masked(i) == '?') {
-        require(argIdx < args.length, s"EXECUTE: not enough USING arguments for '$stmt'")
-        out.append(args(argIdx)); argIdx += 1
-      } else out.append(stmt(i))
-    }
-    require(argIdx == args.length,
-      s"EXECUTE: ${args.length} USING arguments but $argIdx parameter markers")
-    out.toString
-  }
-
-  /** Front door: the recursive-descent parser (graft.sqlx.SqlParser) with
-    * rewrites as AST passes (SqlFrontend) — dialect features compose at any
-    * nesting depth. */
-  private def sqlDirect(spark: SparkSession, dir: String, text: String,
-      parsed: Option[SqlAst.Statement]): DataFrame = {
-    graft.sources.Tables.registerAll(spark, dir)
-    graft.functions.Registry.registerAll(spark)
-    // WITH FUNCTION f(...) RETURNS t RETURN e [, FUNCTION ...] <query>
-    // (SqlBase.g4 functionSpecification at query head): register each
-    // inline routine through the CREATE FUNCTION path, then run the query.
-    // Scope subset: temporary-function (session) rather than
-    // statement-local — the nearest Spark scoping.
-    if ("(?is)^\\s*WITH\\s+FUNCTION\\b".r.findFirstIn(text).isDefined) {
-      val (defs, query) = splitInlineFunctions(text)
-      defs.foreach(d => graft.functions.SqlRoutines.create(spark, "CREATE " + d))
-      return sqlDirect(spark, dir, query, None)
-    }
-    val st = parsed.getOrElse(new SqlParser(text).parseStatement())
-    Statements.accessCheck(st)
-    st match {
-      // query path: prepared-plan cache (r19) — repeated statement text in
-      // the same session/context/epoch skips rewrite + analysis; execution
-      // still runs from the parquet inputs on every action
-      case SqlAst.QueryStmt(q) =>
-        PlanCache.cached(spark, dir, text)(SqlFrontend.run(spark, dir, q))
-      case other => Statements.execute(spark, dir, other) // DML/EXPLAIN/SHOW/…
-    }
-  }
-
-  /** Split `WITH FUNCTION d1 [, FUNCTION d2 ...] <query>` into the routine
-    * definitions and the query text. The query begins at the first
-    * depth-0 SELECT/VALUES/TABLE keyword after a definition's RETURN body
-    * (subqueries in bodies stay parenthesized, so depth-0 is unambiguous);
-    * `, FUNCTION` at depth 0 starts the next definition. */
-  private def splitInlineFunctions(text: String): (Seq[String], String) = {
-    val afterWith = text.replaceFirst("(?is)^\\s*WITH\\s+", "")
-    val defs = scala.collection.mutable.ArrayBuffer[String]()
-    var rest = afterWith
-    val queryHeads = Set("SELECT", "VALUES", "TABLE", "WITH")
-    while ("(?is)^FUNCTION\\b".r.findFirstIn(rest).isDefined) {
-      var i = 0; var depth = 0; var inQ = false
-      var cut = -1; var sawReturn = false
-      while (cut < 0 && i < rest.length) {
-        val c = rest.charAt(i)
-        if (!inQ && c == '$' && i + 1 < rest.length && rest.charAt(i + 1) == '$') {
-          // LANGUAGE PYTHON body: $$…$$ is opaque (may hold quotes/parens/
-          // keywords); its end completes the definition like RETURN does
-          val close = rest.indexOf("$$", i + 2)
-          require(close >= 0, "WITH FUNCTION: unterminated $$ body")
-          i = close + 1
-          sawReturn = true
-        }
-        else if (c == '\'') inQ = !inQ
-        else if (!inQ && (c == '(')) depth += 1
-        else if (!inQ && (c == ')')) depth -= 1
-        else if (!inQ && depth == 0 && (c.isLetter || c == ',')) {
-          if (c == ',') {
-            // `, FUNCTION` at depth 0 → next definition
-            val after = rest.substring(i + 1).dropWhile(_.isWhitespace)
-            if (sawReturn && after.toUpperCase.startsWith("FUNCTION")) cut = i - 1
-          } else {
-            val word = rest.substring(i).takeWhile(ch => ch.isLetterOrDigit || ch == '_')
-            val up = word.toUpperCase
-            if (up == "RETURN") sawReturn = true
-            else if (sawReturn && queryHeads(up) &&
-                (i == 0 || rest.charAt(i - 1).isWhitespace)) cut = i - 1
-            i += math.max(0, word.length - 1)
-          }
-        }
-        i += 1
-      }
-      require(cut >= 0, "WITH FUNCTION: could not find the query after the definitions")
-      defs += rest.substring(0, cut + 1).trim
-      rest = rest.substring(cut + 1).dropWhile(_.isWhitespace)
-      if (rest.startsWith(",")) rest = rest.substring(1).dropWhile(_.isWhitespace)
-    }
-    require(defs.nonEmpty, "WITH FUNCTION: no definitions parsed")
-    (defs.toSeq, rest)
-  }
-
-  // ------------------------------------------------------------- masking
-
-  /** Same-length shadow of `s` with every character INSIDE string literals
-    * ('…', with '' escapes) and double-quoted identifiers replaced by \\u0001.
-    * `?` binding and DESCRIBE INPUT search the mask; slices for output are
-    * taken from the original. */
-  private[sqlx] def maskLiterals(s: String): String = {
-    val out = s.toCharArray
-    var i = 0
-    while (i < s.length) {
-      s(i) match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < s.length && !done) {
-            if (s(i) == '\'') {
-              if (i + 1 < s.length && s(i + 1) == '\'') { out(i) = '\u0001'; out(i + 1) = '\u0001'; i += 2 }
-              else { done = true; i += 1 }
-            } else { out(i) = '\u0001'; i += 1 }
-          }
-        case '"' =>
-          i += 1
-          while (i < s.length && s(i) != '"') { out(i) = '\u0001'; i += 1 }
-          if (i < s.length) i += 1
-        case _ => i += 1
-      }
-    }
-    new String(out)
+    frame(spark, schema.fields.toSeq.map(f => Row(f.name, f.dataType.simpleString)),
+      "column_name" -> StringType, "type" -> StringType)
   }
 }

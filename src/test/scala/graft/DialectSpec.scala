@@ -164,6 +164,14 @@ class DialectSpec extends SparkSpec {
       TrinoDialect.sql(spark, sfDir, "EXECUTE spec_stmt USING 3")
     }
     assert(e2.getMessage.contains("no prepared statement"))
+    // a `?` inside a comment is not a marker
+    for (text <- Seq(
+        "PREPARE spec_c FROM SELECT n_nationkey FROM nation /* which? */ WHERE n_nationkey = ?",
+        "PREPARE spec_c FROM SELECT n_nationkey FROM nation -- which?\nWHERE n_nationkey = ?")) {
+      TrinoDialect.sql(spark, sfDir, text)
+      val keys = TrinoDialect.sql(spark, sfDir, "EXECUTE spec_c USING 3").collect()
+      assert(keys.map(_.getAs[Number](0).longValue).toSeq == Seq(3L), text)
+    }
   }
 
   test("pattern exclusion {- -} omits rows from per-row output but keeps consumption") {
@@ -430,6 +438,22 @@ class DialectSpec extends SparkSpec {
          SELECT wf_sq(wf_inc(n_regionkey)) AS v FROM nation
          WHERE n_nationkey = 0""").collect()
     assert(rows(0).getLong(0) == 1L) // region 0 → (0+1)^2
+    // a leading comment does not hide the head
+    val commented = TrinoDialect.sql(spark, sfDir,
+      "/* c */ WITH FUNCTION wf_tri(x bigint) RETURNS bigint RETURN x * 3 SELECT wf_tri(7) AS y")
+    assert(commented.collect()(0).getLong(0) == 21L)
+  }
+
+  test("MAP(keys, values) pairs two arrays; duplicate keys fail") {
+    val df = TrinoDialect.sql(spark, sfDir, "SELECT MAP(ARRAY['a', 'b'], ARRAY[1, 2]) AS m")
+    import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
+    val MapType(kt, vt, _) = df.schema.head.dataType: @unchecked
+    assert((kt, vt) == ((StringType, IntegerType))) // map(varchar, integer)
+    assert(df.collect().head.getMap[String, Int](0) == Map("a" -> 1, "b" -> 2))
+    val e = intercept[Exception] {
+      TrinoDialect.sql(spark, sfDir, "SELECT MAP(ARRAY['a', 'a'], ARRAY[1, 2]) AS m").collect()
+    }
+    assert(e.getMessage.contains("DUPLICATED_MAP_KEY"), e.getMessage)
   }
 
   test("bare UNNEST in FROM and WITH ORDINALITY") {

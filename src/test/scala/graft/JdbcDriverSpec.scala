@@ -84,7 +84,7 @@ class JdbcDriverSpec extends SparkSpec
     conn.close()
   }
 
-  test("prepared statement binds client-side, quotes survive") {
+  test("prepared statement binds server-side through EXECUTE USING, quotes survive") {
     val conn = DriverManager.getConnection(url)
     val ps = conn.prepareStatement(
       "SELECT n_name FROM nation WHERE n_regionkey = ? AND n_name <> ? ORDER BY n_name")
@@ -93,6 +93,27 @@ class JdbcDriverSpec extends SparkSpec
     val rs = ps.executeQuery()
     val names = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
     assert(names.nonEmpty && names == names.sorted)
+    // a `?` in a comment or a quoted identifier is not a parameter
+    val marked = conn.prepareStatement(
+      "SELECT n_nationkey AS \"who?\" FROM nation /* which? */ WHERE n_nationkey = ?")
+    marked.setLong(1, 3L)
+    val m = marked.executeQuery()
+    assert(m.next() && m.getLong("who?") == 3L)
+    // DECIMAL, DOUBLE and REAL parameters keep their literal types
+    val typed = conn.prepareStatement("SELECT ? AS d, ? AS x, ? AS r")
+    typed.setBigDecimal(1, new java.math.BigDecimal("1.50"))
+    typed.setDouble(2, 2.5)
+    typed.setFloat(3, 1.5f)
+    val t = typed.executeQuery()
+    assert(t.next())
+    assert((1 to 3).map(t.getMetaData.getColumnTypeName) == Seq("decimal(3,2)", "double", "real"))
+    assert(t.getBigDecimal(1) == new java.math.BigDecimal("1.50"))
+    assert(t.getDouble(2) == 2.5 && t.getFloat(3) == 1.5f)
+    // an unset parameter fails before anything runs
+    typed.clearParameters()
+    typed.setLong(2, 1L)
+    val unset = intercept[java.sql.SQLException](typed.executeQuery())
+    assert(unset.getMessage.contains("parameter 1 not set"), unset.getMessage)
     conn.close()
   }
 

@@ -37,6 +37,18 @@ class PythonFunctionSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(rows.size == 3 && rows.forall(_.endsWith("!")))
     assert(rows == rows.sorted)
+    // the $$ body is opaque to the SQL lexer: quotes, ? and -- pass through
+    val opaque = run(
+      """WITH FUNCTION py_opaque(s varchar)
+         RETURNS varchar
+         LANGUAGE PYTHON
+         AS $$
+         def py_opaque(s):
+             # isn't this -- a comment? yes
+             return s + '?' + "--" + "'"
+         $$
+         SELECT py_opaque('x') AS v""").collect()
+    assert(opaque.head.getString(0) == "x?--'")
   }
 
   test("grant-enforced users cannot CREATE FUNCTION LANGUAGE PYTHON") {

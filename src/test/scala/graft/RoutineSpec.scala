@@ -601,6 +601,30 @@ class RoutineSpec extends SparkSpec {
     assert(rows("t_lowered_block(s, d)") == direct)
   }
 
+  test("routine heads: parameterized and nested types, a quoted COMMENT, a leading comment") {
+    sql("""-- money helper
+           CREATE OR REPLACE FUNCTION t_cents(x decimal(10,2)) RETURNS bigint
+           COMMENT 'it''s cents' RETURN CAST(x * 100 AS bigint)""")
+    sql("""CREATE OR REPLACE FUNCTION t_twice(xs array(bigint)) RETURNS array(bigint)
+           RETURN transform(xs, v -> v * 2)""")
+    // the same head over a control-statement body
+    sql("""/* block */ CREATE OR REPLACE FUNCTION t_append(xs array(bigint), x decimal(10,2))
+           RETURNS array(bigint)
+           COMMENT 'it''s a block'
+           BEGIN
+             DECLARE n bigint DEFAULT CAST(x AS bigint);
+             RETURN concat(xs, ARRAY[n]);
+           END""")
+    val r = sql("""SELECT t_cents(CAST(1.25 AS decimal(10,2))) AS c,
+                   t_twice(ARRAY[1, 2]) AS t,
+                   t_append(ARRAY[1, 2], CAST(3.00 AS decimal(10,2))) AS a""").collect().head
+    assert(r.getLong(0) == 125L)
+    assert(r.getSeq[Long](1) == Seq(2L, 4L))
+    assert(r.getSeq[Long](2) == Seq(1L, 2L, 3L))
+    assert(graft.functions.SqlRoutines.definitionOf("t_cents")
+      .exists(_.startsWith("CREATE OR REPLACE FUNCTION t_cents(x decimal(10,2))")))
+  }
+
   test("CASE expression inside a routine expression does not confuse THEN/END scanning") {
     sql("""CREATE OR REPLACE FUNCTION t_casescan(x bigint) RETURNS varchar
            BEGIN

@@ -158,12 +158,17 @@ class SqlParserSpec extends SparkSpec {
 
   test("window frames, lambdas, subscripts, typed literals render faithfully") {
     val sql = "SELECT sum(x) OVER (PARTITION BY k ORDER BY t ROWS BETWEEN 1 PRECEDING AND CURRENT ROW), " +
-      "transform(a, v -> v + 1), m['k'], TIMESTAMP '2020-01-01 00:00:00' FROM t"
+      "transform(a, v -> v + 1), m['k'], TIMESTAMP '2020-01-01 00:00:00', " +
+      "DECIMAL '1.50', DECIMAL '-0.05', DOUBLE '2.5', REAL '1.5' FROM t"
     val s = SqlFrontend.renderQuery(new SqlParser(sql).parseQuery())
     assert(s.contains("ROWS BETWEEN 1 PRECEDING AND CURRENT ROW"), s)
     assert(s.contains("v -> (v + 1)"), s)
     assert(s.contains("element_at(m, 'k')"), s)
     assert(s.contains("TIMESTAMP '2020-01-01 00:00:00'"), s)
+    // Trino's literal types: DECIMAL '1.50' is decimal(3,2)
+    assert(s.contains("CAST('1.50' AS decimal(3,2))"), s)
+    assert(s.contains("CAST('-0.05' AS decimal(2,2))"), s)
+    assert(s.contains("CAST('2.5' AS double)") && s.contains("CAST('1.5' AS real)"), s)
   }
 
   test("subscripts are 1-based on arrays like the reference, not Spark 0-based") {

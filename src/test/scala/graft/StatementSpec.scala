@@ -415,6 +415,13 @@ class StatementSpec extends SparkSpec {
     intercept[Exception] { sql("DESCRIBE INPUT st_p").collect() }
     intercept[Exception] { sql("DEALLOCATE PREPARE st_p") }
     sql("DROP TABLE st_desc")
+    // a `?` inside a comment is not a parameter
+    for (text <- Seq(
+        "PREPARE st_pc FROM SELECT n_name FROM nation /* which? */ WHERE n_nationkey = ?",
+        "PREPARE st_pc FROM SELECT n_name FROM nation -- which?\nWHERE n_nationkey = ?")) {
+      sql(text)
+      assert(sql("DESCRIBE INPUT st_pc").collect().map(_.getInt(0)).toSeq == Seq(1), text)
+    }
   }
 
   test("information_schema and system tables are queryable relations") {
@@ -484,6 +491,10 @@ class StatementSpec extends SparkSpec {
     // quoted-quote escape inside the immediate text survives the lexer
     val lit = sql("EXECUTE IMMEDIATE 'SELECT ''a?b'' AS s'").collect()
     assert(lit.head.getString(0) == "a?b")
+    // a `?` inside a comment is not a parameter
+    val commented = sql("EXECUTE IMMEDIATE " +
+      "'SELECT n_nationkey FROM nation /* which? */ WHERE n_nationkey = ?' USING 3").collect()
+    assert(commented.map(_.getAs[Number](0).longValue).toSeq == Seq(3L))
   }
 
   test("SHOW STATS over a fixture table and a subquery") {
@@ -777,6 +788,24 @@ class StatementSpec extends SparkSpec {
     assert(sql(fq).collect().head.getLong(0) == 11L,
       "cached plan served after the routine was redefined")
     sql("DROP TABLE IF EXISTS plancache_t")
+  }
+
+  test("prepared-plan cache: EXECUTE reuses the bound plan and leaves the epoch alone") {
+    import graft.sqlx.PlanCache
+    def keys(text: String): Seq[Long] =
+      sql(text).collect().map(_.getAs[Number](0).longValue).toSeq
+    sql("PREPARE pc_p FROM SELECT n_nationkey FROM nation WHERE n_nationkey = ?")
+    assert(keys("EXECUTE pc_p USING 3") == Seq(3L))
+    val (e0, h0) = (PlanCache.epoch, PlanCache.hits.get())
+    assert(keys("EXECUTE pc_p USING 3") == Seq(3L))
+    assert(PlanCache.hits.get() > h0, "repeated EXECUTE must hit the plan cache")
+    assert(PlanCache.epoch == e0, "EXECUTE must not bump the plan-cache epoch")
+    // other arguments, or new text under the same name, get their own plan
+    assert(keys("EXECUTE pc_p USING 2") == Seq(2L))
+    sql("PREPARE pc_p FROM SELECT n_nationkey FROM nation WHERE n_regionkey = ? ORDER BY 1")
+    assert(keys("EXECUTE pc_p USING 3") ==
+      keys("SELECT n_nationkey FROM nation WHERE n_regionkey = 3 ORDER BY 1"))
+    sql("DEALLOCATE PREPARE pc_p")
   }
 
   test("prepared-plan cache: non-deterministic and per-query-constant expressions are never cached") {
