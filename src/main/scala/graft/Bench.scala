@@ -47,7 +47,7 @@ object Bench {
 
   /** JDK-17 module opens Spark needs outside spark-submit (mirrors
     * org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()). */
-  private val jdk17AddOpens: Seq[String] = Seq(
+  private[graft] val jdk17AddOpens: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",

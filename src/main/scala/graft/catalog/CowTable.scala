@@ -547,95 +547,98 @@ final class CowTable private (root0: String, spark: SparkSession) {
     val tFields = cur.schema.fields.toSeq
     val s = source.alias(sAlias)
     def onCol: Column = expr(onSql)
+    // frames pinned by localCheckpoint below; released once the MERGE has
+    // committed or failed, not left for a driver GC
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { val p = df.localCheckpoint(true); pinned += p; p }
+    try {
+      // ---- matched side: affected-file probe + rewrite
+      val affected: Seq[String] =
+        if (matched.isEmpty) Nil
+        else cur.withColumn("__cow_file", input_file_name()).alias(tAlias)
+          .join(s, onCol, "left_semi")
+          .select(col("__cow_file")).distinct()
+          .collect().map(r => CowTable.normalize(r.getString(0))).toSeq
 
-    // ---- matched side: affected-file probe + rewrite
-    val affected: Seq[String] =
-      if (matched.isEmpty) Nil
-      else cur.withColumn("__cow_file", input_file_name()).alias(tAlias)
-        .join(s, onCol, "left_semi")
-        .select(col("__cow_file")).distinct()
-        .collect().map(r => CowTable.normalize(r.getString(0))).toSeq
-
-    var changed = 0L
-    val rewritten: Seq[String] =
-      if (affected.isEmpty) Nil
-      else {
-        // row identity for the cardinality rule: ids must be STABLE across
-        // the jobs below, so the id'd base is pinned (bounded by mutation
-        // locality — these files are being rewritten anyway)
-        val base = readFiles(affected)
-          .withColumn("__cow_rid", monotonically_increasing_id())
-          .localCheckpoint(true)
-        val joined = base.alias(tAlias).join(s, onCol, "inner")
-        // first applicable case wins (evaluation order is the WHEN order)
-        val act = matched.zipWithIndex.foldRight(lit(-1)) {
-          case ((w, i), acc) =>
-            when(w.condSql.map(expr).getOrElse(lit(true)), lit(i)).otherwise(acc)
-        }
-        val acted = joined.withColumn("__cow_act", act)
-          .filter(col("__cow_act") >= 0)
-          .localCheckpoint(true)
-        val multi = acted.groupBy(col("__cow_rid")).count()
-          .filter(col("count") > 1).limit(1).count()
-        if (multi > 0) throw new IllegalStateException(
-          "One MERGE target table row matched more than one source row")
-        changed += acted.count()
-        val untouchedRows = base
-          .join(acted.select("__cow_rid"), Seq("__cow_rid"), "left_anti")
-          .select(tFields.map(f => col(f.name)): _*)
-        val updIdx = matched.zipWithIndex.collect {
-          case (w, i) if !w.deleteAction => i
-        }
-        val updatedRows =
-          if (updIdx.isEmpty) None
-          else Some(acted.filter(col("__cow_act").isin(updIdx.map(Int.box): _*))
-            .select(tFields.map { f =>
-              val keep = col(s"$tAlias.${f.name}")
-              matched.zipWithIndex.foldRight(keep) { case ((w, i), acc) =>
-                w.set.get(f.name.toLowerCase) match {
-                  case Some(sql) if !w.deleteAction =>
-                    when(col("__cow_act") === i, expr(sql)).otherwise(acc)
-                  case _ => acc
-                }
-              }.cast(f.dataType).as(f.name)
-            }: _*))
-        val survivors = updatedRows
-          .map(untouchedRows.unionByName(_)).getOrElse(untouchedRows)
-        writeData(survivors)
-      }
-
-    // ---- not-matched side: inserts from source rows with no target match
-    val inserted: Seq[String] =
-      if (notMatched.isEmpty) Nil
-      else {
-        val unmatched = s.join(cur.alias(tAlias), onCol, "left_anti")
-        val insAct = notMatched.zipWithIndex.foldRight(lit(-1)) {
-          case ((w, i), acc) =>
-            when(w.condSql.map(expr).getOrElse(lit(true)), lit(i)).otherwise(acc)
-        }
-        val insActed = unmatched.withColumn("__cow_ins", insAct)
-          .filter(col("__cow_ins") >= 0)
-        val rows = insActed.select(tFields.map { f =>
-          notMatched.zipWithIndex.foldRight(lit(null).cast(f.dataType)) {
-            case ((w, i), acc) =>
-              val pos = w.cols.indexOf(f.name.toLowerCase)
-              if (pos < 0 || pos >= w.vals.length) acc
-              else when(col("__cow_ins") === i, expr(w.vals(pos))).otherwise(acc)
-          }.cast(f.dataType).as(f.name)
-        }: _*)
-        if (rows.isEmpty) Nil
+      var changed = 0L
+      val rewritten: Seq[String] =
+        if (affected.isEmpty) Nil
         else {
-          val files = writeData(rows)
-          changed += readFiles(files).count()
-          files
+          // row identity for the cardinality rule: ids must be STABLE across
+          // the jobs below, so the id'd base is pinned (bounded by mutation
+          // locality — these files are being rewritten anyway)
+          val base = pin(readFiles(affected)
+            .withColumn("__cow_rid", monotonically_increasing_id()))
+          val joined = base.alias(tAlias).join(s, onCol, "inner")
+          // first applicable case wins (evaluation order is the WHEN order)
+          val act = matched.zipWithIndex.foldRight(lit(-1)) {
+            case ((w, i), acc) =>
+              when(w.condSql.map(expr).getOrElse(lit(true)), lit(i)).otherwise(acc)
+          }
+          val acted = pin(joined.withColumn("__cow_act", act)
+            .filter(col("__cow_act") >= 0))
+          val multi = acted.groupBy(col("__cow_rid")).count()
+            .filter(col("count") > 1).limit(1).count()
+          if (multi > 0) throw new IllegalStateException(
+            "One MERGE target table row matched more than one source row")
+          changed += acted.count()
+          val untouchedRows = base
+            .join(acted.select("__cow_rid"), Seq("__cow_rid"), "left_anti")
+            .select(tFields.map(f => col(f.name)): _*)
+          val updIdx = matched.zipWithIndex.collect {
+            case (w, i) if !w.deleteAction => i
+          }
+          val updatedRows =
+            if (updIdx.isEmpty) None
+            else Some(acted.filter(col("__cow_act").isin(updIdx.map(Int.box): _*))
+              .select(tFields.map { f =>
+                val keep = col(s"$tAlias.${f.name}")
+                matched.zipWithIndex.foldRight(keep) { case ((w, i), acc) =>
+                  w.set.get(f.name.toLowerCase) match {
+                    case Some(sql) if !w.deleteAction =>
+                      when(col("__cow_act") === i, expr(sql)).otherwise(acc)
+                    case _ => acc
+                  }
+                }.cast(f.dataType).as(f.name)
+              }: _*))
+          val survivors = updatedRows
+            .map(untouchedRows.unionByName(_)).getOrElse(untouchedRows)
+          writeData(survivors)
         }
-      }
 
-    val stats =
-      if (affected.isEmpty && inserted.isEmpty)
-        MutationStats(manifestDf(currentVersion).count(), Nil, 0, currentVersion)
-      else mutate(affected, rewritten ++ inserted)
-    (stats, changed)
+      // ---- not-matched side: inserts from source rows with no target match
+      val inserted: Seq[String] =
+        if (notMatched.isEmpty) Nil
+        else {
+          val unmatched = s.join(cur.alias(tAlias), onCol, "left_anti")
+          val insAct = notMatched.zipWithIndex.foldRight(lit(-1)) {
+            case ((w, i), acc) =>
+              when(w.condSql.map(expr).getOrElse(lit(true)), lit(i)).otherwise(acc)
+          }
+          val insActed = unmatched.withColumn("__cow_ins", insAct)
+            .filter(col("__cow_ins") >= 0)
+          val rows = insActed.select(tFields.map { f =>
+            notMatched.zipWithIndex.foldRight(lit(null).cast(f.dataType)) {
+              case ((w, i), acc) =>
+                val pos = w.cols.indexOf(f.name.toLowerCase)
+                if (pos < 0 || pos >= w.vals.length) acc
+                else when(col("__cow_ins") === i, expr(w.vals(pos))).otherwise(acc)
+            }.cast(f.dataType).as(f.name)
+          }: _*)
+          if (rows.isEmpty) Nil
+          else {
+            val files = writeData(rows)
+            changed += readFiles(files).count()
+            files
+          }
+        }
+
+      val stats =
+        if (affected.isEmpty && inserted.isEmpty)
+          MutationStats(manifestDf(currentVersion).count(), Nil, 0, currentVersion)
+        else mutate(affected, rewritten ++ inserted)
+      (stats, changed)
+    } finally pinned.foreach(CowTable.release)
   }
 
   /** Which physical files hold at least one row of `matching`? Driver-side
@@ -1036,6 +1039,13 @@ final class CowTable private (root0: String, spark: SparkSession) {
 }
 
 object CowTable {
+  /** Drops the blocks of a frame pinned by `localCheckpoint`: its plan is a
+    * `LogicalRDD` over the checkpointed RDD. */
+  private def release(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = true))
+
   /** Per-file column statistics stored in bucketed manifests (r17):
     * min/max as strings (re-typed at scan), null count, value count. */
   final case class ColStat(min: String, max: String, nulls: Long, cnt: Long)

@@ -1,13 +1,13 @@
 package graft.catalog
 
 import java.io.File
-import java.net.{InetSocketAddress, URI, URLDecoder}
+import java.net.{URI, URLDecoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -43,7 +43,7 @@ object IcebergRestCatalog {
     /** Requests served, for wire-level assertions. */
     val requests = new java.util.concurrent.atomic.AtomicLong()
 
-    private val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port0), 0)
+    private val http = graft.server.LoopbackHttp.create(port0)
     def port: Int = http.getAddress.getPort
 
     private def respond(ex: HttpExchange, code: Int, body: String): Unit = {

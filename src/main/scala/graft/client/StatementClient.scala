@@ -75,12 +75,13 @@ object StatementClient {
   }
 
   /** Run one statement to completion against `base` (e.g.
-    * `http://127.0.0.1:8080`). Blocks; polls empty RUNNING responses at
-    * 25 ms (a response that carried data is followed up immediately — the
-    * server streams pages as fast as the client takes them). `user`
-    * travels as the protocol's `X-Trino-User` header (resource-group
-    * selection server-side). `encoding = Some("json")` opts into the
-    * spooled protocol (reference client/trino-client EncodedQueryData):
+    * `http://127.0.0.1:8080`). Blocks; polls empty RUNNING responses with a
+    * delay that doubles from 1 ms up to 25 ms (a response that carried data
+    * is followed up immediately — the server streams pages as fast as the
+    * client takes them). `user` travels as the protocol's `X-Trino-User`
+    * header (resource-group selection server-side). `encoding =
+    * Some("json")` opts into the spooled protocol (reference
+    * client/trino-client EncodedQueryData):
     * results arrive as inline-or-spooled segments; spooled segments are
     * fetched from their URIs and ACKed after decode. `session`, when
     * given, carries and accumulates client-side session state. */

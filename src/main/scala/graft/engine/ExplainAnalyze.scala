@@ -24,11 +24,12 @@ object ExplainAnalyze {
 
   private def collectMetrics(plan: SparkPlan): Seq[NodeMetrics] = {
     // A multiply-consumed cached intermediate is scanned by several
-    // InMemoryTableScan nodes all sharing ONE InMemoryRelation; its
-    // cache-fill subtree executed once, so report it once (else a reader
-    // summing scan rows sees N× the real fill work).
-    val seenRelations = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[org.apache.spark.sql.execution.SparkPlan, java.lang.Boolean]())
+    // InMemoryTableScan nodes; its cache-fill subtree executed once, so
+    // report it once (else a reader summing scan rows sees N× the real fill
+    // work). Key on the cache entry's builder, not the relation: re-planning
+    // can give two scans distinct InMemoryRelation instances of one entry.
+    val seenCaches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
     def walk(p: SparkPlan): Seq[NodeMetrics] = {
       val self = NodeMetrics(
         p.nodeName,
@@ -43,7 +44,7 @@ object ExplainAnalyze {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
         case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          if (seenRelations.add(s.relation.cachedPlan)) Seq(s.relation.cachedPlan)
+          if (seenCaches.add(s.relation.cacheBuilder)) Seq(s.relation.cacheBuilder.cachedPlan)
           else Seq.empty
         case other => other.children
       }

@@ -1,7 +1,6 @@
 package graft.server
 
 import java.io.OutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
@@ -234,7 +233,7 @@ object StatementServer {
       evictAfterMs: Long = 5 * 60 * 1000L,
       security: Option[Security] = None): Handle = {
     val rgManager = resourceGroups.map(new ResourceGroups.Manager(_))
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val server = LoopbackHttp.create(port)
     val pool = daemonPool(4, "graft-statement-exec")
     val nextId = new AtomicLong(0L)
     val queries = new ConcurrentHashMap[String, AtomicReference[State]]()
@@ -743,13 +742,16 @@ object StatementServer {
               case Streaming(_, b) => b.isCancelled
               case _ => false
             })
+          // completed fires BEFORE the failure is published, as on the
+          // success path: a listener sees the event no later than the
+          // client sees FAILED
+          if (wasCancelled) fireCompleted("FAILED", 0L, "Query was canceled", t0)
+          else fireCompleted("FAILED", 0L, msg, t0)
           ref.get() match {
             case st @ Streaming(_, b) =>
               b.fail(msg); ref.compareAndSet(st, Failed(msg, errName))
             case _ => ref.compareAndSet(Running, Failed(msg, errName))
           }
-          if (wasCancelled) fireCompleted("FAILED", 0L, "Query was canceled", t0)
-          else fireCompleted("FAILED", 0L, msg, t0)
       } finally {
         spark.sparkContext.clearJobGroup()
       }

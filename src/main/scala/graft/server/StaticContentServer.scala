@@ -1,7 +1,6 @@
 package graft.server
 
 import java.io.OutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
@@ -19,7 +18,7 @@ object StaticContentServer {
   }
 
   def start(content: Map[String, String], port: Int = 0): Handle = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val server = LoopbackHttp.create(port)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val body = content.get(ex.getRequestURI.getPath)

@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.net.{InetSocketAddress, URI}
+import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 /** ClickHouse HTTP INTERFACE — server and client for the columnar-OLAP
   * connector (reference: plugin/trino-clickhouse — ClickHouseClient
@@ -84,7 +84,7 @@ object ClickHouseWire {
         rows: Vector[Array[Any]]): Unit =
       tables.put(name.toLowerCase, TableDef(columns, rows))
 
-    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port0), 0)
+    private val server = graft.server.LoopbackHttp.create(port0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-ch-server"); t.setDaemon(true); t
     }))

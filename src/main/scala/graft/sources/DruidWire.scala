@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.net.{InetSocketAddress, URI}
+import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -48,7 +48,7 @@ object DruidWire {
         rows: Vector[Array[Any]]): Unit =
       tables.put(name.toLowerCase, TableDef(columns, rows))
 
-    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port0), 0)
+    private val server = graft.server.LoopbackHttp.create(port0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-druid-server"); t.setDaemon(true); t
     }))

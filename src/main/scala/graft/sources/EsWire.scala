@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.{InetSocketAddress, URI}
+import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
@@ -9,7 +9,7 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -50,7 +50,7 @@ object EsWire {
     /** Wire-visible hit counter — specs assert server-side pruning. */
     val hitsServed = new AtomicLong(0)
 
-    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port0), 0)
+    private val server = graft.server.LoopbackHttp.create(port0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-es-server"); t.setDaemon(true); t
     }))

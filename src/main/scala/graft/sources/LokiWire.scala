@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.net.{InetSocketAddress, URI, URLDecoder, URLEncoder}
+import java.net.{URI, URLDecoder, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -37,7 +37,7 @@ object LokiWire {
       streams = streams :+ s.copy(entries = s.entries.sortBy(_._1))
     }
 
-    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port0), 0)
+    private val server = graft.server.LoopbackHttp.create(port0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-loki-server"); t.setDaemon(true); t
     }))

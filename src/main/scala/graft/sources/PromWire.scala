@@ -1,13 +1,13 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.{InetSocketAddress, URI, URLDecoder, URLEncoder}
+import java.net.{URI, URLDecoder, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -44,7 +44,7 @@ object PromWire {
       series = series :+ s.copy(samples = s.samples.sortBy(_._1))
     }
 
-    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port0), 0)
+    private val server = graft.server.LoopbackHttp.create(port0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-prom-server"); t.setDaemon(true); t
     }))

@@ -17,8 +17,7 @@ class EventListenerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private val received = new CopyOnWriteArrayList[String]()
   private val failFirstN = new java.util.concurrent.atomic.AtomicInteger(0)
   private lazy val ingest = {
-    val s = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val s = graft.server.LoopbackHttp.create()
     s.createContext("/ingest", new com.sun.net.httpserver.HttpHandler {
       override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)

@@ -16,8 +16,7 @@ class OpaPolicySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   // policy (alice may read any table; everyone else denied; writes denied)
   private val requests = new CopyOnWriteArrayList[String]()
   private lazy val agent = {
-    val s = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val s = graft.server.LoopbackHttp.create()
     s.createContext("/v1/data/trino/allow", new com.sun.net.httpserver.HttpHandler {
       override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -122,8 +121,7 @@ class OpaPolicySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private val probedTables = new CopyOnWriteArrayList[String]()
 
   private lazy val shapingAgent = {
-    val s = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val s = graft.server.LoopbackHttp.create()
     def ctx(path: String)(answer: String => String): Unit = {
       s.createContext(path, new com.sun.net.httpserver.HttpHandler {
         override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {

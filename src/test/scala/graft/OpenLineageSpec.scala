@@ -18,8 +18,7 @@ class OpenLineageSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val received = new CopyOnWriteArrayList[String]()
   private lazy val sink = {
-    val s = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val s = graft.server.LoopbackHttp.create()
     s.createContext("/api/v1/lineage", new com.sun.net.httpserver.HttpHandler {
       override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
         received.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))

@@ -202,6 +202,22 @@ class StatementServerSpec extends SparkSpec
     assert(c3 == 200)
   }
 
+  test("a /v1/query/{id} round trip takes no delayed-ACK stall") {
+    val resp = http.send(
+      HttpRequest.newBuilder(URI.create(s"${handle.uri}/v1/statement"))
+        .POST(HttpRequest.BodyPublishers.ofString("SELECT 1 AS v")).build(),
+      HttpResponse.BodyHandlers.ofString())
+    val JString(infoUri) = (JsonMethods.parse(resp.body()) \ "infoUri"): @unchecked
+    // with Nagle on, the server's body segment waits ~40 ms for the
+    // client's delayed ACK on every exchange
+    val ms = (0 until 22).map { _ =>
+      val t0 = System.nanoTime()
+      assert(getJson(infoUri)._1 == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.drop(2).sorted
+    assert(ms(ms.size / 2) < 20.0, ms.mkString(", "))
+  }
+
   test("DELETE /v1/query/{id} kills a running query (the UI kill path)") {
     spark.udf.register("spec_ui_block", (ms: Long) => { Thread.sleep(ms); ms })
     val resp = http.send(

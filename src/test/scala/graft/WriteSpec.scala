@@ -120,6 +120,22 @@ class WriteSpec extends SparkSpec {
     assert(e.getMessage.contains("matched more than one source row"))
   }
 
+  test("full MERGE releases its pinned blocks, committed or failed, without a GC") {
+    import graft.catalog.CowTable
+    def cachedRdds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cachedRdds
+    val ct = CowTable.create(spark, tmp(), Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"))
+    val update = Seq(CowTable.WhenMatched(None, deleteAction = false, Map("v" -> "s.sv")))
+    ct.mergeFull(Seq((1L, 1.0)).toDF("k", "sv"), "t", "s", "t.k = s.k", update, Nil)
+    assert(ct.read().filter($"k" === 1L).collect().head.getDouble(1) == 1.0)
+    intercept[IllegalStateException] {
+      ct.mergeFull(Seq((2L, 1.0), (2L, 2.0)).toDF("k", "sv"), "t", "s", "t.k = s.k",
+        update, Nil)
+    }
+    assert(cachedRdds -- before == Set.empty,
+      spark.sparkContext.getRDDStorageInfo.mkString("; "))
+  }
+
   test("full MERGE through the SQL front door: delete-only and insert-only") {
     def sql(t: String) = graft.sqlx.TrinoDialect.sql(spark, sfDir, t)
     sql("""CREATE OR REPLACE TABLE wm_t AS
