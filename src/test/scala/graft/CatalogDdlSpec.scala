@@ -80,6 +80,43 @@ class CatalogDdlSpec extends SparkSpec {
       assert(srv.rowsServed.get() - before <= 5)
       run("DROP CATALOG ddl_pg")
     } finally srv.close()
+
+    // the other two wire fronts behind CREATE CATALOG: clickhouse (same
+    // SQL pushdown) and elasticsearch (tables are indices, `_id` builtin)
+    val ch = new graft.sources.ClickHouseWire.Server()
+    try {
+      ch.createTable("widgets", Seq(
+        graft.sources.PgWire.Column("id", graft.sources.PgWire.OidInt8),
+        graft.sources.PgWire.Column("grade", graft.sources.PgWire.OidVarchar)),
+        (1 to 40).map(i => Array[Any](i.toLong, s"g${i % 4}")).toVector)
+      run("CREATE CATALOG ddl_ch USING clickhouse WITH " +
+        s"(host = '127.0.0.1', port = '${ch.port}')")
+      val agg = spark.sql(
+        "SELECT grade, count(*) AS n FROM ddl_ch.default.widgets GROUP BY grade")
+      val plan = agg.queryExecution.executedPlan.toString
+      assert(!plan.contains("HashAggregate"), plan)
+      assert(plan.contains("ChScan(") && plan.contains("clickhouse:widgets"), plan)
+      assert(agg.collect().map(r => r.getAs[String]("grade") -> r.getAs[Long]("n"))
+        .toMap == (0 until 4).map(g => s"g$g" -> 10L).toMap)
+      run("DROP CATALOG ddl_ch")
+    } finally ch.close()
+
+    val es = new graft.sources.EsWire.Server()
+    try {
+      es.createIndex("gadgets", Seq("name" -> "keyword", "rank" -> "long"), shards = 2)
+      (1 to 30).foreach(i => es.index("gadgets", i.toString,
+        Map("name" -> s"n$i", "rank" -> i.toLong)))
+      run("CREATE CATALOG ddl_es USING elasticsearch WITH " +
+        s"(host = '127.0.0.1', port = '${es.port}')")
+      val hits = spark.sql(
+        "SELECT _id, name FROM ddl_es.default.gadgets WHERE rank > 20")
+      val plan = hits.queryExecution.executedPlan.toString
+      assert(plan.contains("EsScan(gadgets") && plan.contains("es:gadgets"), plan)
+      assert(plan.contains(""""range":{"rank":{"gt":20}}"""), plan)
+      assert(hits.collect().map(_.getAs[String]("name")).sorted.toSeq ==
+        (21 to 30).map(i => s"n$i").sorted)
+      run("DROP CATALOG ddl_es")
+    } finally es.close()
   }
 
   test("persisted catalogs reload after conf loss (restart contract)") {
