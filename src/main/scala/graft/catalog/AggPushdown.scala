@@ -21,7 +21,7 @@ import org.apache.spark.sql.connector.expressions.aggregate._
   *
   * Only min/max/count/sum/avg over plain columns translate; anything else
   * (distinct flags, expressions, UDAFs) returns None and stays in Spark. */
-private[catalog] object AggPushdown {
+object AggPushdown {
 
   /** A translated aggregation: `selectList` = rendered group columns then
     * rendered aggregate calls (the scan's output order Spark expects);

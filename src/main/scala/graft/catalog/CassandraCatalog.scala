@@ -1,14 +1,6 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,7 +21,7 @@ import graft.sources.CassandraWire
   * coverage is exact (first range closes at the minimum token, every
   * other range is half-open), so each row lands in exactly one split
   * regardless of data. */
-object CassandraCatalog {
+object CassandraCatalog extends WireConnector {
 
   val format: String = classOf[CassandraSource].getName
 
@@ -82,9 +74,7 @@ object CassandraCatalog {
       case _ => None
     }
   }
-}
 
-class CassandraSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val c = new CassandraWire.Client(options.get("host"), options.get("port").toInt)
     try {
@@ -105,7 +95,7 @@ class CassandraSource extends TableProvider {
       require(cols.nonEmpty,
         s"cassandra: no such table ${options.get("keyspace")}.${options.get("table")}")
       def field(name: String, tpe: String, kind: String, pos: Long) =
-        StructField(name, CassandraCatalog.sparkType(tpe), nullable = true,
+        StructField(name, sparkType(tpe), nullable = true,
           metadata = new MetadataBuilder()
             .putString("cassandra.kind", kind)
             .putLong("cassandra.position", pos).build())
@@ -117,88 +107,63 @@ class CassandraSource extends TableProvider {
     } finally c.close()
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CassandraTable(schema, properties.get("host"), properties.get("port").toInt,
-      properties.get("keyspace"), properties.get("table"),
-      Option(properties.get("splits")).map(_.toInt).getOrElse(4))
+  override def relation(schema: StructType, options: CaseInsensitiveStringMap): WireRelation =
+    CassandraRelation(schema, options.get("host"), options.get("port").toInt,
+      options.get("keyspace"), options.get("table"),
+      Option(options.get("splits")).map(_.toInt).getOrElse(4))
 }
 
-final class CassandraTable(tableSchema: StructType, host: String, port: Int,
-    keyspace: String, table: String, splits: Int) extends Table with SupportsRead {
-  override def name(): String = s"cassandra:$keyspace.$table"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
+class CassandraSource extends WireSource(CassandraCatalog)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-      private val fields = tableSchema.fieldNames.toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var clauses: Seq[String] = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
+/** One table; a split is one token range `(lo, hi, first)`: the first
+  * range closes at the minimum token, every other is half-open. */
+final case class CassandraRelation(schema: StructType, host: String, port: Int,
+    keyspace: String, table: String, tokenRanges: Int) extends WireRelation {
 
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        val (ok, rest) = filters.partition(f =>
-          CassandraCatalog.clause(f, fields).isDefined)
-        pushed = ok
-        clauses = ok.toSeq.flatMap(f => CassandraCatalog.clause(f, fields))
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
+  type Split = (Long, Long, Boolean)
 
-      override def build(): Scan = {
-        // token() target = the partition key columns by kind/position
-        // metadata (composite keys render token("a", "b")); a schema with
-        // no kind metadata (hand-declared) falls back to the first field
-        val pk = tableSchema.fields
-          .filter(f => f.metadata.contains("cassandra.kind") &&
-            f.metadata.getString("cassandra.kind") == "partition_key")
-          .sortBy(_.metadata.getLong("cassandra.position"))
-          .map(_.name).toSeq
-        val tokenArgs = (if (pk.nonEmpty) pk else Seq(tableSchema.fieldNames.head))
-          .map(n => "\"" + n + "\"").mkString(", ")
-        new CassandraScan(host, port, keyspace, table,
-          tokenArgs, projected, clauses, limit, splits)
-      }
-    }
-}
+  private def fields: Set[String] = schema.fieldNames.toSet
 
-final class CassandraScan(host: String, port: Int, keyspace: String,
-    table: String, tokenArgs: String, projected: StructType,
-    clauses: Seq[String], limit: Option[Int], splits: Int)
-    extends Scan with Batch with Serializable {
-
-  override def readSchema(): StructType = projected
-  override def toBatch: Batch = this
-
-  private def selectList: String =
-    if (projected.isEmpty) tokenArgs
-    else projected.fieldNames.map(f => "\"" + f + "\"").mkString(", ")
-
-  /** One token range's CQL — the reference's split query shape.
-    * `tokenArgs` is the pre-rendered partition-key column list. */
-  private[catalog] def splitCql(range: (Long, Long, Boolean)): String = {
-    val (lo, hi, first) = range
-    val tokenCond =
-      if (first) s"token($tokenArgs) >= $lo AND token($tokenArgs) <= $hi"
-      else s"token($tokenArgs) > $lo AND token($tokenArgs) <= $hi"
-    val conds = tokenCond +: clauses
-    val lim = limit.map(l => s" LIMIT $l").getOrElse("")
-    s"SELECT $selectList FROM $keyspace.$table WHERE ${conds.mkString(" AND ")}$lim ALLOW FILTERING"
+  /** token() target = the partition key columns by kind/position metadata
+    * (composite keys render token("a", "b")); a schema with no kind
+    * metadata (hand-declared) falls back to the first field. */
+  private def tokenArgs: String = {
+    val pk = schema.fields
+      .filter(f => f.metadata.contains("cassandra.kind") &&
+        f.metadata.getString("cassandra.kind") == "partition_key")
+      .sortBy(_.metadata.getLong("cassandra.position"))
+      .map(_.name).toSeq
+    (if (pk.nonEmpty) pk else Seq(schema.fieldNames.head))
+      .map(n => "\"" + n + "\"").mkString(", ")
   }
 
-  override def description(): String =
-    s"CassandraScan($keyspace.$table, where=${clauses.mkString(" AND ")}, splits=$splits)"
+  private def clauses(p: Pushdown): Seq[String] =
+    p.filters.flatMap(CassandraCatalog.clause(_, fields))
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // the full Murmur3 ring divided into `splits` contiguous ranges
-    val n = math.max(1, splits)
+  override def name: String = s"cassandra:$keyspace.$table"
+
+  override def pushable(f: Filter): Boolean = CassandraCatalog.clause(f, fields).isDefined
+
+  /** One token range's CQL — the reference's split query shape. */
+  private[catalog] def cql(p: Pushdown, range: Split): String = {
+    val (lo, hi, first) = range
+    val t = tokenArgs
+    val tokenCond =
+      if (first) s"token($t) >= $lo AND token($t) <= $hi"
+      else s"token($t) > $lo AND token($t) <= $hi"
+    val selectList =
+      if (p.columns.isEmpty) t
+      else p.columns.fieldNames.map(f => "\"" + f + "\"").mkString(", ")
+    val lim = p.limit.map(l => s" LIMIT $l").getOrElse("")
+    s"SELECT $selectList FROM $keyspace.$table WHERE ${(tokenCond +: clauses(p)).mkString(" AND ")}$lim ALLOW FILTERING"
+  }
+
+  override def describe(p: Pushdown): String =
+    s"CassandraScan($keyspace.$table, where=${clauses(p).mkString(" AND ")}, splits=$tokenRanges)"
+
+  override def splits(p: Pushdown): Seq[Split] = {
+    // the full Murmur3 ring divided into `tokenRanges` contiguous ranges
+    val n = math.max(1, tokenRanges)
     val span = java.math.BigInteger.valueOf(Long.MaxValue)
       .subtract(java.math.BigInteger.valueOf(Long.MinValue))
     val step = span.divide(java.math.BigInteger.valueOf(n.toLong))
@@ -207,48 +172,15 @@ final class CassandraScan(host: String, port: Int, keyspace: String,
         .add(step.multiply(java.math.BigInteger.valueOf(i.toLong)))
       val hi = if (i == n - 1) java.math.BigInteger.valueOf(Long.MaxValue)
         else lo.add(step)
-      CassandraTokenRange(lo.longValueExact(), hi.longValueExact(), i == 0)
-        : InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, schema) = (host, port, projected)
-    val self = this
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new CassandraReader(h, p, self.splitCql {
-          val r = partition.asInstanceOf[CassandraTokenRange]
-          (r.lo, r.hi, r.first)
-        }, schema)
+      (lo.longValueExact(), hi.longValueExact(), i == 0)
     }
   }
-}
 
-final case class CassandraTokenRange(lo: Long, hi: Long, first: Boolean)
-    extends InputPartition
-
-/** One token range's paged query, streamed on the executor. */
-final class CassandraReader(host: String, port: Int, cql: String,
-    schema: StructType) extends PartitionReader[InternalRow] {
-  private val client = new CassandraWire.Client(host, port)
-  private val (cols, rows) = client.queryAll(cql, pageSize = 1000)
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!rows.hasNext) false
-    else {
-      val r = rows.next()
-      current = InternalRow.fromSeq(schema.fields.indices.map { i =>
-        r(i) match {
-          case null => null
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        }
-      })
-      true
-    }
+  /** One token range's paged query, streamed on the executor. */
+  override def rows(p: Pushdown, range: Split): WireRows = {
+    val client = new CassandraWire.Client(host, port)
+    val (_, it) = client.queryAll(cql(p, range), pageSize = 1000)
+    val width = p.columns.length
+    new WireRows(it.map(r => WireRows.row(r.take(width))), () => client.close())
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = client.close()
 }

@@ -1,35 +1,18 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{ClickHouseWire, PgWire}
 
 /** ClickHouse connector over the HTTP interface (reference:
   * plugin/trino-clickhouse — ClickHouseClient is another BaseJdbcClient
   * subclass: pushed filters/projection/LIMIT render to remote SQL, the
-  * HTTP interface streams TSV back). SQL generation reuses the same
-  * machinery as the PostgreSQL catalog (PgCatalog.clause over the
-  * JdbcSqlDialect family — ClickHouse accepts ANSI double-quoted
-  * identifiers), proving the dialect generalization across a third
-  * engine's wire format.
-  *
-  * Scale shape: schema probe and MIN/MAX bounds are the only driver-side
-  * queries; each executor split streams its own HTTP response line by
-  * line (O(row) memory). */
-object ChCatalog {
+  * HTTP interface streams TSV back). SQL generation, range splits and
+  * OFFSET/TopN/aggregate pushdown are the [[SqlEngine]] stack the
+  * PostgreSQL connector uses (ClickHouse accepts ANSI double-quoted
+  * identifiers); only the transport differs. Each executor split streams
+  * its own HTTP response line by line (O(row) memory). */
+object ChCatalog extends SqlEngine("clickhouse", "ChScan", rangeSplits = true) {
 
   val format: String = classOf[ChSource].getName
 
@@ -48,213 +31,19 @@ object ChCatalog {
       .option("host", host).option("port", port.toString).option("query", sql)
       .load()
 
-  private[catalog] def sparkType(oid: Int): DataType = PgCatalog.sparkType(oid)
-}
-
-class ChSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val client = new ClickHouseWire.Client(options.get("host"), options.get("port").toInt)
-    val probe = Option(options.get("query")) match {
-      case Some(q) => s"SELECT * FROM ($q) probe LIMIT 0"
-      case None =>
-        s"SELECT * FROM ${PgCatalog.dialect.tableName(options.get("table"))} LIMIT 0"
-    }
-    val (cols, _) = client.query(probe)
-    StructType(cols.map(c => StructField(c.name, ChCatalog.sparkType(c.oid))))
+  override def query(host: String, port: Int, sql: String)
+      : (Seq[PgWire.Column], Vector[Seq[Any]]) = {
+    val (cols, rows) = new ClickHouseWire.Client(host, port).query(sql)
+    (cols, rows.map(SqlEngine.decode(cols, _)))
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new ChTable(schema, properties.get("host"), properties.get("port").toInt,
-      Option(properties.get("table")), Option(properties.get("query")),
-      Option(properties.get("partitionColumn")),
-      Option(properties.get("numPartitions")).map(_.toInt).getOrElse(4))
-}
-
-final class ChTable(tableSchema: StructType, host: String, port: Int,
-    table: Option[String], rawQuery: Option[String],
-    partitionColumn: Option[String], numPartitions: Int)
-    extends Table with SupportsRead {
-  override def name(): String = s"clickhouse:${table.getOrElse("(query)")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit
-        with SupportsPushDownAggregates with SupportsPushDownTopN
-        with SupportsPushDownOffset {
-      private val fields = tableSchema.fieldNames.toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var clauses: Seq[String] = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
-      private var offset: Option[Int] = None
-      private var orderBy: Seq[String] = Nil
-      private var agg: Option[AggPushdown.Pushed] = None
-      private var aggSchema: StructType = _
-
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        if (rawQuery.isDefined) return filters // passthrough runs as written
-        val (ok, rest) = filters.partition(f =>
-          PgCatalog.clause(f, fields).isDefined)
-        pushed = ok
-        clauses = ok.toSeq.flatMap(f => PgCatalog.clause(f, fields))
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        if (agg.isEmpty) projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
-
-      /** OFFSET pushdown, single-split only (see PgCatalog). */
-      override def pushOffset(o: Int): Boolean =
-        if (rawQuery.isDefined || partitionColumn.isDefined) false
-        else { offset = Some(o); true }
-
-      /** TopN pushdown, same shape as the PG scan (see PgCatalog). */
-      override def pushTopN(orders: Array[SortOrder], l: Int): Boolean = {
-        if (rawQuery.isDefined || agg.isDefined) return false
-        AggPushdown.orderBySql(orders.toSeq, fields, PgCatalog.dialect.quote) match {
-          case Some(os) => orderBy = os; limit = Some(l); true
-          case None => false
-        }
-      }
-      override def isPartiallyPushed(): Boolean = partitionColumn.isDefined
-
-      /** Same complete/partial split as the PG scan: one split → the
-        * remote GROUP BY is the answer; range splits → per-split partials
-        * merged by Spark (see [[AggPushdown]]). */
-      override def supportCompletePushDown(a: Aggregation): Boolean =
-        rawQuery.isEmpty && partitionColumn.isEmpty &&
-          AggPushdown.translate(a, fields, PgCatalog.dialect.quote).isDefined
-
-      override def pushAggregation(a: Aggregation): Boolean = {
-        if (rawQuery.isDefined) return false
-        AggPushdown.translate(a, fields, PgCatalog.dialect.quote) match {
-          case None => false
-          case Some(p) =>
-            val client = new ClickHouseWire.Client(host, port)
-            try {
-              val (cols, _) = client.query(
-                s"SELECT ${p.selectList.mkString(", ")} FROM " +
-                  s"${PgCatalog.dialect.tableName(table.get)}${p.groupByClause} LIMIT 0")
-              aggSchema = StructType(cols.zipWithIndex.map { case (c, i) =>
-                StructField(s"_pushed_$i", ChCatalog.sparkType(c.oid))
-              })
-              agg = Some(p)
-              true
-            } catch { case _: Exception => false }
-        }
-      }
-
-      override def build(): Scan = new ChScan(host, port, table, rawQuery,
-        if (rawQuery.isDefined) tableSchema
-        else if (agg.isDefined) aggSchema else projected,
-        clauses, limit, partitionColumn.filter(_ => rawQuery.isEmpty),
-        numPartitions, agg, orderBy, offset)
-    }
-}
-
-final class ChScan(host: String, port: Int, table: Option[String],
-    rawQuery: Option[String], projected: StructType, clauses: Seq[String],
-    limit: Option[Int], partitionColumn: Option[String], numPartitions: Int,
-    agg: Option[AggPushdown.Pushed] = None, orderBy: Seq[String] = Nil,
-    offset: Option[Int] = None)
-    extends Scan with Batch with Serializable {
-
-  override def readSchema(): StructType = projected
-  override def toBatch: Batch = this
-
-  private def selectList: String =
-    agg.map(_.selectList.mkString(", ")).getOrElse {
-      if (projected.isEmpty) "1"
-      else projected.fieldNames.map(PgCatalog.dialect.quote).mkString(", ")
-    }
-
-  private[catalog] def splitSql(range: Option[(Long, Long, Boolean)]): String =
-    rawQuery.getOrElse {
-      val conds = clauses ++ range.map { case (lo, hi, last) =>
-        val c = PgCatalog.dialect.quote(partitionColumn.get)
-        if (last) s"($c >= $lo AND $c <= $hi)" else s"($c >= $lo AND $c < $hi)"
-      }
-      val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-      val groupBy = agg.map(_.groupByClause).getOrElse("")
-      val order =
-        if (orderBy.isEmpty) "" else orderBy.mkString(" ORDER BY ", ", ", "")
-      // the pushed limit is Spark's PRE-OFFSET cap (see PgScan.splitSql)
-      val lim = limit.map(l =>
-        s" LIMIT ${math.max(0, l - offset.getOrElse(0))}").getOrElse("")
-      val off = offset.map(o => s" OFFSET $o").getOrElse("")
-      s"SELECT $selectList FROM ${PgCatalog.dialect.tableName(table.get)}$where$groupBy$order$lim$off"
-    }
-
-  override def description(): String = s"ChScan(${splitSql(None)})"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    partitionColumn match {
-      case Some(pc) if rawQuery.isEmpty =>
-        val client = new ClickHouseWire.Client(host, port)
-        val (_, rows) = client.query(
-          s"SELECT MIN(${PgCatalog.dialect.quote(pc)}), MAX(${PgCatalog.dialect.quote(pc)}) " +
-            s"FROM ${PgCatalog.dialect.tableName(table.get)}")
-        val (minS, maxS) = (rows.head.head, rows.head(1))
-        if (minS == null || maxS == null) Array(ChPartition(None): InputPartition)
-        else {
-          val (lo, hi) = (minS.toDouble.toLong, maxS.toDouble.toLong)
-          val n = math.max(1, numPartitions)
-          val step = math.max(1L, (hi - lo + n) / n)
-          (0 until n).flatMap { i =>
-            val a = lo + i * step
-            if (a > hi) None
-            else {
-              val last = i == n - 1 || a + step > hi
-              Some(ChPartition(Some((a, if (last) hi else a + step, last)))
-                : InputPartition)
-            }
-          }.toArray
-        }
-      case _ => Array(ChPartition(None): InputPartition)
-    }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, schema) = (host, port, projected)
-    val self = this
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new ChSplitReader(h, p,
-          self.splitSql(partition.asInstanceOf[ChPartition].range), schema)
-    }
+  override def stream(host: String, port: Int, sql: String)
+      : (Iterator[Seq[Any]], () => Unit) = {
+    val client = new ClickHouseWire.Client(host, port)
+    val (cols, rows) = client.queryStream(sql)
+    // close releases the streaming HTTP body even on early termination (LIMIT)
+    (rows.map(SqlEngine.decode(cols, _)), () => client.close())
   }
 }
 
-final case class ChPartition(range: Option[(Long, Long, Boolean)])
-    extends InputPartition
-
-/** One split's remote query, streamed line by line off its HTTP response. */
-final class ChSplitReader(host: String, port: Int, sql: String,
-    schema: StructType) extends PartitionReader[InternalRow] {
-  private val client = new ClickHouseWire.Client(host, port)
-  private val (cols, rows) = client.queryStream(sql)
-  private val oids = cols.map(_.oid).toArray
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!rows.hasNext) false
-    else {
-      val texts = rows.next()
-      current = InternalRow.fromSeq(schema.fields.indices.map { i =>
-        PgWire.decode(texts(i), oids(i)) match {
-          case null => null
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        }
-      })
-      true
-    }
-  }
-  override def get(): InternalRow = current
-  // releases the streaming HTTP body even on early termination (LIMIT)
-  override def close(): Unit = client.close()
-}
+class ChSource extends WireSource(ChCatalog)

@@ -638,7 +638,7 @@ final class CowTable private (root0: String, spark: SparkSession) {
           MutationStats(manifestDf(currentVersion).count(), Nil, 0, currentVersion)
         else mutate(affected, rewritten ++ inserted)
       (stats, changed)
-    } finally pinned.foreach(CowTable.release)
+    } finally pinned.foreach(graft.engine.Checkpoints.release)
   }
 
   /** Which physical files hold at least one row of `matching`? Driver-side
@@ -1039,13 +1039,6 @@ final class CowTable private (root0: String, spark: SparkSession) {
 }
 
 object CowTable {
-  /** Drops the blocks of a frame pinned by `localCheckpoint`: its plan is a
-    * `LogicalRDD` over the checkpointed RDD. */
-  private def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = true))
-
   /** Per-file column statistics stored in bucketed manifests (r17):
     * min/max as strings (re-typed at scan), null count, value count. */
   final case class ColStat(min: String, max: String, nulls: Long, cnt: Long)

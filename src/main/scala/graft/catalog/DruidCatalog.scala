@@ -1,29 +1,17 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.DruidWire
+import graft.sources.{DruidWire, PgWire}
 
 /** Druid connector over the SQL HTTP API (reference: plugin/trino-druid
   * — a BaseJdbcClient subclass whose whole contract is the SQL it pushes
   * to Druid; here the same generated SQL POSTs to the public
   * /druid/v2/sql endpoint). Pushed filters/projection/LIMIT render
-  * through the shared dialect machinery; the broker fans the query out
+  * through the shared [[SqlEngine]] stack; the broker fans the query out
   * across its own historicals, so the split shape is one split per
   * query, like the Pinot broker path. */
-object DruidCatalog {
+object DruidCatalog extends SqlEngine("druid", "DruidScan", rangeSplits = false) {
 
   val format: String = classOf[DruidSource].getName
 
@@ -36,110 +24,14 @@ object DruidCatalog {
     spark.read.format(format)
       .option("host", host).option("port", port.toString).option("query", sql)
       .load()
+
+  override def query(host: String, port: Int, sql: String)
+      : (Seq[PgWire.Column], Vector[Seq[Any]]) =
+    new DruidWire.Client(host, port).query(sql)
+
+  override def stream(host: String, port: Int, sql: String)
+      : (Iterator[Seq[Any]], () => Unit) =
+    (query(host, port, sql)._2.iterator, () => ())
 }
 
-class DruidSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val c = new DruidWire.Client(options.get("host"), options.get("port").toInt)
-    val probe = Option(options.get("query")) match {
-      case Some(q) => s"SELECT * FROM ($q) probe LIMIT 0"
-      case None => s"SELECT * FROM ${options.get("table")} LIMIT 0"
-    }
-    val (cols, _) = c.query(probe)
-    StructType(cols.map(col => StructField(col.name, PgCatalog.sparkType(col.oid))))
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new DruidTable(schema, properties.get("host"), properties.get("port").toInt,
-      Option(properties.get("table")), Option(properties.get("query")))
-}
-
-final class DruidTable(tableSchema: StructType, host: String, port: Int,
-    table: Option[String], rawQuery: Option[String]) extends Table with SupportsRead {
-  override def name(): String = s"druid:${table.getOrElse("(query)")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-      private val fields = tableSchema.fieldNames.toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var clauses: Seq[String] = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
-
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        if (rawQuery.isDefined) return filters
-        val (ok, rest) = filters.partition(f =>
-          PgCatalog.clause(f, fields).isDefined)
-        pushed = ok
-        clauses = ok.toSeq.flatMap(f => PgCatalog.clause(f, fields))
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
-
-      override def build(): Scan = new DruidScan(host, port, table, rawQuery,
-        if (rawQuery.isDefined) tableSchema else projected, clauses, limit)
-    }
-}
-
-final class DruidScan(host: String, port: Int, table: Option[String],
-    rawQuery: Option[String], projected: StructType, clauses: Seq[String],
-    limit: Option[Int]) extends Scan with Batch with Serializable {
-  override def readSchema(): StructType = projected
-  override def toBatch: Batch = this
-
-  private[catalog] def brokerSql: String = rawQuery.getOrElse {
-    val selectList =
-      if (projected.isEmpty) "1"
-      else projected.fieldNames.map(PgCatalog.dialect.quote).mkString(", ")
-    val where = if (clauses.isEmpty) "" else clauses.mkString(" WHERE ", " AND ", "")
-    val lim = limit.map(l => s" LIMIT $l").getOrElse("")
-    s"SELECT $selectList FROM ${table.get}$where$lim"
-  }
-
-  override def description(): String = s"DruidScan($brokerSql)"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(DruidPartition(): InputPartition)
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, schema, sql) = (host, port, projected, brokerSql)
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new DruidReader(h, p, sql, schema)
-    }
-  }
-}
-
-final case class DruidPartition() extends InputPartition
-
-final class DruidReader(host: String, port: Int, sql: String,
-    schema: StructType) extends PartitionReader[InternalRow] {
-  private val (_, rows) = new DruidWire.Client(host, port).query(sql)
-  private val it = rows.iterator
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!it.hasNext) false
-    else {
-      val r = it.next()
-      current = InternalRow.fromSeq(schema.fields.indices.map { i =>
-        r(i) match {
-          case null => null
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        }
-      })
-      true
-    }
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
+class DruidSource extends WireSource(DruidCatalog)

@@ -1,14 +1,7 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -26,17 +19,15 @@ import graft.sources.EsWire
   * scroll, and ElasticsearchQueryBuilder lowers the pushed TupleDomain
   * onto the query DSL).
   *
-  * Spark-first: a DSv2 TableProvider. Schema comes from `_mapping` at
-  * plan time (driver-side, bounded); `planInputPartitions` = shard list;
-  * each PartitionReader owns one shard's scroll on an executor. Pushdown:
-  *  - filters (SupportsPushDownFilters) → bool/term/terms/range/exists
-  *    query DSL, evaluated SERVER-side; untranslatable filters stay in
-  *    the Spark plan,
-  *  - column pruning (SupportsPushDownRequiredColumns) → `_source`
-  *    includes,
-  *  - LIMIT (SupportsPushDownLimit) → page size cap + early scroll stop.
+  * Schema comes from `_mapping` at plan time (driver-side, bounded); the
+  * splits are the shard list; each split's rows are one shard's scroll on
+  * an executor. Pushdown:
+  *  - filters → bool/term/terms/range/exists query DSL, evaluated
+  *    SERVER-side; untranslatable filters stay in the Spark plan,
+  *  - column pruning → `_source` includes,
+  *  - LIMIT → page size cap + early scroll stop.
   * At 1000 shards that is 1000 independent scrolls, no driver fan-in. */
-object EsCatalog {
+object EsCatalog extends WireConnector {
 
   val format: String = classOf[EsSource].getName
 
@@ -105,134 +96,73 @@ object EsCatalog {
   private[catalog] def queryJson(clauses: Seq[String]): String =
     if (clauses.isEmpty) """{"match_all":{}}"""
     else s"""{"bool":{"filter":[${clauses.mkString(",")}]}}"""
-}
-
-class EsSource extends TableProvider {
-  private def client(options: CaseInsensitiveStringMap) =
-    new EsWire.Client(options.get("host"), options.get("port").toInt)
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val mapped = client(options).mapping(options.get("index")).map { case (f, t) =>
+    val client = new EsWire.Client(options.get("host"), options.get("port").toInt)
+    val mapped = client.mapping(options.get("index")).map { case (f, t) =>
       // `text` fields are ANALYZED: a server-side term/terms/range query on
       // them matches tokens, not the stored value, silently dropping rows —
       // so they are tagged here and NEVER pushed (the reference restricts
       // predicate pushdown to keyword/raw types the same way,
       // plugin/trino-elasticsearch ElasticsearchMetadata supportsPredicates)
       val meta = new MetadataBuilder().putBoolean("es.analyzed", t == "text").build()
-      StructField(f, EsCatalog.sparkType(t), nullable = true, metadata = meta)
+      StructField(f, sparkType(t), nullable = true, metadata = meta)
     }
     StructType(StructField("_id", StringType, nullable = false) +: mapped)
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new EsTable(schema, properties.get("host"), properties.get("port").toInt,
-      properties.get("index"), Option(properties.get("query")))
+  override def relation(schema: StructType, options: CaseInsensitiveStringMap): WireRelation =
+    EsRelation(schema, options.get("host"), options.get("port").toInt,
+      options.get("index"), Option(options.get("query")))
 }
 
-/** `rawQuery` is the reference's `raw_query` table function: a literal
-  * query-DSL document ANDed with whatever Spark pushes down. */
-final class EsTable(tableSchema: StructType, host: String, port: Int, index: String,
-    rawQuery: Option[String] = None)
-    extends Table with SupportsRead {
-  override def name(): String = s"es:$index"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
+class EsSource extends WireSource(EsCatalog)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-      // pushable = mapped, non-analyzed fields; analyzed (`text`) fields
-      // stay as residual Spark filters so exact semantics are preserved
-      private val mappedFields = tableSchema.fields
-        .filterNot(_.name == "_id")
-        .filterNot(f => f.metadata.contains("es.analyzed") &&
-          f.metadata.getBoolean("es.analyzed"))
-        .map(_.name).toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var clauses: Seq[String] = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
+/** One index. `rawQuery` is the reference's `raw_query` table function: a
+  * literal query-DSL document ANDed with whatever Spark pushes down. A
+  * split is one shard. */
+final case class EsRelation(schema: StructType, host: String, port: Int,
+    index: String, rawQuery: Option[String]) extends WireRelation {
 
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        val (ok, rest) = filters.partition(f =>
-          EsCatalog.clause(f, mappedFields).isDefined)
-        pushed = ok
-        clauses = ok.toSeq.flatMap(f => EsCatalog.clause(f, mappedFields))
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
+  type Split = Int
 
-      override def build(): Scan = new EsScan(host, port, index, projected,
-        EsCatalog.queryJson(clauses ++ rawQuery.toSeq), limit)
-    }
-}
+  // pushable = mapped, non-analyzed fields; analyzed (`text`) fields stay
+  // as residual Spark filters so exact semantics are preserved
+  private def fields: Set[String] = schema.fields
+    .filterNot(_.name == "_id")
+    .filterNot(f => f.metadata.contains("es.analyzed") &&
+      f.metadata.getBoolean("es.analyzed"))
+    .map(_.name).toSet
 
-final class EsScan(host: String, port: Int, index: String, projected: StructType,
-    queryJson: String, limit: Option[Int]) extends Scan with Batch with Serializable {
-  override def readSchema(): StructType = projected
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"EsScan($index, query=$queryJson, columns=${projected.fieldNames.mkString(",")})"
+  private def queryJson(p: Pushdown): String =
+    EsCatalog.queryJson(p.filters.flatMap(EsCatalog.clause(_, fields)) ++ rawQuery.toSeq)
 
-  override def planInputPartitions(): Array[InputPartition] =
-    new EsWire.Client(host, port).searchShards(index)
-      .map(s => EsShardPartition(s): InputPartition).toArray
+  override def name: String = s"es:$index"
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, ix, q, lim, schema) = (host, port, index, queryJson, limit, projected)
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new EsShardReader(h, p, ix, q, lim, schema,
-          partition.asInstanceOf[EsShardPartition].shard)
-    }
-  }
-}
+  override def pushable(f: Filter): Boolean = EsCatalog.clause(f, fields).isDefined
 
-final case class EsShardPartition(shard: Int) extends InputPartition
+  override def describe(p: Pushdown): String =
+    s"EsScan($index, query=${queryJson(p)}, columns=${p.columns.fieldNames.mkString(",")})"
 
-/** One shard's scroll, driven on the executor: O(page) memory, early stop
-  * on a pushed LIMIT, scroll released on close. */
-final class EsShardReader(host: String, port: Int, index: String,
-    queryJson: String, limit: Option[Int], schema: StructType, shard: Int)
-    extends PartitionReader[InternalRow] {
-  private val client = new EsWire.Client(host, port)
-  private val pageSize = limit.map(l => math.max(1, math.min(l, 1000))).getOrElse(1000)
-  private val sourceFields = schema.fieldNames.filterNot(_ == "_id").toSeq
-  private var page = client.openScroll(index, shard, queryJson,
-    Some(sourceFields), pageSize)
-  private val scrollId = page.scrollId
-  private var it = page.hits.iterator
-  private var served = 0L
-  private var current: InternalRow = _
+  override def splits(p: Pushdown): Seq[Int] = new EsWire.Client(host, port).searchShards(index)
 
-  override def next(): Boolean = {
-    if (limit.exists(served >= _)) return false
-    while (!it.hasNext) {
-      scrollId match {
-        case Some(sid) =>
-          page = client.nextPage(sid)
-          if (page.hits.isEmpty) return false
-          it = page.hits.iterator
-        case None => return false
-      }
-    }
-    val (id, src) = it.next()
-    current = decode(id, src)
-    served += 1
-    true
+  /** One shard's scroll: O(page) memory, early stop on a pushed LIMIT, and
+    * the scroll is cleared on close. */
+  override def rows(p: Pushdown, shard: Int): WireRows = {
+    val client = new EsWire.Client(host, port)
+    val pageSize = p.limit.map(l => math.max(1, math.min(l, 1000))).getOrElse(1000)
+    val first = client.openScroll(index, shard, queryJson(p),
+      Some(p.columns.fieldNames.filterNot(_ == "_id").toSeq), pageSize)
+    val hits = first.hits.iterator ++ first.scrollId.iterator.flatMap(sid =>
+      Iterator.continually(client.nextPage(sid).hits).takeWhile(_.nonEmpty).flatten)
+    new WireRows(p.limit.fold(hits)(l => hits.take(l)).map { case (id, src) =>
+      decode(p.columns, id, src)
+    }, () => first.scrollId.foreach { sid =>
+      try client.clearScroll(sid) catch { case _: Throwable => () }
+    })
   }
 
-  override def get(): InternalRow = current
-  override def close(): Unit = scrollId.foreach { sid =>
-    try client.clearScroll(sid) catch { case _: Throwable => () }
-  }
-
-  private def decode(id: String, src: JValue): InternalRow = {
+  private def decode(schema: StructType, id: String, src: JValue): InternalRow = {
     val values = schema.fields.map { f =>
       if (f.name == "_id") UTF8String.fromString(id)
       else (src \ f.name) match {

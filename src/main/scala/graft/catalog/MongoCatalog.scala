@@ -1,14 +1,7 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -30,7 +23,7 @@ import graft.sources.MongoWire
   *  - LIMIT → the find limit.
   * The cursor streams batches — executor memory is O(batch), and rows
   * decode straight off the wire iterator. */
-object MongoCatalog {
+object MongoCatalog extends WireConnector {
 
   val format: String = classOf[MongoSource].getName
 
@@ -93,9 +86,7 @@ object MongoCatalog {
     case _: Double => Some(DoubleType)
     case _ => None
   }
-}
 
-class MongoSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Option(options.get("schema")) match {
       case Some(ddl) => StructType.fromDDL(ddl)
@@ -108,93 +99,49 @@ class MongoSource extends TableProvider {
             throw new IllegalArgumentException(
               "mongo: empty collection and no `schema` option — cannot infer"))
           StructType(first.flatMap { case (k, v) =>
-            MongoCatalog.inferType(v).map(t => StructField(k, t))
+            inferType(v).map(t => StructField(k, t))
           })
         } finally c.close()
     }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new MongoTable(schema, properties.get("host"), properties.get("port").toInt,
-      properties.get("db"), properties.get("collection"))
+  override def relation(schema: StructType, options: CaseInsensitiveStringMap): WireRelation =
+    MongoRelation(schema, options.get("host"), options.get("port").toInt,
+      options.get("db"), options.get("collection"))
 }
 
-final class MongoTable(tableSchema: StructType, host: String, port: Int,
-    db: String, coll: String) extends Table with SupportsRead {
-  override def name(): String = s"mongodb:$db.$coll"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
+class MongoSource extends WireSource(MongoCatalog)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-      private val fields = tableSchema.fieldNames.toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var filterDoc: MongoWire.Doc = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
+/** One collection; the single split (reference MongoSplitManager) is one
+  * streaming cursor. */
+final case class MongoRelation(schema: StructType, host: String, port: Int,
+    db: String, coll: String) extends WireRelation {
 
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        val (ok, rest) = filters.partition(f =>
-          MongoCatalog.clause(f, fields).isDefined)
-        pushed = ok
-        val clauses = ok.toSeq.flatMap(f => MongoCatalog.clause(f, fields))
-        filterDoc = clauses match {
-          case Nil => Nil
-          case one :: Nil => one
-          case many => Seq("$and" -> many)
-        }
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
+  type Split = Unit
 
-      override def build(): Scan =
-        new MongoScan(host, port, db, coll, projected, filterDoc, limit)
-    }
-}
+  private def fields: Set[String] = schema.fieldNames.toSet
 
-final class MongoScan(host: String, port: Int, db: String, coll: String,
-    projected: StructType, filterDoc: MongoWire.Doc, limit: Option[Int])
-    extends Scan with Batch with Serializable {
-  override def readSchema(): StructType = projected
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"MongoScan($db.$coll, filter=$filterDoc, columns=${projected.fieldNames.mkString(",")})"
-
-  // reference MongoSplitManager: a single split; the cursor streams
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(MongoPartition(): InputPartition)
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, d, c, schema, f, lim) = (host, port, db, coll, projected, filterDoc, limit)
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new MongoReader(h, p, d, c, schema, f, lim)
-    }
+  private def filterDoc(p: Pushdown): MongoWire.Doc = {
+    val clauses = p.filters.flatMap(MongoCatalog.clause(_, fields))
+    if (clauses.isEmpty) Nil else Seq("$and" -> clauses)
   }
-}
 
-final case class MongoPartition() extends InputPartition
+  override def name: String = s"mongodb:$db.$coll"
 
-final class MongoReader(host: String, port: Int, db: String, coll: String,
-    schema: StructType, filterDoc: MongoWire.Doc, limit: Option[Int])
-    extends PartitionReader[InternalRow] {
-  private val client = new MongoWire.Client(host, port)
-  private val projection: Option[MongoWire.Doc] =
-    if (schema.isEmpty) None
-    else Some(schema.fieldNames.toSeq.map(f => f -> (1: Any)))
-  private val docs = client.find(db, coll, filterDoc, projection, limit)
-  private var current: InternalRow = _
+  override def pushable(f: Filter): Boolean = MongoCatalog.clause(f, fields).isDefined
 
-  override def next(): Boolean = {
-    if (!docs.hasNext) false
-    else {
-      val d = docs.next()
-      current = InternalRow.fromSeq(schema.fields.toSeq.map { f =>
+  override def describe(p: Pushdown): String =
+    s"MongoScan($db.$coll, filter=${filterDoc(p)}, columns=${p.columns.fieldNames.mkString(",")})"
+
+  override def splits(p: Pushdown): Seq[Unit] = Seq(())
+
+  override def rows(p: Pushdown, split: Unit): WireRows = {
+    val client = new MongoWire.Client(host, port)
+    val projection: Option[MongoWire.Doc] =
+      if (p.columns.isEmpty) None
+      else Some(p.columns.fieldNames.toSeq.map(f => f -> (1: Any)))
+    val docs = client.find(db, coll, filterDoc(p), projection, p.limit)
+    new WireRows(docs.map { d =>
+      InternalRow.fromSeq(p.columns.fields.toSeq.map { f =>
         MongoWire.get(d, f.name).orNull match {
           case null => null
           case v => (f.dataType, v) match {
@@ -212,9 +159,6 @@ final class MongoReader(host: String, port: Int, db: String, coll: String,
           }
         }
       })
-      true
-    }
+    }, () => client.close())
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = client.close()
 }

@@ -1,19 +1,6 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.PgWire
 
@@ -22,20 +9,12 @@ import graft.sources.PgWire
   * filters/projection/LIMIT become remote SQL, splits come from MIN/MAX
   * bounds on a partition column, the `query` passthrough table function
   * ships raw SQL). Transport here is graft.sources.PgWire (the public v3
-  * frontend/backend protocol), SQL generation rides the same
-  * JdbcSqlDialect family the Derby catalog factored out — PG quoting is
-  * the `Quoted` dialect (double-quoted, case-preserved identifiers).
-  *
-  * Scale shape: the DRIVER runs only bounded metadata SQL (LIMIT 0 schema
-  * probe, one MIN/MAX row); each EXECUTOR task owns one range split and
-  * STREAMS its rows off its own socket (PgWire.queryStream, O(row)
-  * memory). Pushed filters are rendered into every split's WHERE, so
-  * filtering happens in the remote engine, not in Spark. */
-object PgCatalog {
+  * frontend/backend protocol); SQL generation and splits are the shared
+  * [[SqlEngine]] stack. Each executor task STREAMS its split's rows off
+  * its own socket (PgWire.queryStream, O(row) memory). */
+object PgCatalog extends SqlEngine("pg", "PgScan", rangeSplits = true) {
 
   val format: String = classOf[PgSource].getName
-
-  private[catalog] val dialect: JdbcSqlDialect = JdbcSqlDialect.Quoted
 
   def read(spark: SparkSession, host: String, port: Int, table: String,
       partitionColumn: Option[String] = None, numPartitions: Int = 4): DataFrame = {
@@ -52,286 +31,21 @@ object PgCatalog {
       .option("host", host).option("port", port.toString).option("query", sql)
       .load()
 
-  private[catalog] def sparkType(oid: Int): DataType = oid match {
-    case PgWire.OidBool => BooleanType
-    case PgWire.OidInt2 => ShortType
-    case PgWire.OidInt4 => IntegerType
-    case PgWire.OidInt8 => LongType
-    case PgWire.OidFloat4 => FloatType
-    case PgWire.OidFloat8 => DoubleType
-    case PgWire.OidText | PgWire.OidVarchar => StringType
-    case other => throw new IllegalArgumentException(s"pg: unmapped type oid $other")
-  }
-
-  /** Literal → remote SQL text; None = not pushable. */
-  private[catalog] def sqlLit(v: Any): Option[String] = v match {
-    case null => None
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case s: UTF8String => sqlLit(s.toString)
-    case b: Boolean => Some(if (b) "TRUE" else "FALSE")
-    case n @ (_: Long | _: Int | _: Short | _: Byte) => Some(n.toString)
-    // NaN/Infinity have no SQL literal — keep the filter in Spark, where it
-    // evaluates fine, instead of shipping invalid remote SQL
-    case d: Double => if (java.lang.Double.isFinite(d)) Some(d.toString) else None
-    case f: Float => if (java.lang.Float.isFinite(f)) Some(f.toString) else None
-    case _ => None // decimals/dates/timestamps: evaluate in Spark
-  }
-
-  /** One pushed Filter → one remote WHERE clause (reference BaseJdbcClient
-    * `toPredicate` shapes), rendered through the dialect. */
-  private[catalog] def clause(f: Filter, fields: Set[String]): Option[String] = {
-    def col(c: String): Option[String] = if (fields(c)) Some(dialect.quote(c)) else None
-    f match {
-      case EqualTo(c, v) => for { q <- col(c); l <- sqlLit(v) } yield s"$q = $l"
-      case GreaterThan(c, v) => for { q <- col(c); l <- sqlLit(v) } yield s"$q > $l"
-      case GreaterThanOrEqual(c, v) => for { q <- col(c); l <- sqlLit(v) } yield s"$q >= $l"
-      case LessThan(c, v) => for { q <- col(c); l <- sqlLit(v) } yield s"$q < $l"
-      case LessThanOrEqual(c, v) => for { q <- col(c); l <- sqlLit(v) } yield s"$q <= $l"
-      case In(c, vs) if vs.nonEmpty =>
-        val ls = vs.toSeq.map(sqlLit)
-        if (col(c).isEmpty || ls.exists(_.isEmpty)) None
-        else Some(s"${dialect.quote(c)} IN (${ls.flatten.mkString(", ")})")
-      case IsNull(c) => col(c).map(q => s"$q IS NULL")
-      case IsNotNull(c) => col(c).map(q => s"$q IS NOT NULL")
-      case And(l, r) => for { a <- clause(l, fields); b <- clause(r, fields) }
-        yield s"($a AND $b)"
-      case Or(l, r) => for { a <- clause(l, fields); b <- clause(r, fields) }
-        yield s"($a OR $b)"
-      case Not(inner) => clause(inner, fields).map(a => s"NOT ($a)")
-      case _ => None
-    }
-  }
-}
-
-class PgSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val client = new PgWire.Client(options.get("host"), options.get("port").toInt)
+  override def query(host: String, port: Int, sql: String)
+      : (Seq[PgWire.Column], Vector[Seq[Any]]) = {
+    val client = new PgWire.Client(host, port)
     try {
-      val probe = Option(options.get("query")) match {
-        case Some(q) => s"SELECT * FROM ($q) probe LIMIT 0"
-        case None => s"SELECT * FROM ${PgCatalog.dialect.tableName(options.get("table"))} LIMIT 0"
-      }
-      val (cols, _) = client.query(probe)
-      StructType(cols.map(c => StructField(c.name, PgCatalog.sparkType(c.oid))))
+      val (cols, rows) = client.query(sql)
+      (cols, rows.map(SqlEngine.decode(cols, _)))
     } finally client.close()
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new PgTable(schema, properties.get("host"), properties.get("port").toInt,
-      Option(properties.get("table")), Option(properties.get("query")),
-      Option(properties.get("partitionColumn")),
-      Option(properties.get("numPartitions")).map(_.toInt).getOrElse(4))
-}
-
-final class PgTable(tableSchema: StructType, host: String, port: Int,
-    table: Option[String], rawQuery: Option[String],
-    partitionColumn: Option[String], numPartitions: Int)
-    extends Table with SupportsRead {
-  override def name(): String = s"pg:${table.getOrElse("(query)")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit
-        with SupportsPushDownAggregates with SupportsPushDownTopN
-        with SupportsPushDownOffset {
-      private val fields = tableSchema.fieldNames.toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var clauses: Seq[String] = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
-      private var offset: Option[Int] = None
-      private var orderBy: Seq[String] = Nil
-      private var agg: Option[AggPushdown.Pushed] = None
-      private var aggSchema: StructType = _
-
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        // raw-query passthrough takes no extra predicates (reference `query`
-        // PTF contract: the text runs as written)
-        if (rawQuery.isDefined) return filters
-        val (ok, rest) = filters.partition(f =>
-          PgCatalog.clause(f, fields).isDefined)
-        pushed = ok
-        clauses = ok.toSeq.flatMap(f => PgCatalog.clause(f, fields))
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        // with an aggregate pushed, the scan output IS the agg schema
-        if (agg.isEmpty) projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
-
-      /** OFFSET pushdown (reference PushOffsetIntoTableScan rule family):
-        * a global row skip is only meaningful when ONE split serves the
-        * whole ordered result — range-split scans refuse it (a per-split
-        * OFFSET would skip rows from every split). */
-      override def pushOffset(o: Int): Boolean =
-        if (rawQuery.isDefined || partitionColumn.isDefined) false
-        else { offset = Some(o); true }
-
-      /** TopN pushdown (reference PushTopNIntoTableScan.java:42): each
-        * split ships ORDER BY + LIMIT remotely; a single-split scan is
-        * FULLY pushed (Spark's sort disappears), range splits are partial
-        * (per-split top-n, Spark merges). */
-      override def pushTopN(orders: Array[SortOrder], l: Int): Boolean = {
-        if (rawQuery.isDefined || agg.isDefined) return false
-        AggPushdown.orderBySql(orders.toSeq, fields, PgCatalog.dialect.quote) match {
-          case Some(os) => orderBy = os; limit = Some(l); true
-          case None => false
-        }
-      }
-      override def isPartiallyPushed(): Boolean = partitionColumn.isDefined
-
-      /** Single-split scans (no range partitioning) push COMPLETE: the
-        * remote GROUP BY is the global answer, Spark's aggregate vanishes.
-        * Range-split scans push PARTIAL: each split aggregates its range
-        * remotely, Spark merges |groups|-sized partials. */
-      override def supportCompletePushDown(a: Aggregation): Boolean =
-        rawQuery.isEmpty && partitionColumn.isEmpty &&
-          AggPushdown.translate(a, fields, PgCatalog.dialect.quote).isDefined
-
-      override def pushAggregation(a: Aggregation): Boolean = {
-        if (rawQuery.isDefined) return false
-        AggPushdown.translate(a, fields, PgCatalog.dialect.quote) match {
-          case None => false
-          case Some(p) =>
-            // one bounded LIMIT-0 probe for the remote result types (the
-            // same trick the schema probe uses; Spark casts as needed)
-            val client = new PgWire.Client(host, port)
-            try {
-              val (cols, _) = client.query(
-                s"SELECT ${p.selectList.mkString(", ")} FROM " +
-                  s"${PgCatalog.dialect.tableName(table.get)}${p.groupByClause} LIMIT 0")
-              aggSchema = StructType(cols.zipWithIndex.map { case (c, i) =>
-                StructField(s"_pushed_$i", PgCatalog.sparkType(c.oid))
-              })
-              agg = Some(p)
-              true
-            } catch { case _: Exception => false } finally client.close()
-        }
-      }
-
-      override def build(): Scan = new PgScan(host, port, table, rawQuery,
-        if (rawQuery.isDefined) tableSchema
-        else if (agg.isDefined) aggSchema else projected,
-        clauses, limit, partitionColumn.filter(_ => rawQuery.isEmpty),
-        numPartitions, agg, orderBy, offset)
-    }
-}
-
-final class PgScan(host: String, port: Int, table: Option[String],
-    rawQuery: Option[String], projected: StructType, clauses: Seq[String],
-    limit: Option[Int], partitionColumn: Option[String], numPartitions: Int,
-    agg: Option[AggPushdown.Pushed] = None, orderBy: Seq[String] = Nil,
-    offset: Option[Int] = None)
-    extends Scan with Batch with Serializable {
-
-  override def readSchema(): StructType = projected
-
-  override def toBatch: Batch = this
-
-  private def selectList: String =
-    agg.map(_.selectList.mkString(", ")).getOrElse {
-      if (projected.isEmpty) "1"
-      else projected.fieldNames.map(PgCatalog.dialect.quote).mkString(", ")
-    }
-
-  /** The remote SQL for one split — the observable pushdown artifact. With
-    * an aggregate pushed, each split ships its own GROUP BY (restricted to
-    * its range) and only |groups| rows come back per split. */
-  private[catalog] def splitSql(range: Option[(Long, Long, Boolean)]): String =
-    rawQuery.getOrElse {
-      val conds = clauses ++ range.map { case (lo, hi, last) =>
-        val c = PgCatalog.dialect.quote(partitionColumn.get)
-        if (last) s"($c >= $lo AND $c <= $hi)" else s"($c >= $lo AND $c < $hi)"
-      }
-      val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-      val groupBy = agg.map(_.groupByClause).getOrElse("")
-      val order =
-        if (orderBy.isEmpty) "" else orderBy.mkString(" ORDER BY ", ", ", "")
-      // Spark pushes the PRE-OFFSET cap as the limit (limit' = limit +
-      // offset); SQL's LIMIT applies after OFFSET, so the remote clause is
-      // LIMIT (limit' − offset) OFFSET offset
-      val lim = limit.map(l =>
-        s" LIMIT ${math.max(0, l - offset.getOrElse(0))}").getOrElse("")
-      val off = offset.map(o => s" OFFSET $o").getOrElse("")
-      s"SELECT $selectList FROM ${PgCatalog.dialect.tableName(table.get)}$where$groupBy$order$lim$off"
-    }
-
-  override def description(): String = s"PgScan(${splitSql(None)})"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    partitionColumn match {
-      case Some(pc) if rawQuery.isEmpty =>
-        // one bounded MIN/MAX metadata row on the driver → N range splits
-        val client = new PgWire.Client(host, port)
-        try {
-          val (_, rows) = client.query(
-            PgCatalog.dialect.boundsQuery(table.get, pc))
-          val (minS, maxS) = (rows.head.head, rows.head(1))
-          if (minS == null || maxS == null)
-            Array(PgRangePartition(None): InputPartition)
-          else {
-            val (lo, hi) = (minS.toDouble.toLong, maxS.toDouble.toLong)
-            val n = math.max(1, numPartitions)
-            val step = math.max(1L, (hi - lo + n) / n)
-            // split i = [lo+i*step, lo+(i+1)*step); the final split closes
-            // inclusively at hi so the union covers [lo, hi] exactly once
-            (0 until n).flatMap { i =>
-              val a = lo + i * step
-              if (a > hi) None
-              else {
-                val last = i == n - 1 || a + step > hi
-                Some(PgRangePartition(Some((a, if (last) hi else a + step, last)))
-                  : InputPartition)
-              }
-            }.toArray
-          }
-        } finally client.close()
-      case _ => Array(PgRangePartition(None): InputPartition)
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, schema) = (host, port, projected)
-    val self = this
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new PgSplitReader(h, p,
-          self.splitSql(partition.asInstanceOf[PgRangePartition].range), schema)
-    }
+  override def stream(host: String, port: Int, sql: String)
+      : (Iterator[Seq[Any]], () => Unit) = {
+    val client = new PgWire.Client(host, port)
+    val (cols, rows) = client.queryStream(sql)
+    (rows.map(SqlEngine.decode(cols, _)), () => client.close())
   }
 }
 
-final case class PgRangePartition(range: Option[(Long, Long, Boolean)])
-    extends InputPartition
-
-/** One split's remote query, streamed off the executor's own socket. */
-final class PgSplitReader(host: String, port: Int, sql: String,
-    schema: StructType) extends PartitionReader[InternalRow] {
-  private val client = new PgWire.Client(host, port)
-  private val (cols, rows) = client.queryStream(sql)
-  private val oids = cols.map(_.oid).toArray
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!rows.hasNext) false
-    else {
-      val texts = rows.next()
-      val values = schema.fields.indices.map { i =>
-        PgWire.decode(texts(i), oids(i)) match {
-          case null => null
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        }
-      }
-      current = InternalRow.fromSeq(values)
-      true
-    }
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = client.close()
-}
+class PgSource extends WireSource(PgCatalog)

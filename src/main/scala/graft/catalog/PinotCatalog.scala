@@ -1,32 +1,20 @@
 package graft.catalog
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.PinotWire
+import graft.sources.{PgWire, PinotWire}
 
 /** Pinot connector over the broker API (reference: plugin/trino-pinot —
   * broker queries carry the pushed-down SQL, the broker fans out across
   * its own segments and returns one resultTable; the connector's work is
   * SQL generation + decode, with passthrough "dynamic tables" for raw
-  * broker SQL). Pushed filters/projection/LIMIT render through the same
-  * dialect machinery as the other SQL-speaking catalogs.
+  * broker SQL). Pushed filters/projection/LIMIT render through the shared
+  * [[SqlEngine]] stack.
   *
   * Split shape follows the reference's broker path: ONE split per query —
   * the scale-out lives inside Pinot (its servers scan segments in
   * parallel), so more Spark splits would only duplicate the broker work. */
-object PinotCatalog {
+object PinotCatalog extends SqlEngine("pinot", "PinotScan", rangeSplits = false) {
 
   val format: String = classOf[PinotSource].getName
 
@@ -41,111 +29,17 @@ object PinotCatalog {
     spark.read.format(format)
       .option("host", host).option("port", port.toString).option("query", sql)
       .load()
+
+  /** Pinot defaults to 10 rows without a LIMIT — always send one. */
+  override def defaultLimit: Option[Int] = Some(Int.MaxValue)
+
+  override def query(host: String, port: Int, sql: String)
+      : (Seq[PgWire.Column], Vector[Seq[Any]]) =
+    new PinotWire.Client(host, port).query(sql)
+
+  override def stream(host: String, port: Int, sql: String)
+      : (Iterator[Seq[Any]], () => Unit) =
+    (query(host, port, sql)._2.iterator, () => ())
 }
 
-class PinotSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val c = new PinotWire.Client(options.get("host"), options.get("port").toInt)
-    val probe = Option(options.get("query")) match {
-      case Some(q) => s"SELECT * FROM ($q) probe LIMIT 0"
-      case None => s"SELECT * FROM ${options.get("table")} LIMIT 0"
-    }
-    val (cols, _) = c.query(probe)
-    StructType(cols.map(col => StructField(col.name, PgCatalog.sparkType(col.oid))))
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new PinotTable(schema, properties.get("host"), properties.get("port").toInt,
-      Option(properties.get("table")), Option(properties.get("query")))
-}
-
-final class PinotTable(tableSchema: StructType, host: String, port: Int,
-    table: Option[String], rawQuery: Option[String]) extends Table with SupportsRead {
-  override def name(): String = s"pinot:${table.getOrElse("(query)")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-      private val fields = tableSchema.fieldNames.toSet
-      private var pushed: Array[Filter] = Array.empty
-      private var clauses: Seq[String] = Nil
-      private var projected: StructType = tableSchema
-      private var limit: Option[Int] = None
-
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        if (rawQuery.isDefined) return filters
-        val (ok, rest) = filters.partition(f =>
-          PgCatalog.clause(f, fields).isDefined)
-        pushed = ok
-        clauses = ok.toSeq.flatMap(f => PgCatalog.clause(f, fields))
-        rest
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        projected = requiredSchema
-      override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
-
-      override def build(): Scan = new PinotScan(host, port, table, rawQuery,
-        if (rawQuery.isDefined) tableSchema else projected, clauses, limit)
-    }
-}
-
-final class PinotScan(host: String, port: Int, table: Option[String],
-    rawQuery: Option[String], projected: StructType, clauses: Seq[String],
-    limit: Option[Int]) extends Scan with Batch with Serializable {
-  override def readSchema(): StructType = projected
-  override def toBatch: Batch = this
-
-  private[catalog] def brokerSql: String = rawQuery.getOrElse {
-    val selectList =
-      if (projected.isEmpty) "1"
-      else projected.fieldNames.map(PgCatalog.dialect.quote).mkString(", ")
-    val where = if (clauses.isEmpty) "" else clauses.mkString(" WHERE ", " AND ", "")
-    // pinot defaults to 10 rows without a LIMIT — always send one
-    val lim = s" LIMIT ${limit.getOrElse(Int.MaxValue)}"
-    s"SELECT $selectList FROM ${table.get}$where$lim"
-  }
-
-  override def description(): String = s"PinotScan($brokerSql)"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(PinotPartition(): InputPartition)
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (h, p, schema, sql) = (host, port, projected, brokerSql)
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new PinotReader(h, p, sql, schema)
-    }
-  }
-}
-
-final case class PinotPartition() extends InputPartition
-
-final class PinotReader(host: String, port: Int, sql: String,
-    schema: StructType) extends PartitionReader[InternalRow] {
-  private val (_, rows) = new PinotWire.Client(host, port).query(sql)
-  private val it = rows.iterator
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!it.hasNext) false
-    else {
-      val r = it.next()
-      current = InternalRow.fromSeq(schema.fields.indices.map { i =>
-        r(i) match {
-          case null => null
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        }
-      })
-      true
-    }
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
+class PinotSource extends WireSource(PinotCatalog)

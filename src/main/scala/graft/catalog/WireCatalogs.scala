@@ -14,13 +14,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (a connector name + connection properties becomes a queryable
   * catalog, CatalogFactory → Connector).
   *
-  * Each `loadTable` builds the connector's DSv2 Table (schema from the
+  * `loadTable` builds the connector's [[WireTable]] (schema from the
   * connector's own bounded metadata probe), so every pushdown the scan
   * implements (filters, pruning, limit, TopN, OFFSET, aggregates) rides
   * through catalog-qualified SQL names unchanged. These catalogs are
   * read-only fronts; writes go through the connectors' own surfaces. */
-private[catalog] abstract class WireCatalogBase extends TableCatalog
-    with SupportsNamespaces {
+private[catalog] abstract class WireCatalogBase(connector: WireConnector,
+    tableOption: String) extends TableCatalog with SupportsNamespaces {
   protected var catalogName: String = _
   protected var host: String = _
   protected var port: Int = _
@@ -38,6 +38,13 @@ private[catalog] abstract class WireCatalogBase extends TableCatalog
   // subset does not serve; point lookups (what queries do) are complete
   override def listTables(namespace: Array[String]): Array[Identifier] =
     Array.empty
+
+  override def loadTable(ident: Identifier): Table = {
+    val m = new util.HashMap[String, String]()
+    m.put("host", host); m.put("port", port.toString); m.put(tableOption, ident.name())
+    val options = new CaseInsensitiveStringMap(m)
+    new WireTable(connector.relation(connector.inferSchema(options), options))
+  }
 
   override def tableExists(ident: Identifier): Boolean =
     try { loadTable(ident); true } catch { case _: Exception => false }
@@ -67,42 +74,14 @@ private[catalog] abstract class WireCatalogBase extends TableCatalog
     throw new UnsupportedOperationException(s"$catalogName is read-only")
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
     throw new UnsupportedOperationException(s"$catalogName is read-only")
-
-  protected def opts(extra: (String, String)*): CaseInsensitiveStringMap = {
-    val m = new util.HashMap[String, String]()
-    m.put("host", host); m.put("port", port.toString)
-    extra.foreach { case (k, v) => m.put(k, v) }
-    new CaseInsensitiveStringMap(m)
-  }
 }
 
 /** `CREATE CATALOG c USING postgresql WITH (host=…, port=…)`. */
-class PgWireCatalog extends WireCatalogBase {
-  override def loadTable(ident: Identifier): Table = {
-    val o = opts("table" -> ident.name())
-    val src = new PgSource
-    src.getTable(src.inferSchema(o), Array.empty,
-      new util.HashMap[String, String](o.asCaseSensitiveMap()))
-  }
-}
+class PgWireCatalog extends WireCatalogBase(PgCatalog, "table")
 
 /** `CREATE CATALOG c USING clickhouse WITH (host=…, port=…)`. */
-class ChWireCatalog extends WireCatalogBase {
-  override def loadTable(ident: Identifier): Table = {
-    val o = opts("table" -> ident.name())
-    val src = new ChSource
-    src.getTable(src.inferSchema(o), Array.empty,
-      new util.HashMap[String, String](o.asCaseSensitiveMap()))
-  }
-}
+class ChWireCatalog extends WireCatalogBase(ChCatalog, "table")
 
 /** `CREATE CATALOG c USING elasticsearch WITH (host=…, port=…)` —
   * tables are indices. */
-class EsWireCatalog extends WireCatalogBase {
-  override def loadTable(ident: Identifier): Table = {
-    val o = opts("index" -> ident.name())
-    val src = new EsSource
-    src.getTable(src.inferSchema(o), Array.empty,
-      new util.HashMap[String, String](o.asCaseSensitiveMap()))
-  }
-}
+class EsWireCatalog extends WireCatalogBase(EsCatalog, "index")

@@ -335,6 +335,9 @@ object Dedup {
     var rounds = 0
     while (!converged && rounds < 20) {
       val next = ckpt(smallStar(largeStar(edges)))
+      // `next` is materialized with its lineage cut: the previous round's
+      // blocks have no reader left
+      graft.engine.Checkpoints.release(edges)
       val nextSig = signature(next)
       converged = nextSig == sig
       sig = nextSig

@@ -214,13 +214,17 @@ object TextAnalysis {
       merges += ((r, pair, cnt))
       val Array(a, b) = pair.split(" ", 2)
       val merged = concat(lit(a), lit(b))
-      words = words.select($"w", $"freq",
+      val next = words.select($"w", $"freq",
           aggregate($"toks", array().cast("array<string>"),
             (acc, x) => when(size(acc) > 0 &&
                 element_at(acc, -1) === a && x === b,
               concat(slice(acc, lit(1), size(acc) - 1), array(merged)))
               .otherwise(concat(acc, array(x)))).as("toks"))
         .localCheckpoint(eager = true)
+      // round r is materialized with its lineage cut: round r-1's blocks
+      // have no reader left
+      graft.engine.Checkpoints.release(words)
+      words = next
     }
     (words, merges.toSeq)
   }

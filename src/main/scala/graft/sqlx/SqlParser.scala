@@ -2001,19 +2001,29 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
         while (more) { xs += parseSortItem(); more = acceptOp(",") }
         xs.toSeq
       } else Seq.empty
-    // frame: capture raw until the matching ')'
+    // frame: capture raw until the matching ')'. A `?` marker in it binds
+    // to the next EXECUTE argument in Spark's rendering (an unbound one
+    // plans as 0, for DESCRIBE OUTPUT).
     val frame =
       if (peek.is("ROWS") || peek.is("RANGE") || peek.is("GROUPS")) {
-        val startPos = peek.pos
+        val out = new java.lang.StringBuilder
+        var spanStart = peek.pos
         var depth = 1
-        var endPos = startPos
+        var endPos = spanStart
         while (depth > 0) {
           if (peek.isOp("(")) depth += 1
           else if (peek.isOp(")")) depth -= 1
           else if (peek.kind == TEof) err("unbalanced window frame")
-          if (depth > 0) { endPos = peek.pos + peek.text.length; p += 1 }
+          if (depth > 0) {
+            endPos = peek.pos + peek.text.length
+            if (peek.isOp("?")) {
+              out.append(src, spanStart, peek.pos)
+                .append(parameter().map(SqlFrontend.renderExpr).getOrElse("0"))
+              spanStart = endPos
+            } else p += 1
+          }
         }
-        Some(src.substring(startPos, endPos).trim)
+        Some(out.append(src, spanStart, endPos).toString.trim)
       } else None
     expectOp(")")
     WindowSpec(partitionBy, orderBy, frame)

@@ -714,20 +714,35 @@ private[graft] object Statements {
   /** Execute a parsed non-query statement (TrinoDialect dispatches queries
     * to SqlFrontend). */
   private[sqlx] def execute(spark: SparkSession, dir: String, st: Statement): DataFrame = {
-    // SET/RESET SESSION, USE, PREPARE and DEALLOCATE write JVM-global state
-    // below. The statement server answers them from the AST as protocol
-    // headers, so under a request's context they can only arrive nested in
-    // EXECUTE [IMMEDIATE]: refuse them there instead of leaking one
-    // client's session into every other client's.
-    if (SessionContext.current.isDefined) (st match {
-      case SetSessionStmt(k, _) => Some(s"SET SESSION $k")
-      case ResetSessionStmt(k) => Some(s"RESET SESSION $k")
-      case UseStmt(schema) => Some(s"USE $schema")
-      case PrepareStmt(n, _) => Some(s"PREPARE $n")
-      case DeallocateStmt(n) => Some(s"DEALLOCATE PREPARE $n")
-      case _ => None
-    }).foreach(what => throw new IllegalArgumentException(
-      s"$what changes session state: send it as its own statement"))
+    if (SessionContext.current.isDefined) {
+      // SET/RESET SESSION, USE, PREPARE and DEALLOCATE write JVM-global
+      // state below. The statement server answers them from the AST as
+      // protocol headers, so under a request's context they can only arrive
+      // nested in EXECUTE [IMMEDIATE]: refuse them there instead of leaking
+      // one client's session into every other client's.
+      def nested(what: String): Nothing = throw new IllegalArgumentException(
+        s"$what changes session state: send it as its own statement")
+      // Transactions, SET TIME ZONE, SET PATH and SET ROLE also write
+      // JVM-global state (one transaction snapshot whose ROLLBACK reverts
+      // every client's writes, the shared session's time zone, the global
+      // path and roles), and the protocol has no per-session form for them
+      // yet: refuse them outright.
+      def unsupported(what: String): Nothing = throw new IllegalArgumentException(
+        s"$what is not supported over the statement protocol")
+      st match {
+        case SetSessionStmt(k, _) => nested(s"SET SESSION $k")
+        case ResetSessionStmt(k) => nested(s"RESET SESSION $k")
+        case UseStmt(schema) => nested(s"USE $schema")
+        case PrepareStmt(n, _) => nested(s"PREPARE $n")
+        case DeallocateStmt(n) => nested(s"DEALLOCATE PREPARE $n")
+        case TransactionStmt("START") => unsupported("START TRANSACTION")
+        case TransactionStmt(kind) => unsupported(kind)
+        case _: SetTimeZoneStmt => unsupported("SET TIME ZONE")
+        case _: SetPathStmt => unsupported("SET PATH")
+        case _: SetRoleStmt => unsupported("SET ROLE")
+        case _ =>
+      }
+    }
     st match {
       // the PREPARE family changes nothing a cached plan reads
       case _: PrepareStmt | _: DeallocateStmt | _: DescribeIOStmt =>

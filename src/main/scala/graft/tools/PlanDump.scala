@@ -40,7 +40,7 @@ object PlanDump {
         // queryExecution.explainString is what .explain("formatted") prints
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        Files.write(outDir.resolve(s"${n}_$suffix.txt"), txt.getBytes("UTF-8"))
+        Files.write(outDir.resolve(s"${n}_$suffix.txt"), normalize(txt).getBytes("UTF-8"))
         println(s"[plandump] wrote $n ($suffix)")
       } catch {
         case e: Throwable =>
@@ -48,5 +48,18 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** Plan text that diffs clean between two runs of one commit: each
+    * `plan_id` (a JVM-wide counter of plan nodes built so far) is
+    * renumbered in order of first appearance, which keeps the references
+    * between nodes, and object identities (`Cls@1b2c3d4e`, `[J@…`, a
+    * lambda's hidden class `$Lambda$5008/0x…`) lose their hash. */
+  private[tools] def normalize(plan: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    val renumbered = "plan_id=(\\d+)".r.replaceAllIn(plan,
+      m => s"plan_id=${ids.getOrElseUpdate(m.group(1), ids.size + 1)}")
+    val unhashed = "(?<=[\\w$\\[])@[0-9a-f]+\\b".r.replaceAllIn(renumbered, "@<hash>")
+    "(?<=\\$Lambda\\$)\\d+/0x[0-9a-f]+".r.replaceAllIn(unhashed, "<id>")
   }
 }

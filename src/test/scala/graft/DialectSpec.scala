@@ -172,6 +172,15 @@ class DialectSpec extends SparkSpec {
       val keys = TrinoDialect.sql(spark, sfDir, "EXECUTE spec_c USING 3").collect()
       assert(keys.map(_.getAs[Number](0).longValue).toSeq == Seq(3L), text)
     }
+    // a `?` inside a window frame binds to its EXECUTE argument, and
+    // DESCRIBE INPUT counts it
+    TrinoDialect.sql(spark, sfDir, "PREPARE spec_wf FROM SELECT n_nationkey AS k, " +
+      "sum(n_nationkey) OVER (ORDER BY n_nationkey " +
+      "ROWS BETWEEN ? PRECEDING AND CURRENT ROW) AS s FROM nation")
+    assert(TrinoDialect.sql(spark, sfDir, "DESCRIBE INPUT spec_wf").count() == 1L)
+    val sums = TrinoDialect.sql(spark, sfDir, "EXECUTE spec_wf USING 1").collect()
+      .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).sortBy(_._1)
+    assert(sums.toSeq == (0L to 24L).map(k => k -> (if (k == 0) 0L else 2 * k - 1)))
   }
 
   test("pattern exclusion {- -} omits rows from per-row output but keeps consumption") {

@@ -153,4 +153,41 @@ class SessionHeadersSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     assert(unresolvedInProcess("sess_x"))
     a.close()
   }
+
+  /** Runs `sql` on `c`; the SQLException message if it was refused. */
+  private def refusal(c: java.sql.Connection, sql: String): Option[String] =
+    try { c.createStatement().execute(sql); None }
+    catch { case e: java.sql.SQLException => Some(e.getMessage) }
+
+  test("one client's ROLLBACK cannot revert another client's committed rows") {
+    val a = connect()
+    val b = connect()
+    b.createStatement().execute(
+      "CREATE OR REPLACE TABLE sess_txn AS SELECT n_nationkey AS k FROM nation")
+    def count(): Long = {
+      val rs = b.createStatement().executeQuery("SELECT count(*) AS n FROM sess_txn")
+      rs.next(); rs.getLong("n")
+    }
+    assert(count() == 25L)
+    val start = refusal(a, "START TRANSACTION")
+    b.createStatement().execute("INSERT INTO sess_txn VALUES (99)")
+    assert(count() == 26L)
+    val rollback = refusal(a, "ROLLBACK")
+    assert(count() == 26L, "B's committed row was rolled back by A")
+    Seq("START TRANSACTION" -> start, "ROLLBACK" -> rollback).foreach { case (what, e) =>
+      assert(e.exists(_.contains(s"$what is not supported over the statement protocol")),
+        s"$what: $e")
+    }
+    a.close(); b.close()
+  }
+
+  test("SET TIME ZONE over the protocol leaves the shared session's zone alone") {
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    val a = connect()
+    val e = refusal(a, "SET TIME ZONE 'Asia/Tokyo'")
+    assert(spark.conf.get("spark.sql.session.timeZone") == zone)
+    assert(e.exists(_.contains("SET TIME ZONE is not supported over the statement protocol")),
+      e.toString)
+    a.close()
+  }
 }
