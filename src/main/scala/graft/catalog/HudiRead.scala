@@ -122,7 +122,8 @@ object HudiRead {
       throw new IllegalArgumentException(
         s"Hudi table $tablePath has no visible base files")
     }
-    val base = spark.read.parquet(latest.map(_.getAbsolutePath).sorted: _*)
+    val base = graft.sources.Tables.parquet(spark, root.getAbsolutePath,
+      latest.map(_.getAbsolutePath).sorted)
     if (!logMerge || tableType != "MERGE_ON_READ") return base
     if (view.logFiles.isEmpty) return base
     mergeLogs(spark, base, view.logFiles, view.completed)

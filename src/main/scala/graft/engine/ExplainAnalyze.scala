@@ -35,7 +35,7 @@ object ExplainAnalyze {
         p.nodeName,
         p.metrics.map { case (k, m) => k -> m.value }.toMap)
       // AQE wraps the physical plan: descend into the materialized plans.
-      // Cached intermediates (operators.materialized / sortedResult) likewise
+      // Cached intermediates (operators.materialized) likewise
       // hide their compute plan inside InMemoryRelation — report it too, as
       // the reference's EXPLAIN ANALYZE reports through its materialization
       // boundaries (metrics reflect the cache-fill execution if it ran here,

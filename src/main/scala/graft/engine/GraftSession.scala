@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle.partitions is a *default*; at 100 TB a real deployment raises it
   *    (or relies on AQE coalescing from a high initial number).
   *  - UTC session timezone pins timestamp semantics for oracle parity.
+  *  - No planning-time Spark jobs in a query: a table read reuses its
+  *    cached parquet footer schema (`graft.sources.Tables.parquet`; only
+  *    the first read of a file version infers it), and a small result sort
+  *    gathers into one partition instead of sampling a range
+  *    ([[graft.plans.SmallResultSort]]). A large result sort keeps range
+  *    partitioning.
   *
   * Generated-code reuse (the role of Trino's ExpressionCompiler class cache,
   * reference: core/trino-main/src/main/java/io/trino/sql/gen/ExpressionCompiler.java)
@@ -50,12 +56,17 @@ object GraftSession {
       .appName("graft")
       // custom planning: the spatial-join rewrite (the engine's
       // ExtractSpatialJoins analogue) registers through the public
-      // extensions API like any third-party Catalyst extension; so does the
+      // extensions API like any third-party Catalyst extension; so do the
       // physical rule that keeps numeric and date constants out of
-      // generated source (one compiled class per statement shape)
+      // generated source (one compiled class per statement shape) and the
+      // one that plans a small result sort without a sampling job (with AQE
+      // on and off, plus its DSv2 write guard)
       .withExtensions { e =>
         e.injectOptimizerRule(_ => graft.plans.SpatialJoinRewrite())
         e.injectColumnar(_ => graft.plans.ReferenceLiterals.columnarRule)
+        e.injectColumnar(_ => graft.plans.SmallResultSort.columnarRule)
+        e.injectQueryStagePrepRule(_ => graft.plans.SmallResultSort)
+        e.injectPlannerStrategy(_ => graft.plans.SmallResultSort.writeGuard)
       }
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

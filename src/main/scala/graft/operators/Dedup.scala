@@ -138,12 +138,7 @@ object Dedup {
       .withColumn("jaccard", $"inter".cast("double") / ($"sz_a" + $"sz_b" - $"inter"))
       .filter($"jaccard" >= 0.8)
       .select($"doc_a", $"doc_b", round($"jaccard", 6).as("jaccard"))
-      // sortedResult (r19): the pair-agg + rescore tail otherwise runs twice
-      // (orderBy's range-sample job). The explicit key matters here: this
-      // plan embeds the per-invocation commonArr literal, so the default
-      // canonicalized-plan key would never evict the previous invocation's
-      // blocks (see operators package).
-      .transform(r => sortedResult(r, "q_dedup_ngram.result")($"doc_a", $"doc_b"))
+      .orderBy($"doc_a", $"doc_b")
   }
   val qDedupNgramSql: String =
     """WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),

@@ -163,8 +163,7 @@ object TextPipeline {
     // explicit registry key (r19): this plan embeds the per-invocation
     // benchSet literal, so the default canonicalized-plan key would never
     // evict the previous invocation's blocks — repeated runs would
-    // accumulate persisted working sets for the session lifetime (same
-    // leak class fixed for q_dedup_ngram's sortedResult).
+    // accumulate persisted working sets for the session lifetime.
     materialized(docs.filter($"doc_id" % 50 =!= 0)
       .select($"doc_id",
         arraySetCountDistinct(
@@ -345,9 +344,7 @@ object TextPipeline {
         size($"kept").cast("long").as("n_kept"),
         concat_ws(" ", slice($"kept", 1, 10)).as("cleaned_head"))
       .withColumn("n_removed", $"n_tokens" - $"n_kept")
-      // sortedResult (r19): the rebuild join + in-row filter stage otherwise
-      // runs twice (orderBy's range-sample job) — see operators package
-      .transform(t => sortedResult(t, "q_dedup_substring_spans.result")($"doc_id"))
+      .orderBy($"doc_id")
   }
   val qDedupSubstringSpansSql: String =
     s"""WITH docs AS (

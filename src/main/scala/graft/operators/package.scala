@@ -82,8 +82,8 @@ package object operators {
     materialized(df, df.queryExecution.analyzed.canonicalized.semanticHash().toString)
 
   /** `materialized` with an EXPLICIT registry key — for plans that embed a
-    * per-invocation driver-collected literal (e.g. q_dedup_ngram's
-    * stop-shingle array): their canonicalized plans differ on every
+    * per-invocation driver-collected literal (e.g. q_text_contamination's
+    * benchmark shingle set): their canonicalized plans differ on every
     * invocation (Array equality is by reference), so the default key would
     * never evict the previous invocation's handle and repeated runs would
     * accumulate persisted blocks for the life of the session. A stable
@@ -101,37 +101,6 @@ package object operators {
     })
     df
   }
-
-  /** Final total-order presentation sort over an in-region materialized
-    * child (r19). A global orderBy plans Exchange(rangepartitioning), whose
-    * RangePartitioner runs a SAMPLE job over the child before the sort job;
-    * upstream shuffle stages are reused between the two jobs, but every
-    * operator of the stage FEEDING the sort (final aggregation, broadcast
-    * probes, windows, NFA kernels) executes twice. Materializing the
-    * pre-sort result lets the sample job fill the cache and the sort job
-    * read it — the tail computes once. Same recompute discipline as
-    * `materialized` (keyed registry: each invocation evicts the previous
-    * one's blocks and recomputes from the inputs; nothing survives across
-    * runs).
-    *
-    * Applied ONLY where a bench-methodology A/B (solo per-query runs,
-    * alternated spellings, calibration-bracketed — OPTIMIZATION_r19.md
-    * "sort-boundary") showed a real win: q_dedup_ngram and
-    * q_dedup_substring_spans, whose pre-sort tails carry multi-cpu-second
-    * join/rescore stages. For the other nine sort-ending bench queries the
-    * cache build + registry churn cost MORE than the duplicated tail
-    * (match_recognize: cpu-flat, wall −10%; q1/q7/windows: wall −10..−25%)
-    * — a same-JVM interleaved tool A/B had claimed the opposite and was
-    * JIT-order-biased; trust the bench-methodology numbers.
-    *
-    * Side effect at CONSTRUCTION time, not execution time: building the
-    * frame persists it and evicts the previous frame built under `key`.
-    * Constructing a query twice before running the first therefore drops
-    * the first's cache (it recomputes, still correct), and a frame that is
-    * built but never run keeps its persisted entry registered until the
-    * next construction under the same key. */
-  def sortedResult(df: DataFrame, key: String)(cols: org.apache.spark.sql.Column*): DataFrame =
-    materialized(df, key).orderBy(cols: _*)
 
   type Q = (SparkSession, String) => DataFrame
 }

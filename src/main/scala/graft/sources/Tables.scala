@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Table access layer over the deterministic parquet fixtures (TESTDATA.md).
   *
@@ -9,6 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ConnectorSplitManager.java:20) — in Spark the parquet DSv2 source already provides
   * split planning, vectorized reads, predicate pushdown and column pruning, so this
   * layer is only naming + schema pinning.
+  *
+  * Footer schemas are cached ([[parquet]]): a plain `spark.read.parquet`
+  * infers its schema with a Spark job that reads a footer, so every table
+  * read in a query would cost one job before the query's own. The reference
+  * caches table metadata the same way (CachingHiveMetastore). One
+  * fingerprint rule (`Fp`: mtime and length) decides staleness for both
+  * this cache and `registerAll`'s views.
   *
   * Scale note: `spark.read.parquet` on a directory of files partitions by rowgroup
   * up to `spark.sql.files.maxPartitionBytes`; nothing here assumes single-file input.
@@ -23,7 +32,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
 
   /** events.ts has shipped as both parquet TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS) across fixture generations. NANOS is rejected by
@@ -34,12 +43,13 @@ object Tables {
     * core/trino-spi/src/main/java/io/trino/spi/type/TimestampType.java:35).
     * MICROS needs only an NTZ→session-TZ cast (session TZ is pinned UTC, so
     * the instant is unchanged). Dispatch on the observed read schema, not
-    * the fixture generation. */
+    * the fixture generation. The nanosAsLong read needs
+    * `spark.sql.legacy.parquet.nanosAsLong`, which `GraftSession.builder`
+    * pins for every session; a read never writes session conf. */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case LongType => timestamp_micros(expr("ts div 1000"))
       case TimestampNTZType => col("ts").cast("timestamp")
@@ -57,7 +67,8 @@ object Tables {
     * Fingerprint-cached per session (r19, guide §6 metadata I/O): the
     * dialect front door calls this for EVERY statement, and each
     * `spark.read.parquet` pays a driver-side footer/schema read — measured
-    * 0.62 s of the 0.88 s q_http_statement round trip at sf0.1. A view is
+    * 0.62 s of the 0.88 s q_http_statement round trip at sf0.1 (that read
+    * is now cached by [[parquet]] as well). A view is
     * re-registered only when it is missing from the session or its source
     * file changed ((dir, mtime, length) fingerprint — the same staleness
     * rule Spark's own filesourcePartitionFileCache uses); a CHANGED file
@@ -76,6 +87,42 @@ object Tables {
       Fp(dir, kids.foldLeft(f.lastModified())((m, k) => math.max(m, k.lastModified())),
         kids.foldLeft(kids.length.toLong * 1000003L)((s, k) => s + k.length()))
     } else Fp(dir, f.lastModified(), f.length())
+
+  /** The session confs that change the schema Spark infers from a parquet
+    * footer. */
+  private val footerReadConfs = Seq(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED)
+
+  private final case class FooterKey(files: Seq[Fp], confs: Seq[Any])
+
+  /** One entry per table path: the schema inferred for the key it was read
+    * under. A changed key (a rewritten file, a new file set, other read
+    * confs) replaces the entry, so the map holds one schema per table ever
+    * read, never one per version. */
+  private val footerSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (FooterKey, StructType)]()
+
+  /** Read parquet `files` of the table at `path` without the schema
+    * inference job. The first read of a (files, fingerprints, confs) key
+    * infers the schema as `spark.read.parquet(files)` would; later reads
+    * pass it back through `spark.read.schema`, which plans the same scan.
+    * `files` defaults to the path itself (a file, or a directory Spark
+    * lists). */
+  private[graft] def parquet(spark: SparkSession, path: String,
+      files: Seq[String] = Nil): DataFrame = {
+    val paths = if (files.isEmpty) Seq(path) else files
+    val key = FooterKey(paths.map(p => fpOf(p, new java.io.File(p))),
+      footerReadConfs.map(spark.sessionState.conf.getConf(_)))
+    val schema = footerSchemas.get(path) match {
+      case (k, s) if k == key => s
+      case _ =>
+        val s = spark.read.parquet(paths: _*).schema
+        footerSchemas.put(path, (key, s))
+        s
+    }
+    spark.read.schema(schema).parquet(paths: _*)
+  }
   private val registered = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, Fp]]())

@@ -1284,7 +1284,7 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
         val n = ident("window name")
         expectKw("AS")
         windows += ((n,
-          if (rowPatternAhead) WindowSpec(Nil, Nil, None, rowPattern = Some(rawBalancedParens()))
+          if (rowPatternAhead) WindowSpec(Nil, Nil, None, rowPattern = Some(rawRowPatternBlock()))
           else parseWindowSpec()))
         moreW = acceptOp(",")
       }
@@ -1487,7 +1487,7 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
       }
     if (peek.is("MATCH_RECOGNIZE")) {
       p += 1
-      val blockRaw = rawBalancedParens()
+      val blockRaw = rawRowPatternBlock()
       MatchRel(base, blockRaw, relAlias())
     } else if (peek.is("TABLESAMPLE")) {
       // TABLESAMPLE BERNOULLI|SYSTEM (percentage) — SqlBase.g4 sampleType
@@ -1557,23 +1557,37 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
     false
   }
 
-  /** Raw source span of a balanced-paren block starting at the next '('. */
-  private def rawBalancedParens(): String = {
+  /** Raw source span of a row-pattern block (MATCH_RECOGNIZE, or a WINDOW
+    * spec with PATTERN) starting at the next '('. A `?` inside the PATTERN
+    * clause's parentheses is a quantifier (`A?`, `A+?`); anywhere else
+    * (DEFINE, MEASURES) it is a parameter marker and binds to the next
+    * EXECUTE argument in Spark's rendering, like a window frame's (an
+    * unbound one renders as NULL, for DESCRIBE INPUT/OUTPUT). */
+  private def rawRowPatternBlock(): String = {
     if (!peek.isOp("(")) err("expected '('")
-    val startTok = p
+    val out = new java.lang.StringBuilder
+    var spanStart = peek.pos + 1
     var depth = 0
-    while (p < tokens.length) {
-      if (peek.isOp("(")) depth += 1
-      else if (peek.isOp(")")) {
+    var patternDepth = 0 // depth of the open PATTERN (...) group; 0 outside it
+    while (true) {
+      val t = peek
+      if (t.kind == TEof) err("unbalanced parentheses")
+      if (t.isOp("(")) {
+        depth += 1
+        p += 1
+      } else if (t.isOp(")")) {
+        if (depth == patternDepth) patternDepth = 0
         depth -= 1
-        if (depth == 0) {
-          val startPos = tokens(startTok).pos
-          val endPos = peek.pos
-          p += 1
-          return src.substring(startPos + 1, endPos)
-        }
-      } else if (peek.kind == TEof) err("unbalanced parentheses")
-      p += 1
+        p += 1
+        if (depth == 0) return out.append(src, spanStart, t.pos).toString
+      } else if (depth == 1 && t.is("PATTERN") && peek2.isOp("(")) {
+        patternDepth = 2
+        p += 1
+      } else if (t.isOp("?") && patternDepth == 0) {
+        out.append(src, spanStart, t.pos)
+          .append(parameter().map(SqlFrontend.renderExpr).getOrElse("NULL"))
+        spanStart = t.pos + t.text.length
+      } else p += 1
     }
     err("unbalanced parentheses")
   }

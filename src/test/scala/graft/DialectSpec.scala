@@ -181,6 +181,16 @@ class DialectSpec extends SparkSpec {
     val sums = TrinoDialect.sql(spark, sfDir, "EXECUTE spec_wf USING 1").collect()
       .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).sortBy(_._1)
     assert(sums.toSeq == (0L to 24L).map(k => k -> (if (k == 0) 0L else 2 * k - 1)))
+    // so does one in a MATCH_RECOGNIZE MEASURES or DEFINE clause, while a
+    // PATTERN `?` stays a quantifier
+    TrinoDialect.sql(spark, mrFixtureDir, "PREPARE spec_mr FROM SELECT * FROM mseq " +
+      "MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY event_id " +
+      "MEASURES A.event_id AS s, A.value + ? AS v ONE ROW PER MATCH " +
+      "PATTERN (A B?) DEFINE A AS value >= ?, B AS value < 50)")
+    assert(TrinoDialect.sql(spark, mrFixtureDir, "DESCRIBE INPUT spec_mr").count() == 2L)
+    val matches = TrinoDialect.sql(spark, mrFixtureDir, "EXECUTE spec_mr USING 1, 90")
+      .orderBy("s").collect().map(r => r.getAs[Number]("s").longValue -> r.getAs[Double]("v"))
+    assert(matches.toSeq == Seq(1L -> 96.0, 2L -> 93.0, 5L -> 97.0, 8L -> 94.0, 9L -> 92.0))
   }
 
   test("pattern exclusion {- -} omits rows from per-row output but keeps consumption") {
