@@ -52,47 +52,42 @@ object MatchRecognize {
   final case class Measure(name: String, dataType: DataType,
       eval: (IndexedSeq[Row], RowPattern.PatternMatch) => Any)
 
-  /** The group-streaming contract requires a non-null LongType partition key
-    * (generalizing to arbitrary keys means keying on InternalRow ordinals;
-    * fixture/typical fact keys are bigints). Fail fast with a clear message
-    * instead of an opaque ClassCastException at executor time. */
-  private def requireLongKey(df: DataFrame, partitionCol: String): Int = {
-    val keyField = df.schema(partitionCol)
-    require(keyField.dataType == org.apache.spark.sql.types.LongType,
-      s"MATCH_RECOGNIZE partition column '$partitionCol' must be BIGINT, " +
-        s"got ${keyField.dataType.simpleString}")
-    df.schema.fieldIndex(partitionCol)
+  /** The rows of a stream sorted by partition key, grouped by equal key
+    * (columns `keyIdx`, of any type; a NULL key is a group of its own), one
+    * group buffered at a time — the loop under every pattern operator. */
+  private[graft] def keyGroups(rows: Iterator[Row], keyIdx: Seq[Int]): Iterator[IndexedSeq[Row]] = {
+    val keyOf: Row => Any = keyIdx match {
+      case Seq(k) => _.get(k)
+      case ks => r => ks.map(r.get)
+    }
+    val buf = rows.buffered
+    new Iterator[IndexedSeq[Row]] {
+      def hasNext: Boolean = buf.hasNext
+      def next(): IndexedSeq[Row] = {
+        val key = keyOf(buf.head)
+        val group = scala.collection.mutable.ArrayBuffer[Row]()
+        while (buf.hasNext && keyOf(buf.head) == key) group += buf.next()
+        group.toIndexedSeq
+      }
+    }
   }
 
-  /** Shared secondary-sort group runner: buffers one partition-key group at a
-    * time from the sorted stream and emits `handle(key, groupRows)`. */
+  /** Secondary-sort group runner for the single-key operators: one
+    * exchange on `partitionCol`, a sort by (key, order) within partitions,
+    * then `handle(groupRows)` per key group. */
   private def perGroup(
       df: DataFrame, partitionCol: String, orderCol: String,
       outSchema: StructType)(
-      handle: (Long, IndexedSeq[Row]) => Seq[Row]): DataFrame = {
-    val keyIdx = requireLongKey(df, partitionCol)
+      handle: IndexedSeq[Row] => Seq[Row]): DataFrame = {
+    val keyIdx = Seq(df.schema.fieldIndex(partitionCol))
     val n = df.sparkSession.sparkContext.defaultParallelism
     df.repartition(n, col(partitionCol))
       .sortWithinPartitions(col(partitionCol), col(orderCol))
-      .mapPartitions { it =>
-        new Iterator[Seq[Row]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[Row] = {
-            require(!buf.head.isNullAt(keyIdx),
-              s"MATCH_RECOGNIZE partition key is NULL (column index $keyIdx)")
-            val key = buf.head.getLong(keyIdx)
-            val group = scala.collection.mutable.ArrayBuffer[Row]()
-            while (buf.hasNext && !buf.head.isNullAt(keyIdx) &&
-              buf.head.getLong(keyIdx) == key) group += buf.next()
-            handle(key, group.toIndexedSeq)
-          }
-        }.flatten
-      }(Encoders.row(outSchema))
+      .mapPartitions(keyGroups(_, keyIdx).flatMap(handle))(Encoders.row(outSchema))
   }
 
-  /** One row per match. `partitionCol` must be LongType;
-    * `orderCol` orders rows within a partition (total order recommended). */
+  /** One row per match, keyed by `partitionCol`; `orderCol` orders rows
+    * within a partition (total order recommended). */
   def oneRowPerMatch(
       df: DataFrame,
       partitionCol: String,
@@ -103,11 +98,11 @@ object MatchRecognize {
       skipPastLastRow: Boolean = true): DataFrame = {
 
     val matcher = new RowPattern.Matcher(RowPattern.parse(pattern), RowPattern.liftAll(define))
-    val keyField = df.schema(partitionCol)
-    val outSchema = StructType(
-      StructField(keyField.name, keyField.dataType, nullable = false) +:
-        measures.map(m => StructField(m.name, m.dataType)))
-    perGroup(df, partitionCol, orderCol, outSchema) { (key, part) =>
+    val keyIdx = df.schema.fieldIndex(partitionCol)
+    val outSchema = StructType(df.schema(keyIdx) +:
+      measures.map(m => StructField(m.name, m.dataType)))
+    perGroup(df, partitionCol, orderCol, outSchema) { part =>
+      val key = part.head.get(keyIdx)
       matcher.findAll(part, skipPastLastRow).map { m =>
         Row.fromSeq(key +: measures.map(_.eval(part, m)))
       }
@@ -229,40 +224,29 @@ object MatchRecognize {
     // when the input already carries a window over the same spec.
     val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCols.map(col): _*)
     df.withColumn("__mr_rn", row_number().over(w))
-      .mapPartitions { it =>
-        new Iterator[Seq[Row]] {
-          private val buf = it.buffered
-          private def keyOf(r: Row): Seq[Any] = keyIdx.map(r.get)
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[Row] = {
-            val key = keyOf(buf.head)
-            val group = scala.collection.mutable.ArrayBuffer[Row]()
-            while (buf.hasNext && keyOf(buf.head) == key) group += buf.next()
-            val part = group.toIndexedSeq
-            def emit(r: Row, mn: Any, cls: Any): Row =
-              Row.fromSeq((0 until inWidth).map(r.get) ++ Seq(mn, cls))
-            val matches = matcher.scanAll(part, skip)
-            val matched = matches.zipWithIndex.flatMap { case (m, mi) =>
-              val mn = (mi + 1).toLong
-              if (m.end > m.start)
-                m.visibleSteps.map { case (sym, idx) => emit(part(idx), mn, sym) }
-              else if (rowsPerMatch != AllOmitEmpty)
-                Seq(emit(part(m.start), mn, null))
-              else Seq.empty
-            }
-            if (rowsPerMatch != AllWithUnmatched) matched
-            else {
-              val covered = new java.util.BitSet(part.length)
-              matches.foreach { m =>
-                if (m.end > m.start) m.steps.foreach { case (_, i) => covered.set(i) }
-                else covered.set(m.start)
-              }
-              matched ++ part.indices.filterNot(covered.get).map(i =>
-                emit(part(i), null, null))
-            }
+      .mapPartitions(keyGroups(_, keyIdx).flatMap { part =>
+        def emit(r: Row, mn: Any, cls: Any): Row =
+          Row.fromSeq((0 until inWidth).map(r.get) ++ Seq(mn, cls))
+        val matches = matcher.scanAll(part, skip)
+        val matched = matches.zipWithIndex.flatMap { case (m, mi) =>
+          val mn = (mi + 1).toLong
+          if (m.end > m.start)
+            m.visibleSteps.map { case (sym, idx) => emit(part(idx), mn, sym) }
+          else if (rowsPerMatch != AllOmitEmpty)
+            Seq(emit(part(m.start), mn, null))
+          else Seq.empty
+        }
+        if (rowsPerMatch != AllWithUnmatched) matched
+        else {
+          val covered = new java.util.BitSet(part.length)
+          matches.foreach { m =>
+            if (m.end > m.start) m.steps.foreach { case (_, i) => covered.set(i) }
+            else covered.set(m.start)
           }
-        }.flatten
-      }(Encoders.row(outSchema))
+          matched ++ part.indices.filterNot(covered.get).map(i =>
+            emit(part(i), null, null))
+        }
+      })(Encoders.row(outSchema))
   }
 
   /** ALL ROWS PER MATCH: every row of every match, annotated with
@@ -282,14 +266,14 @@ object MatchRecognize {
       skipPastLastRow: Boolean = true): DataFrame = {
 
     val matcher = new RowPattern.Matcher(RowPattern.parse(pattern), RowPattern.liftAll(define))
-    val keyField = df.schema(partitionCol)
+    val keyIdx = df.schema.fieldIndex(partitionCol)
     val includeIdx = includeCols.map(df.schema.fieldIndex)
     val outSchema = StructType(
-      (StructField(keyField.name, keyField.dataType, nullable = false) +:
-        includeCols.map(c => df.schema(c))) ++
-        Seq(StructField("match_number", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("classifier", org.apache.spark.sql.types.StringType, nullable = false)))
-    perGroup(df, partitionCol, orderCol, outSchema) { (key, part) =>
+      (df.schema(keyIdx) +: includeCols.map(c => df.schema(c))) ++
+        Seq(StructField("match_number", LongType, nullable = false),
+          StructField("classifier", StringType, nullable = false)))
+    perGroup(df, partitionCol, orderCol, outSchema) { part =>
+      val key = part.head.get(keyIdx)
       matcher.findAll(part, skipPastLastRow).zipWithIndex.flatMap { case (m, mi) =>
         m.visibleSteps.map { case (sym, idx) =>
           val r = part(idx)

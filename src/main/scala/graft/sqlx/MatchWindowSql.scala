@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, expr, row_number}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.plans.RowPattern
+import graft.plans.{MatchRecognize, RowPattern}
+import SqlAst._
 
 /** Row-pattern recognition in WINDOW specifications (reference grammar
   * core/trino-grammar/src/main/antlr4/io/trino/grammar/sql/SqlBase.g4:876-880
@@ -44,9 +45,10 @@ import graft.plans.RowPattern
   * O(rows × match length) NFA work per partition — the same bound as the
   * reference's per-row matcher loop.
   *
-  * Entry: SqlParser keeps each pattern spec's raw body and parses the
-  * select list; SqlFrontend's planning pass hands both to [[plan]] and
-  * evaluates the result over the planned FROM relation with [[lowerDf]].
+  * Entry: SqlParser parses each pattern spec into a
+  * [[SqlAst.RowPatternBlock]] (shared with MATCH_RECOGNIZE) and the select
+  * list into expressions; SqlFrontend's planning pass hands both to [[plan]]
+  * and evaluates the result over the planned FROM relation with [[lowerDf]].
   *
   * Select items (r15): plain expressions, declared measures `m OVER w [AS a]`,
   * and WINDOW FUNCTION calls over a pattern window `fn(args) OVER w` —
@@ -72,44 +74,35 @@ import graft.plans.RowPattern
   * rows whose measures are all NULL.
   */
 private[graft] object MatchWindowSql {
+  import MatchRecognizeSql.{Call, columnsOf, nodes}
 
-  /** Select item: Spark SQL `text` with its output `alias`; a measure
-    * reference `name OVER w` has `measure` = the measure name, and a
-    * window-function call `fn(args) OVER w` arrives with `text` = the call
-    * without its OVER, `measure` = None and `window` = w. */
-  final case class Item(text: String, alias: String, measure: Option[String],
-      window: Option[String])
-
-  /** One pattern-bearing window specification. */
-  final case class Wspec(name: String,
-      partitionBy: Seq[String], orderBy: Seq[String],
-      measures: Seq[(String, String)], pattern: String,
-      defines: Seq[(String, String)], subsets: Map[String, Seq[String]],
-      frameK: Option[Int], seek: Boolean, skip: RowPattern.SkipMode)
-
-  /** Whole query block: items over one or more pattern windows plus any
-    * number of PLAIN named windows (the reference treats pattern windows as
-    * ordinary window specifications coexisting with plain ones —
-    * pattern-recognition-in-window.md; SqlBase.g4 windowSpecification).
-    * Pattern windows evaluate through the sequential matcher (one
-    * exchange+sort each); plain windows lower through Spark's normal window
-    * path by inlining their spec at the call site. `plainWindows` maps
-    * lowercase window name → rendered spec text. */
-  final case class Mw(items: Seq[Item], windows: Seq[Wspec],
-      plainWindows: Map[String, String])
-
-  private val windowKeywords = Seq(
-    "PARTITION BY", "ORDER BY", "MEASURES", "ROWS BETWEEN", "AFTER MATCH",
-    "INITIAL", "SEEK", "PATTERN", "SUBSET", "DEFINE")
+  /** Whole query block: select items (expression, output alias) over one
+    * or more pattern windows plus any number of PLAIN named windows (the
+    * reference treats pattern windows as ordinary window specifications
+    * coexisting with plain ones — pattern-recognition-in-window.md;
+    * SqlBase.g4 windowSpecification). Pattern windows evaluate through the
+    * sequential matcher (one exchange+sort each); plain windows lower
+    * through Spark's normal window path by inlining their spec at the call
+    * site. `plainWindows` is keyed by lowercase window name. */
+  final case class Mw(items: Seq[(Expr, String)], windows: Seq[(String, RowPatternBlock)],
+      plainWindows: Map[String, WindowSpec])
 
   private def fail(what: String): Nothing =
     throw new IllegalArgumentException(s"row-pattern window: $what")
 
-  /** Resolve a query block's select items against its pattern windows
-    * (`patterned`: name → raw spec body, as SqlParser captured it) and
-    * plain named windows, and parse each pattern window's clauses. */
-  def plan(items: Seq[Item], patterned: Seq[(String, String)],
-      plainWindows: Map[String, String]): Mw = {
+  /** A call over a named window: `fn(args) OVER w`. */
+  private object OverRef {
+    def unapply(e: Expr): Option[(Fn, String)] = e match {
+      case f @ Fn(_, _, _, Some(WindowSpec(_, _, _, Some(w), _))) => Some((f, w.toLowerCase))
+      case _ => None
+    }
+  }
+
+  /** Resolve a query block's select items against its pattern windows and
+    * plain named windows. Items are measure references `m OVER w`,
+    * window-function calls `fn(args) OVER w`, or plain expressions. */
+  def plan(items: Seq[(Expr, String)], patterned: Seq[(String, RowPatternBlock)],
+      plainWindows: Map[String, WindowSpec]): Mw = {
     val declared = patterned.map(_._1.toLowerCase).toSet
 
     // a window function over a pattern window evaluates over the frame
@@ -117,18 +110,17 @@ private[graft] object MatchWindowSql {
     // window.md "upon a window function call over the window"); lowered
     // here as a SYNTHESIZED measure on that window. Over a PLAIN window it
     // stays a regular Spark window function call.
-    val synth = scala.collection.mutable.Map[String, Seq[(String, String)]]()
+    val synth = scala.collection.mutable.Map[String, Seq[MeasureDef]]()
       .withDefaultValue(Seq.empty)
-    var synthId = 0
-    val resolved = items.map(it => it.copy(window = it.window.map(_.toLowerCase))).map {
-      case Item(call, alias, None, Some(w)) if declared(w) =>
-        val name = s"__wf$synthId"; synthId += 1
-        synth(w) = synth(w) :+ ((call, name))
-        Item(name, alias, Some(name), Some(w))
-      case Item(_, _, None, Some(w)) if !plainWindows.contains(w) =>
+    val resolved = items.map {
+      case (OverRef(call, w), alias) if declared(w) =>
+        val name = s"__wf${synth.values.map(_.length).sum}"
+        synth(w) = synth(w) :+ MeasureDef(call.copy(over = None), name)
+        (MeasureRef(name, w), alias)
+      case (OverRef(_, w), _) if !plainWindows.contains(w) =>
         fail(s"unknown window '$w' (declared: " +
           s"${(declared ++ plainWindows.keySet).mkString(", ")})")
-      case Item(_, _, Some(m), Some(w)) if !declared(w) =>
+      case (MeasureRef(m, w), _) if !declared(w.toLowerCase) =>
         fail(s"unknown pattern window '$w' for measure '$m' " +
           s"(pattern windows: ${declared.mkString(", ")})")
       case it => it
@@ -137,68 +129,23 @@ private[graft] object MatchWindowSql {
     // function name — two such calls (sum(a) OVER w, sum(b) OVER w) would
     // collide into ambiguous output columns, so collisions fail loudly
     // asking for AS aliases rather than producing duplicate names
-    val dup = resolved.groupBy(_.alias.toLowerCase).collectFirst {
+    val dup = resolved.groupBy(_._2.toLowerCase).collectFirst {
       case (a, is) if is.size > 1 => a
     }
     dup.foreach(a => fail(s"duplicate output column '$a' — " +
       "alias each window-function select item with AS <name>"))
 
-    val windows = patterned.map { case (wName, block) =>
-      val cs = MatchRecognizeSql.clauses(block, windowKeywords)
-      def one(kw: String): Option[String] = cs.collectFirst { case (`kw`, c) => c }
-      val seek = cs.exists(_._1 == "SEEK")
-      // frame extent (SqlBase.g4:879 boundedFrame): the reference requires
-      // the frame start at CURRENT ROW; the end bounds the match search
-      val frameK: Option[Int] = one("ROWS BETWEEN") match {
-        case None => None // default: CURRENT ROW AND UNBOUNDED FOLLOWING
-        case Some(f) =>
-          val t = f.trim
-          if ("(?is)^CURRENT\\s+ROW\\s+AND\\s+UNBOUNDED\\s+FOLLOWING$".r
-              .findFirstIn(t).isDefined) None
-          else if ("(?is)^CURRENT\\s+ROW\\s+AND\\s+CURRENT\\s+ROW$".r
-              .findFirstIn(t).isDefined) Some(0)
-          else "(?is)^CURRENT\\s+ROW\\s+AND\\s+(\\d+)\\s+FOLLOWING$".r
-            .findFirstMatchIn(t) match {
-            case Some(m) => Some(m.group(1).toInt)
-            case None => fail(
-              "frame must be ROWS BETWEEN CURRENT ROW AND " +
-                s"{CURRENT ROW | <n> FOLLOWING | UNBOUNDED FOLLOWING}, got '$t'")
-          }
-      }
-      val partition = MatchRecognizeSql.identList(
-        one("PARTITION BY").getOrElse(fail("PARTITION BY <cols>")), "PARTITION BY")
-      val order = MatchRecognizeSql.identList(
-        one("ORDER BY").getOrElse(fail("ORDER BY <cols>")), "ORDER BY")
-      val patternRaw = one("PATTERN").getOrElse(fail("PATTERN (...)")).trim
-      require(patternRaw.startsWith("(") && patternRaw.endsWith(")"),
-        s"PATTERN must be parenthesized, got '$patternRaw'")
-      val subsets = one("SUBSET").map(MatchRecognizeSql.splitTop(_).map { d =>
-        val m = "(?is)^\\s*(\\w+)\\s*=\\s*\\(([^)]*)\\)\\s*$".r.findFirstMatchIn(d)
-          .getOrElse(fail(s"SUBSET entry '$d'"))
-        m.group(1) -> m.group(2).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-      }.toMap).getOrElse(Map.empty)
-      val defines = MatchRecognizeSql.splitTop(
-          one("DEFINE").getOrElse(fail("DEFINE ..."))).map { d =>
-        val m = "(?is)^\\s*(\\w+)\\s+AS\\s+(.*)$".r.findFirstMatchIn(d)
-          .getOrElse(fail(s"DEFINE entry '$d'"))
-        (m.group(1), m.group(2).trim)
-      }
-      val measures = one("MEASURES").map(MatchRecognizeSql.splitTop(_).map { mm =>
-        val m = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s*$".r.findFirstMatchIn(mm)
-          .getOrElse(fail(s"MEASURES entry '$mm' (expected <expr> AS <alias>)"))
-        (m.group(1).trim, m.group(2))
-      }).getOrElse(Seq.empty) ++ synth(wName.toLowerCase)
-      val skip = MatchRecognizeSql.parseSkip(one("AFTER MATCH"), subsets)
-      Wspec(wName, partition, order, measures,
-        patternRaw.substring(1, patternRaw.length - 1), defines, subsets,
-        frameK, seek, skip)
+    val windows = patterned.map { case (name, b) =>
+      (name, b.copy(measures = b.measures ++ synth(name.toLowerCase)))
     }
     // every measure referenced by the select list must be declared in
     // its window
-    resolved.filter(_.measure.isDefined).foreach { it =>
-      val w = windows.find(_.name.equalsIgnoreCase(it.window.get)).get
-      if (!w.measures.exists(_._2.equalsIgnoreCase(it.measure.get)))
-        fail(s"measure '${it.measure.get}' is not declared in MEASURES of window '${w.name}'")
+    resolved.foreach {
+      case (MeasureRef(m, w), _) =>
+        val (name, b) = windows.find(_._1.equalsIgnoreCase(w)).get
+        if (!b.measures.exists(_.alias.equalsIgnoreCase(m)))
+          fail(s"measure '$m' is not declared in MEASURES of window '$name'")
+      case _ =>
     }
     Mw(resolved, windows, plainWindows)
   }
@@ -206,15 +153,11 @@ private[graft] object MatchWindowSql {
   def lowerDf(full: DataFrame, mw: Mw): DataFrame = {
     // column pruning across ALL windows + plain items
     val fieldNames = full.schema.fieldNames.toSeq
-    def refs(text: String): Seq[String] = {
-      val lower = fieldNames.map(f => f.toLowerCase -> f).toMap
-      "\\w+".r.findAllIn(text).toSeq.flatMap(w => lower.get(w.toLowerCase)).distinct
-    }
-    val keep = (mw.items.filter(_.measure.isEmpty).flatMap(i => refs(i.text)) ++
-      mw.plainWindows.values.flatMap(refs) ++
-      mw.windows.flatMap(w => w.partitionBy ++ w.orderBy ++
-        w.defines.flatMap(d => refs(d._2)) ++
-        w.measures.flatMap(m => refs(m._1)))).distinct
+    val keep = (columnsOf(mw.items.map(_._1) ++ mw.plainWindows.values.flatMap(w =>
+        w.partitionBy ++ w.orderBy.map(_.e)), fieldNames) ++
+      mw.windows.flatMap { case (_, b) => b.partitionBy ++ b.orderBy ++
+        columnsOf(b.defines.map(_._2) ++ b.measures.map(_.e), fieldNames) }).distinct
+    def prefix(wi: Int): String = s"__mw${wi}_"
     // one annotate pass per pattern window, chained: each adds its
     // (prefixed) measure columns behind its own exchange+sort — the
     // reference likewise partitions per window specification. Plain
@@ -222,17 +165,14 @@ private[graft] object MatchWindowSql {
     // normal window path; when a plain spec shares the pattern window's
     // (PARTITION BY, ORDER BY), EnsureRequirements reuses the exchange.
     val annotated = mw.windows.zipWithIndex.foldLeft(full.select(keep.map(col): _*)) {
-      case (df, (w, wi)) => annotate(df, w, s"__mw${wi}_")
+      case (df, ((name, b), wi)) => annotate(df, name, b, prefix(wi))
     }
-    annotated.selectExpr(mw.items.map { it =>
-      (it.measure, it.window) match {
-        case (Some(m), _) =>
-          val wi = mw.windows.indexWhere(_.name.equalsIgnoreCase(it.window.get))
-          s"__mw${wi}_$m AS ${it.alias}"
-        case (None, Some(w)) =>
-          s"${it.text} OVER (${mw.plainWindows(w)}) AS ${it.alias}"
-        case _ => s"${it.text} AS ${it.alias}"
-      }
+    annotated.select(mw.items.map {
+      case (MeasureRef(m, w), alias) =>
+        col(prefix(mw.windows.indexWhere(_._1.equalsIgnoreCase(w))) + m).as(alias)
+      case (OverRef(call, w), alias) =>
+        expr(SqlFrontend.renderExpr(call.copy(over = Some(mw.plainWindows(w))))).as(alias)
+      case (e, alias) => expr(SqlFrontend.renderExpr(e)).as(alias)
     }: _*)
   }
 
@@ -265,14 +205,12 @@ private[graft] object MatchWindowSql {
     }
   }
 
-  /** Add window `w`'s measures as `<prefix><name>` columns via one
+  /** Add window `name`'s measures as `<prefix><alias>` columns via one
     * exchange+sort and a streaming per-group sequential pass. */
-  private def annotate(input: DataFrame, mw: Wspec, prefix: String): DataFrame = {
+  private def annotate(input: DataFrame, name: String, b: RowPatternBlock,
+      prefix: String): DataFrame = {
     val spark = input.sparkSession
-    val mr = MatchRecognizeSql.Mr(mw.name, mw.partitionBy, mw.orderBy,
-      mw.measures, graft.plans.MatchRecognize.OneRow, RowPattern.SkipPastLastRow,
-      mw.pattern, mw.defines, mw.subsets)
-    val syms = MatchRecognizeSql.patternSymbols(mr)
+    val syms = MatchRecognizeSql.patternSymbols(b)
     var df = input
 
     // DEFINE routing, as the FROM-clause lowering: state-independent
@@ -280,157 +218,137 @@ private[graft] object MatchWindowSql {
     // variants, DefCols above); match-state-dependent ones → trace-aware
     // predicates. The matcher sees the FrameView, so stateful PREV/NEXT
     // clip at the frame edges automatically (index out of view → null).
-    val navOver =
-      s"OVER (PARTITION BY ${mw.partitionBy.mkString(", ")} ORDER BY ${mw.orderBy.mkString(", ")})"
-    // multi-offset physical navigation (PREV(x, n>1)) can read below the
-    // frame start from positions the offset-1 variant columns don't cover
-    // (view position 0 only) — route it through the stateful path, whose
-    // view-bounds clipping is offset-exact. Detection uses the balanced-paren
-    // call rewriter + top-level comma split, so an offset call whose first
-    // argument itself contains parens or commas — PREV(abs(x), 2),
-    // PREV(coalesce(x, y), 2) — classifies correctly (a paren-free regex
-    // would miss it and mis-route to the stateless path).
-    def offsetNav(cond: String): Boolean = {
-      var multi = false
-      MatchRecognizeSql.rewriteCalls(cond, Set("PREV", "NEXT")) { case (fn, arg) =>
-        if (MatchRecognizeSql.splitTop(arg).lengthCompare(1) > 0) multi = true
-        s"$fn($arg)"
-      }
-      multi
+    val nav = MatchRecognizeSql.window(b.partitionBy, b.orderBy)
+    def calls(cond: Expr, fn: String): Seq[Seq[Expr]] =
+      nodes(cond).collect { case Call(`fn`, args) => args }
+    // multi-offset physical navigation (PREV(x, n>1), PREV(abs(x), 2)) can
+    // read below the frame start from positions the offset-1 variant
+    // columns don't cover (view position 0 only) — route it through the
+    // stateful path, whose view-bounds clipping is offset-exact
+    val (stateful, simple) = b.defines.partition { case (sym, cond) =>
+      DefineEval.isStateful(cond, sym, syms) ||
+        (calls(cond, "PREV") ++ calls(cond, "NEXT")).exists(_.length > 1)
     }
-    val (stateful, simple) =
-      mw.defines.partition(d =>
-        DefineEval.isStateful(d._2, d._1, syms) || offsetNav(d._2))
     val helperCols = scala.collection.mutable.ArrayBuffer[String]()
-    def addBool(name: String, cond: String, sym: String): String = {
-      df = df.withColumn(name,
-        expr(MatchRecognizeSql.rewriteDefine(cond, sym, syms, navOver)))
-      helperCols += name
-      name
+    def addBool(colName: String, cond: Expr, sym: String): String = {
+      df = df.withColumn(colName, MatchRecognizeSql.defineColumn(cond, sym, nav))
+      helperCols += colName
+      colName
     }
-    /** Rewrite PREV and/or NEXT calls to NULL (out-of-frame navigation). */
-    def nulled(cond: String, prevNull: Boolean, nextNull: Boolean): String =
-      MatchRecognizeSql.rewriteCalls(cond, Set("PREV", "NEXT")) {
-        case ("PREV", arg) => if (prevNull) "NULL" else s"PREV($arg)"
-        case ("NEXT", arg) => if (nextNull) "NULL" else s"NEXT($arg)"
-        case (other, arg) => s"$other($arg)"
+    /** PREV and/or NEXT calls read NULL (out-of-frame navigation). */
+    def nulled(cond: Expr, prevNull: Boolean, nextNull: Boolean): Expr =
+      SqlFrontend.mapChildren(cond, nulled(_, prevNull, nextNull)) match {
+        case Call("PREV", _) if prevNull => Lit("NULL")
+        case Call("NEXT", _) if nextNull => Lit("NULL")
+        case other => other
       }
     val defPlan = simple.map { case (sym, cond) =>
-      val usesPrev = "(?i)\\bPREV\\s*\\(".r.findFirstIn(cond).isDefined
-      val usesNext = "(?i)\\bNEXT\\s*\\(".r.findFirstIn(cond).isDefined
+      val usesPrev = calls(cond, "PREV").nonEmpty
+      val usesNext = calls(cond, "NEXT").nonEmpty
       val n = addBool(s"${prefix}def_$sym", cond, sym)
       val a = if (usesPrev) addBool(s"${prefix}defA_$sym", nulled(cond, true, false), sym) else n
       val z = if (usesNext) addBool(s"${prefix}defZ_$sym", nulled(cond, false, true), sym) else n
-      val b =
+      val both =
         if (usesPrev && usesNext) addBool(s"${prefix}defB_$sym", nulled(cond, true, true), sym)
         else if (usesPrev) a else if (usesNext) z else n
-      (sym, n, a, z, b)
+      (sym, n, a, z, both)
     }
     val schema = df.schema
     val tracePreds: Map[String, RowPattern.TracePredicate] =
-      defPlan.map { case (sym, n, a, z, b) =>
+      defPlan.map { case (sym, n, a, z, both) =>
         val cols = DefCols(schema.fieldIndex(n), schema.fieldIndex(a),
-          schema.fieldIndex(z), schema.fieldIndex(b))
+          schema.fieldIndex(z), schema.fieldIndex(both))
         sym -> ((p: IndexedSeq[Row], v: Int, _: RowPattern.Trace) => {
           val ci = cols.at(v, p.length)
           !p(v).isNullAt(ci) && p(v).getBoolean(ci)
         }): (String, RowPattern.TracePredicate)
       }.toMap ++
         stateful.map { case (sym, cond) =>
-          sym -> DefineEval.compile(spark, schema, cond, sym, syms, mw.subsets)
+          sym -> DefineEval.define(spark, schema, cond, sym, syms, b.subsets)
         }
 
-    val compiled = mw.measures.map { case (e, name) =>
-      name -> DefineEval.compileMeasure(spark, schema, e, syms, mw.subsets)
+    val compiled = b.measures.map { m =>
+      m.alias -> DefineEval.measure(spark, schema, m.e, syms, b.subsets)
     }
-    val parsedPattern = RowPattern.parse(mw.pattern)
+    val parsedPattern = RowPattern.parse(b.pattern)
     // reference: "the anchor patterns ^ and $ are not allowed in a window
     // specification" (pattern-recognition-in-window.md Row pattern syntax)
     if (RowPattern.containsAnchor(parsedPattern))
       fail(s"anchor patterns ^ and $$ are not allowed in a window " +
-        s"specification (window '${mw.name}')")
+        s"specification (window '$name')")
     val matcher = new RowPattern.Matcher(parsedPattern, tracePreds)
-    val keyIdx = mw.partitionBy.map(schema.fieldIndex)
+    val keyIdx = b.partitionBy.map(schema.fieldIndex)
     val inWidth = schema.length
     val outSchema = StructType(schema.fields ++
-      compiled.map { case (name, cm) => StructField(prefix + name, cm.dataType) })
-    val frameK = mw.frameK
-    val seek = mw.seek
-    val skip = mw.skip
+      compiled.map { case (alias, cm) => StructField(prefix + alias, cm.dataType) })
+    val frameK = b.frameK
+    val seek = b.seek
+    val skip = b.skip
     // the row_number window pins hash-partition + sort; the DEFINE lag/lead
     // columns above share the same exchange (EnsureRequirements reuse)
-    val w = Window.partitionBy(mw.partitionBy.map(col): _*)
-      .orderBy(mw.orderBy.map(col): _*)
+    val w = Window.partitionBy(b.partitionBy.map(col): _*)
+      .orderBy(b.orderBy.map(col): _*)
     val annotated = df.withColumn(s"${prefix}rn", row_number().over(w))
       .mapPartitions { it =>
-        new Iterator[Seq[Row]] {
-          private val buf = it.buffered
-          private def keyOf(r: Row): Seq[Any] = keyIdx.map(r.get)
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[Row] = {
-            val key = keyOf(buf.head)
-            val group = scala.collection.mutable.ArrayBuffer[Row]()
-            while (buf.hasNext && keyOf(buf.head) == key) group += buf.next()
-            val part = group.toIndexedSeq
-            // Sequential processing with AFTER MATCH skip marking
-            // (reference pattern-recognition-in-window.md "Processing
-            // input"): rows before `skipUntil` were consumed by a previous
-            // match and produce NULL measures without attempting.
-            var skipUntil = 0
-            part.indices.map { i =>
-              val base = (0 until inWidth).map(part(i).get)
-              if (i < skipUntil) Row.fromSeq(base ++ compiled.map(_ => null))
-              else {
-                // search space = the frame extent [i, i+k] (always starting
-                // AT the current row — matching and navigation clip at BOTH
-                // frame edges through the view). INITIAL anchors only at
-                // view position 0; SEEK advances the anchor to the first
-                // in-frame position with a match.
-                val hi = frameK match {
-                  case None => part.length
-                  case Some(k) => math.min(part.length, i + k + 1)
-                }
-                val view: IndexedSeq[Row] = new FrameView(part, i, hi)
-                var rel = 0
-                var m: Option[RowPattern.PatternMatch] = None
-                var searching = true
-                while (searching && rel < view.length) {
-                  m = matcher.anchoredAtAllowEmpty(view, rel)
-                  searching = m.isEmpty && seek
-                  rel += 1
-                }
-                m match {
-                  case Some(pm) if pm.end > pm.start =>
-                    val trace = pm.steps.reverse.toList // most-recent-first
-                    val out = Row.fromSeq(base ++
-                      compiled.map(_._2.eval(view, trace, pm.end - 1)))
-                    // mark skipped rows (absolute indices); a skip target
-                    // at or before the current row simply skips nothing —
-                    // window processing advances row by row, so the
-                    // MATCH_RECOGNIZE infinite-resume hazard cannot arise
-                    skipUntil = skip match {
-                      case RowPattern.SkipPastLastRow => i + pm.end
-                      case RowPattern.SkipToNextRow => i + 1
-                      case RowPattern.SkipToVar(vars, first, label) =>
-                        val hits = pm.steps.collect { case (v, j) if vars(v) => j }
-                        if (hits.isEmpty) throw new IllegalArgumentException(
-                          s"AFTER MATCH SKIP TO $label: variable mapped no rows in the match")
-                        i + (if (first) hits.min else hits.max)
-                    }
-                    out
-                  case Some(pm) =>
-                    // EMPTY match: a successful match assigning no
-                    // variables — measures evaluate over an empty row
-                    // sequence (constants survive, column refs/navigation
-                    // NULL, COUNT 0); AFTER MATCH marks nothing
-                    Row.fromSeq(base ++ compiled.map(_._2.eval(view, Nil, -1)))
-                  case None =>
-                    Row.fromSeq(base ++ compiled.map(_ => null))
-                }
+        MatchRecognize.keyGroups(it, keyIdx).flatMap { part =>
+          // Sequential processing with AFTER MATCH skip marking
+          // (reference pattern-recognition-in-window.md "Processing
+          // input"): rows before `skipUntil` were consumed by a previous
+          // match and produce NULL measures without attempting.
+          var skipUntil = 0
+          part.indices.map { i =>
+            val base = (0 until inWidth).map(part(i).get)
+            if (i < skipUntil) Row.fromSeq(base ++ compiled.map(_ => null))
+            else {
+              // search space = the frame extent [i, i+k] (always starting
+              // AT the current row — matching and navigation clip at BOTH
+              // frame edges through the view). INITIAL anchors only at
+              // view position 0; SEEK advances the anchor to the first
+              // in-frame position with a match.
+              val hi = frameK match {
+                case None => part.length
+                case Some(k) => math.min(part.length, i + k + 1)
+              }
+              val view: IndexedSeq[Row] = new FrameView(part, i, hi)
+              var rel = 0
+              var m: Option[RowPattern.PatternMatch] = None
+              var searching = true
+              while (searching && rel < view.length) {
+                m = matcher.anchoredAtAllowEmpty(view, rel)
+                searching = m.isEmpty && seek
+                rel += 1
+              }
+              m match {
+                case Some(pm) if pm.end > pm.start =>
+                  val trace = pm.steps.reverse.toList // most-recent-first
+                  val out = Row.fromSeq(base ++
+                    compiled.map(_._2.eval(view, trace, pm.end - 1)))
+                  // mark skipped rows (absolute indices); a skip target
+                  // at or before the current row simply skips nothing —
+                  // window processing advances row by row, so the
+                  // MATCH_RECOGNIZE infinite-resume hazard cannot arise
+                  skipUntil = skip match {
+                    case RowPattern.SkipPastLastRow => i + pm.end
+                    case RowPattern.SkipToNextRow => i + 1
+                    case RowPattern.SkipToVar(vars, first, label) =>
+                      val hits = pm.steps.collect { case (v, j) if vars(v) => j }
+                      if (hits.isEmpty) throw new IllegalArgumentException(
+                        s"AFTER MATCH SKIP TO $label: variable mapped no rows in the match")
+                      i + (if (first) hits.min else hits.max)
+                  }
+                  out
+                case Some(pm) =>
+                  // EMPTY match: a successful match assigning no
+                  // variables — measures evaluate over an empty row
+                  // sequence (constants survive, column refs/navigation
+                  // NULL, COUNT 0); AFTER MATCH marks nothing
+                  Row.fromSeq(base ++ compiled.map(_._2.eval(view, Nil, -1)))
+                case None =>
+                  Row.fromSeq(base ++ compiled.map(_ => null))
               }
             }
           }
-        }.flatten
+        }
       }(Encoders.row(outSchema))
     // helper columns (rn pin, DEFINE booleans + variants) are internal
     annotated.drop((s"${prefix}rn" +: helperCols.toSeq): _*)

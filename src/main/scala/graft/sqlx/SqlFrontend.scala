@@ -136,10 +136,11 @@ private[graft] object SqlFrontend {
   /** One-level structural map over a window spec's child expressions. */
   private def mapWindow(w: WindowSpec, f: Expr => Expr): WindowSpec =
     w.copy(partitionBy = w.partitionBy.map(f),
-      orderBy = w.orderBy.map(s => SortItem(f(s.e), s.dir, s.nulls)))
+      orderBy = w.orderBy.map(s => SortItem(f(s.e), s.dir, s.nulls)),
+      rowPattern = w.rowPattern.map(_.mapExprs(f)))
 
   /** One-level structural map over expression children. */
-  private def mapChildren(e: Expr, f: Expr => Expr): Expr = e match {
+  private[sqlx] def mapChildren(e: Expr, f: Expr => Expr): Expr = e match {
     case Fn(n, args, d, over) =>
       Fn(n, args.map(f), d, over.map(mapWindow(_, f)))
     case FilterOver(agg, c, w) => FilterOver(f(agg), f(c), mapWindow(w, f))
@@ -193,7 +194,8 @@ private[graft] object SqlFrontend {
   private def rewriteRel(r: Rel): Rel = r match {
     case JoinRel(k, l, rr, on) => JoinRel(k, rewriteRel(l), rewriteRel(rr), on.map(rewriteExpr))
     case SubqueryRel(q, a, c) => SubqueryRel(rewriteQuery(q), a, c)
-    case MatchRel(input, block, a) => MatchRel(rewriteRel(input), block, a)
+    case MatchRel(input, block, a) =>
+      MatchRel(rewriteRel(input), block.mapExprs(rewriteExpr), a)
     case SampleRel(input, m, pct) => SampleRel(rewriteRel(input), m, rewriteExpr(pct))
     case tt: TimeTravelRel => tt
     case TvfRel(n, args, a, per) =>
@@ -261,21 +263,18 @@ private[graft] object SqlFrontend {
     val from = s.from.getOrElse(fail("the query block needs a FROM relation"))
     val (patterned, plain) = s.windows.partition(_._2.rowPattern.isDefined)
     val items = s.items.map { case SelectItem(e, alias) =>
-      def as(default: => String): String = renderAlias(alias.getOrElse(default))
-      planExpr(spark, dir, e) match {
-        case MeasureRef(m, w) => MatchWindowSql.Item(m, as(m), Some(m), Some(w))
-        case Fn(name, args, d, Some(WindowSpec(Nil, Nil, None, Some(w), None))) =>
-          MatchWindowSql.Item(renderExpr(Fn(name, args, d, None)), as(name), None, Some(w))
-        case other => MatchWindowSql.Item(renderExpr(other), as(other match {
-          case id: Id => id.parts.last._1
-          case _ => fail(s"alias the select item ${renderExpr(other)} with AS <name>")
-        }), None, None)
-      }
+      val planned = planExpr(spark, dir, e)
+      planned -> alias.getOrElse(planned match {
+        case MeasureRef(m, _) => m
+        case Fn(name, _, _, Some(WindowSpec(_, _, _, Some(_), _))) => name
+        case id: Id => id.parts.last._1
+        case other => fail(s"alias the select item ${renderExpr(other)} with AS <name>")
+      })
     }
     val mw = MatchWindowSql.plan(items,
       patterned.map { case (n, w) => (n, w.rowPattern.get) },
       plain.map { case (n, w) =>
-        n.toLowerCase -> renderWindow(mapWindow(w, planExpr(spark, dir, _)))
+        n.toLowerCase -> mapWindow(w, planExpr(spark, dir, _))
       }.toMap)
     val input = relationDf(spark, dir, planRel(spark, dir, from))
     val filtered = s.where.fold(input)(w => input.where(renderExpr(planExpr(spark, dir, w))))
@@ -346,12 +345,9 @@ private[graft] object SqlFrontend {
       JoinRel(k, planRel(spark, dir, l), planRel(spark, dir, rr),
         on.map(planExpr(spark, dir, _)))
     case SubqueryRel(q, a, c) => SubqueryRel(planQuery(spark, dir, q), a, c)
-    case MatchRel(input, blockRaw, alias) =>
+    case MatchRel(input, block, alias) =>
       val inputDf = relationDf(spark, dir, planRel(spark, dir, input))
-      val mr = MatchRecognizeSql
-        .parse(s"SELECT * FROM __mr_input MATCH_RECOGNIZE ($blockRaw)")
-        .getOrElse(throw new SqlParseException(s"malformed MATCH_RECOGNIZE block: $blockRaw"))
-      val df = MatchRecognizeSql.lowerDf(inputDf, mr)
+      val df = MatchRecognizeSql.lowerDf(inputDf, block)
       val view = s"__mr_view_${viewCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       TableRef(Id(Seq((view, false))), alias)

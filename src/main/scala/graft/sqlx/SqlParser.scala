@@ -16,13 +16,16 @@ package graft.sqlx
   * ZONE, FETCH FIRST … {ONLY|WITH TIES}) plus the statement family below.
   * This is the only SQL front door: a text outside it is a
   * SqlParseException, never a second parse. MATCH_RECOGNIZE blocks and
-  * row-pattern WINDOW specifications are captured as balanced raw spans and
-  * handed to MatchRecognizeSql's / MatchWindowSql's clause parsers — one
-  * owner for that sub-grammar; routine control bodies go to RoutineLang the
-  * same way. CREATE FUNCTION and WITH FUNCTION heads parse here, and `?`
-  * markers bind to the EXECUTE arguments as they are parsed.
+  * row-pattern WINDOW specifications parse into one [[SqlAst.RowPatternBlock]]
+  * whose MEASURES and DEFINE are ordinary expressions; only the PATTERN body
+  * stays a source span, for RowPattern's pattern parser. Routine control
+  * bodies are raw spans for RoutineLang. CREATE FUNCTION and WITH FUNCTION
+  * heads parse here, and `?` markers bind to the EXECUTE arguments as they
+  * are parsed.
   */
 object SqlAst {
+  import graft.plans.{MatchRecognize, RowPattern}
+
   sealed trait Expr
   /** Verbatim literal (number, string, TRUE/FALSE/NULL). */
   final case class Lit(sql: String) extends Expr
@@ -75,15 +78,36 @@ object SqlAst {
   final case class FieldRef(e: Expr, field: String) extends Expr
 
   /** Window specification; `ref` = a named window from the WINDOW clause
-    * (SqlBase.g4 #windowDefinition / windowReference). */
+    * (SqlBase.g4 #windowDefinition / windowReference); `rowPattern` = the
+    * block of a WINDOW specification with MEASURES … PATTERN … DEFINE
+    * (SqlBase.g4:876-880), which carries its own PARTITION BY / ORDER BY. */
   final case class WindowSpec(partitionBy: Seq[Expr], orderBy: Seq[SortItem],
       frameRaw: Option[String], ref: Option[String] = None,
-      rowPattern: Option[String] = None)
+      rowPattern: Option[RowPatternBlock] = None)
   /** `name OVER w`: a measure of row-pattern window `w` (SqlBase.g4
-    * primaryExpression #measure). `rowPattern` above holds the raw body of
-    * a WINDOW specification with MEASURES … PATTERN … DEFINE
-    * (SqlBase.g4:876-880); both are lowered by SqlFrontend's planning pass. */
+    * primaryExpression #measure), lowered by SqlFrontend's planning pass. */
   final case class MeasureRef(name: String, window: String) extends Expr
+
+  /** A row-pattern block: the body of MATCH_RECOGNIZE (SqlBase.g4
+    * patternRecognition :446) or of a row-pattern WINDOW specification
+    * (:876-880), which share the measure, variable and subset rules.
+    * PARTITION BY / ORDER BY are plain ascending column names (the
+    * documented subset). `pattern` is the PATTERN body's source span, for
+    * RowPattern.parse. Window-only: `frameK`, the frame end past the current
+    * row (None = UNBOUNDED FOLLOWING, Some(0) = CURRENT ROW), and `seek`. */
+  final case class RowPatternBlock(partitionBy: Seq[String], orderBy: Seq[String],
+      measures: Seq[MeasureDef], rowsPerMatch: MatchRecognize.RowsPerMatch,
+      skip: RowPattern.SkipMode, pattern: String,
+      subsets: Map[String, Seq[String]], defines: Seq[(String, Expr)],
+      frameK: Option[Int] = None, seek: Boolean = false) {
+    def allRows: Boolean = rowsPerMatch != MatchRecognize.OneRow
+    def mapExprs(f: Expr => Expr): RowPatternBlock = copy(
+      measures = measures.map(m => m.copy(e = f(m.e))),
+      defines = defines.map { case (sym, e) => (sym, f(e)) })
+  }
+  /** `[RUNNING | FINAL] expr AS alias`; `mode` None = the output mode's
+    * default (RUNNING for ALL ROWS PER MATCH, FINAL otherwise). */
+  final case class MeasureDef(e: Expr, alias: String, mode: Option[String] = None)
   /** Table-function arguments (SqlBase.g4 tableArgument /
     * descriptorArgument): `TABLE(t)` and `DESCRIPTOR(a, b)`. */
   final case class TableArg(rel: Rel) extends Expr
@@ -103,8 +127,8 @@ object SqlAst {
     * functions for the lake TVFs). */
   final case class TvfRel(name: String, args: Seq[(Option[String], Expr)],
       alias: Option[String], period: Option[(String, Expr)] = None) extends Rel
-  /** MATCH_RECOGNIZE over any input; `blockRaw` is the balanced-paren body. */
-  final case class MatchRel(input: Rel, blockRaw: String, alias: Option[String]) extends Rel
+  /** MATCH_RECOGNIZE over any input. */
+  final case class MatchRel(input: Rel, block: RowPatternBlock, alias: Option[String]) extends Rel
   /** TABLESAMPLE BERNOULLI/SYSTEM (percentage) over a relation. */
   final case class SampleRel(input: Rel, method: String, percent: Expr) extends Rel
   /** FOR VERSION|TIMESTAMP AS OF over a table (SqlBase.g4 queryPeriod). */
@@ -1274,9 +1298,8 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
     val where = if (accept("WHERE")) Some(parseExpr()) else None
     val groupBy = if (acceptSeq("GROUP", "BY")) Some(parseGroupBy()) else None
     val having = if (accept("HAVING")) Some(parseExpr()) else None
-    // WINDOW name AS (spec), … (SqlBase.g4 #windowDefinition); a
-    // row-pattern spec (MEASURES/PATTERN/DEFINE, SqlBase.g4:876-880) is
-    // kept as its raw body for MatchWindowSql's clause parser
+    // WINDOW name AS (spec), … (SqlBase.g4 #windowDefinition), plain or
+    // row-pattern (MEASURES/PATTERN/DEFINE, SqlBase.g4:876-880)
     val windows = scala.collection.mutable.ArrayBuffer[(String, WindowSpec)]()
     if (accept("WINDOW")) {
       var moreW = true
@@ -1284,7 +1307,8 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
         val n = ident("window name")
         expectKw("AS")
         windows += ((n,
-          if (rowPatternAhead) WindowSpec(Nil, Nil, None, rowPattern = Some(rawRowPatternBlock()))
+          if (rowPatternAhead)
+            WindowSpec(Nil, Nil, None, rowPattern = Some(parseRowPatternBlock(window = true)))
           else parseWindowSpec()))
         moreW = acceptOp(",")
       }
@@ -1485,10 +1509,8 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
           TimeTravelRel(Id(parts.toSeq), kind, parsePrimary(), relAlias())
         } else TableRef(Id(parts.toSeq), relAlias())
       }
-    if (peek.is("MATCH_RECOGNIZE")) {
-      p += 1
-      val blockRaw = rawRowPatternBlock()
-      MatchRel(base, blockRaw, relAlias())
+    if (accept("MATCH_RECOGNIZE")) {
+      MatchRel(base, parseRowPatternBlock(window = false), relAlias())
     } else if (peek.is("TABLESAMPLE")) {
       // TABLESAMPLE BERNOULLI|SYSTEM (percentage) — SqlBase.g4 sampleType
       p += 1
@@ -1557,39 +1579,121 @@ final class SqlParser(src: String, args: Option[Seq[SqlAst.Expr]] = None) {
     false
   }
 
-  /** Raw source span of a row-pattern block (MATCH_RECOGNIZE, or a WINDOW
-    * spec with PATTERN) starting at the next '('. A `?` inside the PATTERN
-    * clause's parentheses is a quantifier (`A?`, `A+?`); anywhere else
-    * (DEFINE, MEASURES) it is a parameter marker and binds to the next
-    * EXECUTE argument in Spark's rendering, like a window frame's (an
-    * unbound one renders as NULL, for DESCRIBE INPUT/OUTPUT). */
-  private def rawRowPatternBlock(): String = {
-    if (!peek.isOp("(")) err("expected '('")
-    val out = new java.lang.StringBuilder
-    var spanStart = peek.pos + 1
-    var depth = 0
-    var patternDepth = 0 // depth of the open PATTERN (...) group; 0 outside it
-    while (true) {
-      val t = peek
-      if (t.kind == TEof) err("unbalanced parentheses")
-      if (t.isOp("(")) {
-        depth += 1
-        p += 1
-      } else if (t.isOp(")")) {
-        if (depth == patternDepth) patternDepth = 0
-        depth -= 1
-        p += 1
-        if (depth == 0) return out.append(src, spanStart, t.pos).toString
-      } else if (depth == 1 && t.is("PATTERN") && peek2.isOp("(")) {
-        patternDepth = 2
-        p += 1
-      } else if (t.isOp("?") && patternDepth == 0) {
-        out.append(src, spanStart, t.pos)
-          .append(parameter().map(SqlFrontend.renderExpr).getOrElse("NULL"))
-        spanStart = t.pos + t.text.length
-      } else p += 1
+  /** Row-pattern block from its '(' to the matching ')', clauses in the
+    * reference order: PARTITION BY, ORDER BY, MEASURES, then ROWS PER MATCH
+    * (MATCH_RECOGNIZE) or the frame (window), AFTER MATCH, INITIAL | SEEK
+    * (window), PATTERN, SUBSET, DEFINE. MEASURES and DEFINE are ordinary
+    * expressions, so a `?` there is a parameter marker; the PATTERN body is
+    * kept as its source span, so a `?` there is a quantifier. */
+  private def parseRowPatternBlock(window: Boolean): RowPatternBlock = {
+    import graft.plans.MatchRecognize._
+    import graft.plans.RowPattern.{SkipPastLastRow, SkipToNextRow, SkipToVar}
+    def fail(m: String): Nothing =
+      err(s"${if (window) "row-pattern window" else "MATCH_RECOGNIZE"}: $m")
+    def commaList[T](item: => T): Seq[T] = {
+      val xs = scala.collection.mutable.ArrayBuffer[T](item)
+      while (acceptOp(",")) xs += item
+      xs.toSeq
     }
-    err("unbalanced parentheses")
+    def columns(clause: String): Seq[String] = {
+      if (!acceptSeq(clause.split(' ').toSeq: _*)) fail(s"expected $clause <cols>")
+      commaList {
+        val start = peek.pos
+        parseSortItem() match {
+          case SortItem(Id(Seq((c, _))), None | Some("ASC"), None) => c
+          case _ => fail(s"$clause supports plain ascending column names, got '" +
+            src.substring(start, peek.pos).trim + "'")
+        }
+      }
+    }
+    expectOp("(")
+    val partitionBy = columns("PARTITION BY")
+    val orderBy = columns("ORDER BY")
+    val measures = if (!accept("MEASURES")) Nil else commaList {
+      // RUNNING / FINAL prefix the measure only before an operand, so both
+      // stay usable as column names
+      val mode =
+        if ((peek.is("RUNNING") || peek.is("FINAL")) && (peek2.kind == TQIdent ||
+            peek2.kind == TIdent && !reserved(peek2.text.toUpperCase)))
+          Some(next().text.toUpperCase)
+        else None
+      val e = parseExpr()
+      expectKw("AS")
+      MeasureDef(e, ident("measure name"), mode)
+    }
+    // ROWS PER MATCH + emptyMatchHandling (SqlBase.g4:467-476)
+    val rowsPerMatch =
+      if (window || acceptSeq("ONE", "ROW", "PER", "MATCH")) OneRow
+      else if (!acceptSeq("ALL", "ROWS", "PER", "MATCH")) OneRow
+      else if (acceptSeq("OMIT", "EMPTY", "MATCHES")) AllOmitEmpty
+      else if (acceptSeq("WITH", "UNMATCHED", "ROWS")) AllWithUnmatched
+      else if (acceptSeq("SHOW", "EMPTY", "MATCHES") ||
+          !(peek.is("SHOW") || peek.is("OMIT") || peek.is("WITH"))) AllShowEmpty
+      else fail("ALL ROWS PER MATCH modifier: expected SHOW EMPTY MATCHES | " +
+        "OMIT EMPTY MATCHES | WITH UNMATCHED ROWS")
+    // frame extent (SqlBase.g4:879): the start is CURRENT ROW, the end
+    // bounds the match search space
+    val frameK: Option[Int] =
+      if (!window || !peek.is("ROWS")) None
+      else {
+        def bad(): Nothing = fail("frame must be ROWS BETWEEN CURRENT ROW AND " +
+          "{CURRENT ROW | <n> FOLLOWING | UNBOUNDED FOLLOWING}")
+        if (!acceptSeq("ROWS", "BETWEEN", "CURRENT", "ROW", "AND")) bad()
+        if (acceptSeq("CURRENT", "ROW")) Some(0)
+        else if (acceptSeq("UNBOUNDED", "FOLLOWING")) None
+        else if (peek.kind == TNum || peek.isOp("?")) {
+          val k = rowCount("frame")
+          if (!accept("FOLLOWING")) bad()
+          Some(k.toInt)
+        } else bad()
+      }
+    // AFTER MATCH skipTo (SqlBase.g4:462), resolved once SUBSET is known;
+    // bare SKIP TO <v> is the standard's alias for SKIP TO LAST <v>
+    val skip: Map[String, Seq[String]] => graft.plans.RowPattern.SkipMode =
+      if (!acceptSeq("AFTER", "MATCH") || acceptSeq("SKIP", "PAST", "LAST", "ROW"))
+        _ => SkipPastLastRow
+      else if (acceptSeq("SKIP", "TO", "NEXT", "ROW")) _ => SkipToNextRow
+      else if (acceptSeq("SKIP", "TO")) {
+        val first = accept("FIRST")
+        if (!first) accept("LAST")
+        val v = ident("pattern variable")
+        subsets => SkipToVar(subsets.getOrElse(v, Seq(v)).toSet, first,
+          s"${if (first) "FIRST" else "LAST"} $v")
+      } else fail("AFTER MATCH: expected SKIP PAST LAST ROW | SKIP TO NEXT ROW | " +
+        "SKIP TO [FIRST | LAST] <variable>")
+    val seek = window && (accept("SEEK") || { accept("INITIAL"); false })
+    if (!accept("PATTERN")) fail("expected PATTERN (...)")
+    if (!peek.isOp("(")) fail("PATTERN must be parenthesized")
+    val patternStart = next().pos + 1
+    var depth = 1
+    while (depth > 0) {
+      if (peek.kind == TEof) fail("unbalanced PATTERN parentheses")
+      if (peek.isOp("(")) depth += 1 else if (peek.isOp(")")) depth -= 1
+      p += 1
+    }
+    val pattern = src.substring(patternStart, tokens(p - 1).pos)
+    def subsetClause(): Map[String, Seq[String]] =
+      if (!accept("SUBSET")) Map.empty else commaList {
+        val name = ident("SUBSET name")
+        expectOp("="); expectOp("(")
+        val members = commaList(ident("pattern variable"))
+        expectOp(")")
+        name -> members
+      }.toMap
+    val subsetsFirst = subsetClause()
+    if (!accept("DEFINE")) fail("expected DEFINE")
+    val defines = commaList {
+      val sym = ident("pattern variable")
+      expectKw("AS")
+      (sym, parseExpr())
+    }
+    // SUBSET is also accepted after DEFINE
+    val subsets = if (subsetsFirst.nonEmpty) subsetsFirst else subsetClause()
+    if (!acceptOp(")")) fail("expected ')' (clause order: PARTITION BY, ORDER BY, " +
+      "MEASURES, " + (if (window) "ROWS BETWEEN …, AFTER MATCH, INITIAL | SEEK"
+        else "ROWS PER MATCH, AFTER MATCH") + ", PATTERN, SUBSET, DEFINE)")
+    RowPatternBlock(partitionBy, orderBy, measures, rowsPerMatch, skip(subsets),
+      pattern, subsets, defines, frameK, seek)
   }
 
   // ------------------------------------------------------------ expressions

@@ -83,14 +83,20 @@ class DialectSpec extends SparkSpec {
     assert(out.toSeq == Seq((2L, 1L, "D"), (3L, 1L, "D"), (4L, 1L, "U"), (5L, 1L, "U")))
   }
 
-  test("match recognize rejects a non-bigint partition key with a clear error") {
+  test("match recognize keys on any partition column type; a NULL key is its own partition") {
     import spark.implicits._
-    val df = Seq(("a", 1L, 1.0)).toDF("k", "ord", "v")
-    val e = intercept[IllegalArgumentException] {
-      graft.plans.MatchRecognize.allRowsPerMatch(
-        df, "k", "ord", "A", Map.empty, Seq("ord"))
-    }
-    assert(e.getMessage.contains("must be BIGINT"))
+    import org.apache.spark.sql.Row
+    val df = Seq[(String, Long, Double)](("a", 1L, 5.0), ("a", 2L, 3.0),
+        (null, 1L, 4.0), (null, 2L, 2.0), ("b", 1L, 1.0))
+      .toDF("k", "ord", "v")
+    val down: graft.plans.RowPattern.Predicate =
+      (p: IndexedSeq[Row], i: Int) => i > 0 && p(i).getDouble(2) < p(i - 1).getDouble(2)
+    val out = graft.plans.MatchRecognize.allRowsPerMatch(
+        df, "k", "ord", "A D", Map("D" -> down), Seq("ord"))
+      .collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getString(3)))
+      .sortBy(t => (t._1.getOrElse(""), t._2)).toSeq
+    assert(out == Seq((None, 1L, "A"), (None, 2L, "D"),
+      (Some("a"), 1L, "A"), (Some("a"), 2L, "D")))
   }
 
   test("annotateMatches handles multi-column string+long keys") {
@@ -113,7 +119,8 @@ class DialectSpec extends SparkSpec {
   }
 
   test("MATCH_RECOGNIZE SQL parser: multi-col clauses, RUNNING/FINAL measures") {
-    val mr = graft.sqlx.MatchRecognizeSql.parse(
+    import graft.sqlx.SqlAst._
+    val q = new graft.sqlx.SqlParser(
       """SELECT * FROM events MATCH_RECOGNIZE (
            PARTITION BY user_id, event_type
            ORDER BY ts, event_id
@@ -122,12 +129,22 @@ class DialectSpec extends SparkSpec {
            AFTER MATCH SKIP TO NEXT ROW
            PATTERN (S+)
            DEFINE S AS value > PREV(value) * 1.02 OR value < 5.0
-         )""").get
+         )""").parseQuery()
+    val mr = q match {
+      case Select(_, _, Some(MatchRel(_, block, None)), _, _, _, _, _, _, _, _) => block
+      case other => fail(s"expected a MATCH_RECOGNIZE relation, got $other")
+    }
+    def id(parts: String*) = Id(parts.map(_ -> false))
     assert(mr.partitionBy == Seq("user_id", "event_type"))
     assert(mr.orderBy == Seq("ts", "event_id"))
-    assert(mr.measures == Seq(("RUNNING count(*)", "c"), ("FINAL max(S.value)", "m")))
+    assert(mr.measures == Seq(
+      MeasureDef(Fn("count", Seq(Star(None)), distinct = false, None), "c", Some("RUNNING")),
+      MeasureDef(Fn("max", Seq(id("S", "value")), distinct = false, None), "m", Some("FINAL"))))
     assert(mr.allRows && mr.skip == graft.plans.RowPattern.SkipToNextRow)
-    assert(mr.defines == Seq(("S", "value > PREV(value) * 1.02 OR value < 5.0")))
+    assert(mr.pattern == "S+")
+    assert(mr.defines == Seq(("S", Bin("OR",
+      Bin(">", id("value"), Bin("*", Fn("PREV", Seq(id("value")), distinct = false, None), Lit("1.02"))),
+      Bin("<", id("value"), Lit("5.0"))))))
   }
 
   test("PERMUTE expands to lexicographically-preferred orderings") {

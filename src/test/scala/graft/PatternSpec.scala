@@ -316,18 +316,46 @@ class PatternSpec extends SparkSpec {
              PATTERN (D) DEFINE D AS value > 0),
            w2 AS (PARTITION BY user_id ORDER BY event_id)""")
     }
-    // a paren inside a quoted literal no longer miscounts the window-block
-    // splitter's depth
+    // a paren inside a quoted literal is part of the DEFINE expression's
+    // string literal
     val quoted = new graft.sqlx.SqlParser(
       """SELECT m OVER w1 AS m FROM t WINDOW
          w1 AS (PARTITION BY k ORDER BY o MEASURES COUNT(D.*) AS m
            PATTERN (D) DEFINE D AS v <> '(')""").parseQuery()
     quoted match {
       case s: graft.sqlx.SqlAst.Select =>
-        assert(s.windows.flatMap(_._2.rowPattern)
-          .map(_.trim.endsWith("DEFINE D AS v <> '('")) == Seq(true))
+        import graft.sqlx.SqlAst.{Bin, Id, Lit}
+        assert(s.windows.flatMap(_._2.rowPattern).map(_.defines) ==
+          Seq(Seq(("D", Bin("<>", Id(Seq(("v", false))), Lit("'('"))))))
       case other => fail(s"expected a SELECT, got $other")
     }
+  }
+
+  test("row-pattern DEFINE and MEASURES are expressions: literals, renamed functions, TRY") {
+    import spark.implicits._
+    Seq((1L, 1L, "a"), (1L, 2L, "B.x"), (1L, 3L, "c")).toDF("k", "o", "tag")
+      .createOrReplaceTempView("pv_t")
+    def mr(measures: String, define: String): Seq[Seq[Any]] =
+      graft.sqlx.SqlFrontend.run(spark, sfDir,
+        s"""SELECT * FROM pv_t MATCH_RECOGNIZE (PARTITION BY k ORDER BY o
+            MEASURES $measures ONE ROW PER MATCH
+            PATTERN (A B) DEFINE $define)""")
+        .collect().toSeq.map(_.toSeq.drop(1))
+    val ends = "FIRST(A.o) AS s, LAST(B.o) AS e"
+    // a qualified name inside a string literal is text, not a reference
+    assert(mr(ends, "B AS tag = 'B.x'") == Seq(Seq(1L, 2L)))
+    assert(mr(ends, "B AS tag <> 'A.x' AND COUNT(B.*) <= 1") == Seq(Seq(1L, 2L)))
+    assert(mr("concat('A.v', '!') AS v", "B AS tag = 'B.x'") == Seq(Seq("A.v!")))
+    // dialect rewrites reach DEFINE and MEASURES like any other expression
+    assert(mr(ends, "B AS strpos(tag, '.') > 0") == Seq(Seq(1L, 2L)))
+    assert(mr("codepoint(FIRST(A.tag)) AS cp", "B AS tag = 'B.x'") == Seq(Seq(97)))
+    assert(mr(ends, "B AS TRY(1 / (o - 2)) IS NULL") == Seq(Seq(1L, 2L)))
+    val w = graft.sqlx.SqlFrontend.run(spark, sfDir,
+      """SELECT o, m OVER w AS m FROM pv_t WINDOW w AS (
+           PARTITION BY k ORDER BY o MEASURES LAST(B.o) AS m
+           PATTERN (A B) DEFINE B AS tag = 'B.x')""")
+      .orderBy("o").collect().map(r => if (r.isNullAt(1)) None else Some(r.getLong(1)))
+    assert(w.toSeq == Seq(Some(2L), None, None))
   }
 
   test("row-pattern window spec: CLASSIFIER and multi-symbol measures") {

@@ -76,7 +76,8 @@ class SqlParserSpec extends SparkSpec {
            DEFINE D AS value < PREV(value), E AS value > 0)""").parseQuery() match {
       case s: SqlAst.Select => s.from match {
         case Some(SqlAst.MatchRel(SqlAst.TableRef(_, None), block, None)) =>
-          assert(block.contains("PATTERN (^ (D | E){2,3}? $)"), block)
+          assert(block.pattern == "^ (D | E){2,3}? $", block)
+          assert(block.defines.map(_._1) == Seq("D", "E"), block)
         case other => fail(s"expected a MATCH_RECOGNIZE relation, got $other")
       }
       case other => fail(s"unexpected parse: $other")
@@ -95,7 +96,8 @@ class SqlParserSpec extends SparkSpec {
         assert(s.items(1) == SqlAst.SelectItem(SqlAst.MeasureRef("nd", "w"), Some("n_down")))
         val Seq((w, pattern), (p, plain)) = s.windows
         assert(w == "w" && p == "p")
-        assert(pattern.rowPattern.exists(_.contains("PATTERN (A D+)")), pattern)
+        assert(pattern.rowPattern.map(_.pattern).contains("A D+"), pattern)
+        assert(pattern.rowPattern.map(_.measures.map(_.alias)).contains(Seq("nd")), pattern)
         assert(plain.rowPattern.isEmpty && plain.partitionBy.nonEmpty, plain)
       case other => fail(s"unexpected parse: $other")
     }
