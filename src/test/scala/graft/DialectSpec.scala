@@ -83,7 +83,7 @@ class DialectSpec extends SparkSpec {
     assert(out.toSeq == Seq((2L, 1L, "D"), (3L, 1L, "D"), (4L, 1L, "U"), (5L, 1L, "U")))
   }
 
-  test("match recognize keys on any partition column type; a NULL key is its own partition") {
+  test("match recognize partitions on any key type; a NULL key is its own partition") {
     import spark.implicits._
     import org.apache.spark.sql.Row
     val df = Seq[(String, Long, Double)](("a", 1L, 5.0), ("a", 2L, 3.0),
